@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ArrayType(FloatType)): brute-force cosine top-k as the exact
@@ -399,12 +401,21 @@ object Similarity {
     } else rebuildStats(spark, path)
   }
 
-  /** (bucket → n_vectors) of an existing `_stats` manifest, read with
-    * the parquet-hadoop Group reader on the driver — the read twin of
-    * [[writeStats]]'s driver-side writer, O(buckets) rows, no job. */
+  /** (bucket → n_vectors) of an existing `_stats` manifest — the read
+    * twin of [[writeStats]]'s driver-side writer, O(buckets) rows. */
   private def readStatsDriver(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Map[Long, Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$StatsName")
+                              path: String): Map[Long, Long] =
+    readParquetDriver(spark, s"$path/$StatsName")(g =>
+      g.getLong("bucket", 0) -> g.getLong("n_vectors", 0)).toMap
+
+  /** Every row of a small parquet directory this library wrote itself
+    * (the `_stats` manifest, the graph index's `_seeds`), read with the
+    * parquet-hadoop Group reader on the driver: no Spark job, no schema
+    * inference. `row` maps one record. */
+  private def readParquetDriver[T](spark: org.apache.spark.sql.SparkSession,
+                                   path: String)(
+      row: org.apache.parquet.example.data.Group => T): Seq[T] = {
+    val dir = new org.apache.hadoop.fs.Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = dir.getFileSystem(conf)
     fs.listStatus(dir).toSeq
@@ -418,10 +429,9 @@ object Similarity {
             st.getPath)
           .withConf(conf).build()
         try Iterator.continually(rdr.read()).takeWhile(_ != null)
-          .map(g => g.getLong("bucket", 0) -> g.getLong("n_vectors", 0))
-          .toList
+          .map(row).toList
         finally rdr.close()
-      }.toMap
+      }
   }
 
   /** One ingest batch of the STREAMING index-maintenance path
@@ -1350,8 +1360,8 @@ object Similarity {
     * ONCE, partitioned by the source node's LSH bucket, with the
     * [[bucketSeeds]] entry points as an underscore sidecar. Beam
     * search then expands each round's frontier by reading ONLY the
-    * frontier nodes' bucket directories (broadcast join on the
-    * partition column → dynamic partition pruning, PlanSpec-gated) —
+    * frontier nodes' bucket directories (a partition filter on the
+    * frontier's buckets, PlanSpec-gated) —
     * at 100 TB the graph build's Σ bucket² self-join is paid at index
     * time, and each query round touches O(frontier) partitions, never
     * the full adjacency. */
@@ -1387,11 +1397,35 @@ object Similarity {
 
   /** [[beamSearchTopK]] against a [[writeGraphIndex]] layout: same
     * rounds, same pinned tiebreaks, same results (ann14b shares
-    * ann14's oracle; SimilaritySpec pins stored ≡ in-flight), but each
-    * round's neighbor expansion joins the broadcast frontier against
-    * the STORED adjacency on (bucket, vec_id) — the partition-column
-    * key DPP-prunes the scan to the frontier's buckets. Scoring stays
-    * the exact-cosine corpus probe of the in-flight form. */
+    * ann14's oracle; SimilaritySpec pins stored ≡ in-flight).
+    *
+    * The beam lives on the DRIVER as plain rows — per round it is
+    * queries × beamWidth rows, which the in-flight plan broadcasts
+    * anyway. One call opens the stored adjacency once (a schema job,
+    * plus a listing job when the bucket directories outnumber Spark's
+    * parallel-discovery threshold), collects the query batch once and
+    * reads the `_seeds` sidecar driver-side (no job). The seeds are
+    * scored, then each round runs two small collects:
+    *  1. the expansion ([[storedFrontierExpansion]]): the frontier —
+    *     each beam vector with its LSH bucket — broadcast against the
+    *     adjacency on (bucket, vec_id), the scan filtered to the
+    *     frontier's bucket directories;
+    *  2. the exact-cosine score of the distinct beam ∪ neighbour
+    *     candidates: a broadcast probe of the column-pruned corpus
+    *     that also returns each candidate's bucket, the next round's
+    *     frontier key.
+    * Each collect is a broadcast job plus a scan job: four jobs per
+    * round, at most 5 + 4·rounds per call. Ranking runs on the driver in
+    * Spark's order — `cos_sim` descending with NaN highest, -0.0 =
+    * 0.0 and nulls last, then `vec_id` ascending — and the answer is a
+    * local relation (query_id, vec_id, cos_sim, rk).
+    *
+    * Driver memory: per query the k best rows visited so far, plus one
+    * round's candidates (queries × (beamWidth + beamWidth·degree)
+    * rows, each with its query's embedding) and their scores — the
+    * rows the staged plan used to broadcast. Nothing is cached, so a
+    * call leaves no blocks behind. Query ids and corpus vec_ids must be
+    * unique (the graph build's contract); both come back as long. */
   def beamSearchTopKStored(spark: org.apache.spark.sql.SparkSession,
                            path: String, corpus: DataFrame,
                            queries: DataFrame, k: Int, beamWidth: Int,
@@ -1401,53 +1435,90 @@ object Similarity {
       s"bad beam params k=$k beamWidth=$beamWidth rounds=$rounds")
     val stored = spark.read.parquet(path)
     val bucketType = stored.schema("bucket").dataType
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val corp = corpus.select(col("vec_id"), col("embedding"))
-    def score(cands: DataFrame): DataFrame =
-      broadcast(cands).join(corp, Seq("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
+    val q = queries.filter(col("vec_id").isNotNull)
+      .select(col("vec_id").cast("long").as("query_id"), col("embedding").as("q_emb"))
+    val qEmb = q.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    val candSchema = StructType(Seq(StructField("query_id", LongType),
+      StructField("vec_id", LongType), q.schema("q_emb")))
+    val corp = corpus.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+    def score(pairs: Seq[(Long, Long)]): Seq[BeamRow] =
+      if (pairs.isEmpty) Nil
+      else broadcast(spark.createDataFrame(pairs.map { case (qid, vid) =>
+          Row(qid, vid, qEmb(qid)) }.asJava, candSchema))
+        .join(corp, Seq("vec_id"))
         .select(col("query_id"), col("vec_id"),
-          round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    def top(scored: DataFrame, n: Int): DataFrame =
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= n)
-    val seeds = spark.read.parquet(s"$path/_seeds")
-    val s0 = NearDup.stage(score(
-      q.select(col("query_id")).crossJoin(broadcast(seeds.select(col("vec_id"))))))
-    var beam = top(s0, beamWidth).select("query_id", "vec_id")
-    var visited = s0
+          round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"),
+          lshBucket(col("embedding"), numPlanes, dim).cast(bucketType).as("bucket"))
+        .collect().toSeq.map(r => BeamRow(r.getLong(0), r.getLong(1),
+          if (r.isNullAt(2)) None else Some(r.getDouble(2)), r.get(3)))
+    def top(rows: Iterable[BeamRow], n: Int): Map[Long, Seq[BeamRow]] =
+      rows.groupBy(_.queryId).map { case (qid, rs) => qid -> rs.toSeq.sorted(BeamOrder).take(n) }
+    val seeds = readParquetDriver(spark, s"$path/_seeds")(_.getLong("vec_id", 0))
+    val s0 = score(for (qid <- qEmb.keys.toSeq; s <- seeds) yield (qid, s))
+    var best = top(s0, k)
+    var beam = top(s0, beamWidth).values.flatten.toSeq
     for (_ <- 1 to rounds) {
-      // frontier buckets from the corpus embeddings (tiny broadcast
-      // side, partition-typed key so the DPP subquery needs no cast)
-      val frontier = broadcast(beam).join(corp, Seq("vec_id"))
-        .select(col("query_id"), col("vec_id"),
-          lshBucket(col("embedding"), numPlanes, dim).cast(bucketType)
-            .as("bucket"))
-      val expand = graphFrontierExpansion(spark, path, frontier)
-      val scored = NearDup.stage(score(beam.union(expand).distinct()))
-      // one final distinct instead of per-round chained distincts —
-      // see [[beamSearchTopK]]'s round-19 note
-      visited = visited.union(scored)
-      beam = top(scored, beamWidth).select("query_id", "vec_id")
+      val expand = if (beam.isEmpty) Nil
+        else storedFrontierExpansion(stored, beam.map(b => (b.queryId, b.vecId, b.bucket)))
+          .collect().toSeq.map(r => (r.getLong(0), r.getLong(1)))
+      val scored = score((beam.map(b => (b.queryId, b.vecId)) ++ expand).distinct)
+      best = top((best.values.flatten ++ scored).toSeq.distinctBy(b => (b.queryId, b.vecId)), k)
+      beam = top(scored, beamWidth).values.flatten.toSeq
     }
-    top(visited.distinct(), k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"),
-        col("rk").cast("long").as("rk"))
+    val out = best.toSeq.sortBy(_._1).flatMap { case (_, rs) =>
+      rs.zipWithIndex.map { case (b, i) =>
+        Row(b.queryId, b.vecId, b.cos.map(Double.box).orNull, i + 1L) } }
+    spark.createDataFrame(out.asJava, StructType(Seq(
+      StructField("query_id", LongType), StructField("vec_id", LongType),
+      StructField("cos_sim", DoubleType), StructField("rk", LongType))))
+  }
+
+  /** One scored candidate of [[beamSearchTopKStored]]'s driver-side
+    * beam; `cos` is None where Spark's cosine is null, and `bucket` is
+    * the vector's LSH bucket in the stored partition-column type. */
+  private final case class BeamRow(queryId: Long, vecId: Long,
+                                   cos: Option[Double], bucket: Any)
+
+  /** Spark's `cos_sim DESC NULLS LAST, vec_id ASC` on the driver. The
+    * double comparison is Spark's (SQLOrderingUtil.compareDoubles):
+    * NaN above every number, -0.0 equal to 0.0. */
+  private val BeamOrder: Ordering[BeamRow] = (a, b) => {
+    val c = (a.cos, b.cos) match {
+      case (Some(x), Some(y)) => if (x == y) 0 else java.lang.Double.compare(y, x)
+      case (x, y)             => java.lang.Boolean.compare(x.isEmpty, y.isEmpty)
+    }
+    if (c != 0) c else java.lang.Long.compare(a.vecId, b.vecId)
   }
 
   /** One beam round's neighbor expansion against the stored adjacency:
     * broadcast frontier (query_id, vec_id, bucket — bucket already in
     * the partition-column type) joined on (bucket, vec_id), so the
     * bucket equi-pair DPP-prunes the scan to the frontier's bucket
-    * directories. Factored out of [[beamSearchTopKStored]]'s round
-    * loop because the loop's per-round staging (eager checkpoint)
-    * hides the adjacency scans from the FINAL plan — the PlanSpec DPP
-    * gate inspects this building block directly. */
+    * directories. [[beamSearchTopKStored]] collects each round's
+    * expansion, so its answer (a local relation) shows no scan — the
+    * PlanSpec pruning gates inspect this building block directly. */
+  def graphFrontierExpansion(stored: DataFrame, frontier: DataFrame): DataFrame =
+    stored.join(broadcast(frontier), Seq("bucket", "vec_id"))
+      .select(col("query_id"), col("nbr_id").as("vec_id"))
+
+  /** [[graphFrontierExpansion]] over the adjacency stored at `path`. */
   def graphFrontierExpansion(spark: org.apache.spark.sql.SparkSession,
                              path: String, frontier: DataFrame): DataFrame =
-    spark.read.parquet(path).join(broadcast(frontier), Seq("bucket", "vec_id"))
-      .select(col("query_id"), col("nbr_id").as("vec_id"))
+    graphFrontierExpansion(spark.read.parquet(path), frontier)
+
+  /** One round's expansion exactly as [[beamSearchTopKStored]] builds
+    * it: the driver-side frontier rows (query_id, vec_id, bucket in the
+    * partition-column type) as a local relation against the opened
+    * adjacency `stored`. A local relation has no filter for DPP to
+    * key on, so the frontier's buckets prune the scan statically. */
+  private[graft] def storedFrontierExpansion(stored: DataFrame,
+                                             frontier: Seq[(Long, Long, Any)]): DataFrame =
+    graphFrontierExpansion(
+      stored.filter(col("bucket").isin(frontier.map(_._3).distinct: _*)),
+      stored.sparkSession.createDataFrame(frontier.map(Row.fromTuple).asJava,
+        StructType(Seq(StructField("query_id", LongType),
+          StructField("vec_id", LongType),
+          StructField("bucket", stored.schema("bucket").dataType)))))
 
   /** Entry points for [[beamSearchTopK]] over a bucket-blocked graph:
     * the min-id vector of every (capped) LSH bucket — one deterministic

@@ -1367,10 +1367,11 @@ SELECT vec_id, nbr_id, cos_sim, rk FROM edges""")),
     // The STORED form of ann14 (round-17 verdict item 7 — the ann03b
     // treatment for graph-ANN): the kNN adjacency is built ONCE and
     // written partitioned by the source node's LSH bucket (+ a _seeds
-    // sidecar); each beam round's expansion joins the broadcast
-    // frontier on (bucket, vec_id), so the scan DPP-prunes to the
-    // frontier's bucket directories (PlanSpec-gated) instead of
-    // rebuilding or rescanning the whole graph. SAME oracle as ann14 —
+    // sidecar). The beam stays on the driver: each round's expansion
+    // joins the frontier rows on (bucket, vec_id) with the scan pruned
+    // to the frontier's bucket directories (PlanSpec-gated), and one
+    // small collect scores the candidates — four Spark jobs per round,
+    // no rebuild or rescan of the whole graph. SAME oracle as ann14 —
     // the layout is an execution detail, not a semantic one.
     Q("ann14b_graph_beam_stored",
       (s, d) => {

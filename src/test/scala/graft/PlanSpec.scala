@@ -101,9 +101,9 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ann14b stored-graph frontier expansion DPP-prunes to the frontier buckets") {
-    // The round loop stages each expansion eagerly (the checkpoint
-    // hides the scans from the final plan), so the gate targets the
-    // expansion building block the loop calls each round.
+    // The round loop collects each expansion to the driver (its answer
+    // is a local relation with no scans), so the gate targets the
+    // expansion building block with a filtered, DPP-eligible frontier.
     import graft.operators.Similarity
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val path = java.nio.file.Files.createTempDirectory("graft_gidx_plan")
@@ -122,6 +122,38 @@ class PlanSpec extends SparkSpec {
     assert(pf.nonEmpty, s"stored adjacency must scan with a bucket partition filter:\n$plan")
     assert(pf.exists(_.toLowerCase.contains("dynamicpruning")),
       s"the frontier join must dynamically prune the adjacency scan: $pf")
+    graft.Scratch.delete(path)
+  }
+
+  test("ann14b beam round's driver-side expansion scans only the frontier buckets") {
+    // One round's expansion as beamSearchTopKStored builds it: the
+    // frontier is a driver-side local relation, so the bucket filter
+    // must be on the scan itself and must skip the other buckets' files.
+    import graft.operators.Similarity
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val path = java.nio.file.Files.createTempDirectory("graft_gidx_round")
+      .toFile.getAbsolutePath
+    Similarity.writeGraphIndex(emb, path, 5, maxBucketSize = Some(200))
+    val stored = spark.read.parquet(path)
+    val frontier = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id"), Similarity.lshBucket(col("embedding"), 8, 64)
+        .cast(stored.schema("bucket").dataType))
+      .collect().toSeq.map(r => (0L, r.getLong(0), r.get(1)))
+    val df = Similarity.storedFrontierExpansion(stored, frontier)
+    df.collect()
+    val plan = formatted(df)
+    val pf = plan.linesIterator.filter(_.contains("PartitionFilters"))
+      .filter(_.contains("bucket")).toSeq
+    assert(pf.exists(_.contains(" IN (")),
+      s"the round's adjacency scan must filter on the frontier buckets:\n$plan")
+    val scans = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => (s.metrics("numFiles").value,
+        s.relation.location.inputFiles.length.toLong)
+    }
+    assert(scans.size == 1 && scans.head._1 < scans.head._2,
+      s"the scan must read fewer files than the index holds (read, all): $scans")
     graft.Scratch.delete(path)
   }
 

@@ -803,17 +803,77 @@ class SimilaritySpec extends SparkSpec {
 
   test("stored graph index: beam search over the stored adjacency ≡ in-flight") {
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
-    val q5 = emb.filter($"vec_id" < 5)
-    val inFlight = Similarity.beamSearchTopK(
-      Similarity.knnGraph(emb, 5, maxBucketSize = Some(200)),
-      emb, q5, Similarity.bucketSeeds(emb, maxBucketSize = Some(200)),
-      10, 8, 3).collect().map(_.toSeq).toSet
-    val path = java.nio.file.Files.createTempDirectory("graft_gidx").toFile.getAbsolutePath
+    // The stored search ranks on the driver, so besides the fixture it
+    // runs on a corpus that exercises Spark's ordering: exact copies of
+    // 40 vectors under fresh ids (equal cosines — only the vec_id
+    // tiebreak orders them), a vector with a NaN component (a NaN
+    // cosine against everything; Spark sorts NaN above every number)
+    // and a null embedding (a null cosine, sorted last). A zero vector
+    // cannot stand in for NaN: its 0/0 cosine raises DIVIDE_BY_ZERO
+    // under ANSI mode, in both searches alike.
+    val copies = emb.filter($"vec_id" < 40).select(($"vec_id" + 100000L).as("vec_id"),
+      $"embedding", $"label")
+    val nanVec = emb.filter($"vec_id" === 7L).select(lit(200000L).as("vec_id"),
+      transform($"embedding", (x, i) => when(i === 0, lit(Float.NaN)).otherwise(x))
+        .as("embedding"), $"label")
+    val nullVec = emb.filter($"vec_id" === 8L).select(lit(300000L).as("vec_id"),
+      lit(null).cast(emb.schema("embedding").dataType).as("embedding"), $"label")
+    val tied = emb.unionByName(copies).unionByName(nanVec).unionByName(nullVec)
+    // NaN >= 0 holds in Spark, so the NaN vector's LSH bucket is the
+    // all-ones one (255); that bucket's other members reach it from
+    // finite scores
+    val tiedQueries = tied.filter($"vec_id" < 5 || $"vec_id".between(100000L, 100004L) ||
+      $"vec_id" >= 200000L || Similarity.lshBucket($"embedding", 8, 64) === 255L)
+    // rows as strings: Row equality would never match a NaN cos_sim
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.mkString("|")).toSet
+    def searchBoth(corpus: org.apache.spark.sql.DataFrame,
+                   cases: Seq[(org.apache.spark.sql.DataFrame, Int, Int)]) = {
+      val path = java.nio.file.Files.createTempDirectory("graft_gidx").toFile.getAbsolutePath
+      Similarity.writeGraphIndex(corpus, path, 5, maxBucketSize = Some(200))
+      val graph = Similarity.knnGraph(corpus, 5, maxBucketSize = Some(200))
+      val seeds = Similarity.bucketSeeds(corpus, maxBucketSize = Some(200))
+      val out = cases.map { case (queries, k, rounds) =>
+        (k, rounds, rows(Similarity.beamSearchTopK(graph, corpus, queries, seeds, k, 8, rounds)),
+          rows(Similarity.beamSearchTopKStored(spark, path, corpus, queries, k, 8, rounds)))
+      }
+      graft.Scratch.delete(new java.io.File(path))
+      out
+    }
+    // the fixture; then ties + NaN at 3 rounds, at rounds = 0 (seeds
+    // only), and with k above the corpus size (the whole visited set)
+    val results = searchBoth(emb, Seq((emb.filter($"vec_id" < 5), 10, 3))) ++
+      searchBoth(tied, Seq((tiedQueries, 10, 3), (tiedQueries, 10, 0),
+        (tiedQueries, 1000, 1)))
+    for ((k, rounds, inFlight, stored) <- results)
+      assert(stored == inFlight,
+        s"the stored layout must not change beam-search results (k=$k rounds=$rounds): " +
+          s"only stored ${stored -- inFlight}, only in-flight ${inFlight -- stored}")
+    // the added inputs reach the ranking: NaN and null scores, a tie
+    // decided by vec_id, and a visited set smaller than k
+    val tiedTop = results(1)._3.toSeq.map(_.split('|'))
+    assert(tiedTop.groupBy(_(0)).values.exists(rs =>
+      rs.exists(_(2) == "NaN") && rs.exists(r => r(2) != "NaN" && r(2) != "null")),
+      "no top-k ranks a NaN cos_sim against numbers")
+    assert(tiedTop.exists(_(2) == "null"), "no null cos_sim in the top-k")
+    assert(tiedTop.groupBy(r => (r(0), r(2))).values.exists(_.size > 1),
+      "no exact cos_sim tie in the top-k")
+    val whole = results(3)._3.toSeq.map(_.split('|')).groupBy(_(0))
+    assert(whole.size == tiedQueries.count() && whole.values.forall(_.size < 1000),
+      "k = 1000 must return each query's whole visited set")
+  }
+
+  test("stored graph beam search persists nothing: no staged blocks outlive the call") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val path = java.nio.file.Files.createTempDirectory("graft_gidx_leak").toFile.getAbsolutePath
     Similarity.writeGraphIndex(emb, path, 5, maxBucketSize = Some(200))
-    val stored = Similarity.beamSearchTopKStored(spark, path, emb, q5, 10, 8, 3)
-      .collect().map(_.toSeq).toSet
-    assert(stored == inFlight,
-      "the stored layout must not change beam-search results")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Similarity.beamSearchTopKStored(spark, path, emb, emb.filter($"vec_id" < 5), 10, 8, 3)
+      .collect()
+    // compare key sets, not sizes: the context cleaner may drop older
+    // RDDs meanwhile, which is no leak of this call
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the search left ${added.size} persisted RDDs behind")
     graft.Scratch.delete(new java.io.File(path))
   }
 
