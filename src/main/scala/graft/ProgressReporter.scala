@@ -1,5 +1,6 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
@@ -12,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   * task counts and record metrics, pushed to a pluggable sink (default
   * stderr — swap in a metrics client or progress bar in production).
   *
+  * Job lines carry the job's label and duration, so attaching a
+  * reporter around `TurnosJob.run` or `CorpusJob.run` is the per-phase
+  * profile of the real job: each overlapped chain shows under its
+  * [[Stages.overlap]] label.
+  *
   * Listener callbacks run on the listener-bus thread and MUST be cheap
   * (a slow listener drops events); this one only formats and forwards.
   */
@@ -21,8 +27,17 @@ class ProgressReporter(report: String => Unit = s => System.err.println(s))
   /** Total records read (input + shuffle) across completed stages. */
   val recordsSeen = new AtomicLong(0L)
 
-  override def onJobStart(j: SparkListenerJobStart): Unit =
-    report(s"[progress] job ${j.jobId} started (${j.stageInfos.size} stages)")
+  /** Running jobs: id → (submit time ms, label). */
+  private val running = new ConcurrentHashMap[Int, (Long, String)]()
+
+  /** A job's label is its job description — a [[Stages.overlap]]
+    * chain's label, or whatever the caller set — quoted after its id. */
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    val label = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .fold("")(d => s" '$d'")
+    running.put(j.jobId, (j.time, label))
+    report(s"[progress] job ${j.jobId}$label started (${j.stageInfos.size} stages)")
+  }
 
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
     val si = sc.stageInfo
@@ -34,8 +49,10 @@ class ProgressReporter(report: String => Unit = s => System.err.println(s))
       s"$recs records, ${m.executorRunTime} ms executor time")
   }
 
-  override def onJobEnd(j: SparkListenerJobEnd): Unit =
-    report(s"[progress] job ${j.jobId} finished: ${j.jobResult}")
+  override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+    val (start, label) = Option(running.remove(j.jobId)).getOrElse((j.time, ""))
+    report(s"[progress] job ${j.jobId}$label finished in ${j.time - start} ms: ${j.jobResult}")
+  }
 }
 
 object ProgressReporter {

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Stages
 
 /** Deterministic mini-BPE tokenizer (the real subword algorithm, not a
   * regex proxy): merges are LEARNED once, in plain Scala, from a fixed
@@ -199,13 +200,15 @@ object Bpe {
 
   /** Distributed BPE merge learning — [[learn]]'s loop re-expressed on
     * DataFrames: per round, ONE vocab-sized pair count + a 1-row argmax
-    * collect + a map-only re-segmentation (checkpointed so n rounds do
-    * not stack n HOF plans). Deterministic (ties break (count desc, a,
-    * b) like [[learn]]); BpeSpec pins exact merge-table equality with
-    * the in-memory learner on the same text. The per-round collect is
-    * ONE row — the training loop's driver traffic is O(n) pairs. */
-  def trainDistributed(docs: DataFrame, textCol: String, n: Int): Seq[(String, String)] = {
-    var vocab = corpusVocab(docs, textCol).localCheckpoint(true)
+    * collect + a map-only re-segmentation (staged so n rounds do not
+    * stack n HOF plans; every round's stage is released on return).
+    * Deterministic (ties break (count desc, a, b) like [[learn]]);
+    * BpeSpec pins exact merge-table equality with the in-memory learner
+    * on the same text. The per-round collect is ONE row — the training
+    * loop's driver traffic is O(n) pairs. */
+  def trainDistributed(docs: DataFrame, textCol: String,
+                       n: Int): Seq[(String, String)] = Stages.scoped(docs.sparkSession) {
+    var vocab = Stages.stage(corpusVocab(docs, textCol))
     val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var done = false
     while (merges.length < n && !done) {
@@ -216,7 +219,7 @@ object Bpe {
       else {
         val (a, b) = (best(0).getAs[String]("a"), best(0).getAs[String]("b"))
         merges += ((a, b))
-        vocab = applyMergeToVocab(vocab, a, b).localCheckpoint(true)
+        vocab = Stages.stage(applyMergeToVocab(vocab, a, b))
       }
     }
     merges.toSeq

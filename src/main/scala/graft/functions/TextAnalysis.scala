@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.Stages
 
 /** Text-analysis kit for training-data pipelines: tokenization, language
   * ID (stopword heuristic), quality scoring, fingerprinting. All pure
@@ -218,7 +219,7 @@ object TextAnalysis {
     import graft.operators.NearDup
     val bg = NearDup.shingleRows(docs, idCol, textCol, 2)
       .select(col(idCol), col("shingle").as("bigram"))
-    val freq = NearDup.stage(bg.groupBy(col("bigram")).agg(count(lit(1)).as("n")))
+    val freq = Stages.stage(bg.groupBy(col("bigram")).agg(count(lit(1)).as("n")))
     // deterministic top-K head (tiebreak only pins the split, not the
     // result) — a TakeOrdered over the staged freq, not a recompute.
     val head = freq.orderBy(col("n").desc, col("bigram").asc).limit(headK)
@@ -260,9 +261,9 @@ object TextAnalysis {
                     headK: Int = 1024): org.apache.spark.sql.DataFrame = {
     import graft.operators.NearDup
     // The shingle explode feeds BOTH the count branch and the scoring
-    // join — stage it once (localCheckpoint) so the corpus is
+    // join — stage it once so the corpus is
     // tokenized/exploded a single time, not recomputed per branch.
-    val bg = NearDup.stage(NearDup.shingleRows(docs, idCol, textCol, 2)
+    val bg = Stages.stage(NearDup.shingleRows(docs, idCol, textCol, 2)
       .select(col(idCol), col("shingle").as("bigram")))
     val c12 = bg.groupBy(col("bigram")).agg(count(lit(1)).as("__n"))
       .withColumn("__w1", substring_index(col("bigram"), " ", 1))
@@ -270,7 +271,7 @@ object TextAnalysis {
     val vocab = docs
       .select(explode(tokens(col(textCol))).as("tok"))
       .agg(count_distinct(col("tok")).as("__v"))
-    val probs = NearDup.stage(c12.join(c1, Seq("__w1"))
+    val probs = Stages.stage(c12.join(c1, Seq("__w1"))
       .crossJoin(broadcast(vocab))
       .select(col("bigram"), col("__n"),
         log((col("__n") + lit(1)).cast("double") /
@@ -580,7 +581,7 @@ object TextAnalysis {
     val n = docs.count()
     val tf = docs.select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq = NearDup.stage(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
+    val dfreq = Stages.stage(tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
     val head = dfreq.orderBy(col("df").desc, col("term").asc).limit(headK)
     val tagged = tf.join(broadcast(head), Seq("term"), "left")
     val hot = tagged.filter(col("df").isNotNull)

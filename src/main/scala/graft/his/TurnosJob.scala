@@ -2,6 +2,7 @@ package graft.his
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, date_format}
+import graft.Stages
 import graft.sinks.Publish
 
 /** The reference command's `execute()` analog (reference:
@@ -35,44 +36,28 @@ object TurnosJob {
     * `denseIdScalable` zipWithIndex pre-pass) RECOMPUTES the whole
     * upstream join tree, turning the job into ~sum-of-standalone-
     * queries (measured 19.5–26.5 s at sf0.1). Each shared frame is
-    * staged exactly once (eager localCheckpoint — same primitive as
-    * NearDup.stage) and unpersisted after publish. At cluster scale
-    * swap localCheckpoint for persist(DISK) or a staging parquet dir —
-    * the structure (compute-once, fan-out) is what matters. */
+    * staged exactly once ([[graft.Stages.stage]]) and the scope
+    * releases all of them after publish, on success or failure. */
   def runFromWide(spark: SparkSession, wideIn: DataFrame, outRoot: String,
-                  version: String): Result = {
-    val staged = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def stage(df: DataFrame): DataFrame = {
-      val s = df.localCheckpoint(true)
-      staged.synchronized { staged += s }
-      s
-    }
-    try {
-      val wide = stage(wideIn)
-      // OP-33: never destroy the target on an empty/failed extract.
-      if (wide.isEmpty) return Result(None, Map.empty)
-
+                  version: String): Result = Stages.scoped(spark) {
+    val wide = Stages.stage(wideIn)
+    // OP-33: never destroy the target on an empty/failed extract.
+    if (wide.isEmpty) Result(None, Map.empty)
+    else {
       // The dim chains fork after `wide`: paciente→turno and
-      // long→prestacion are INDEPENDENT stage sequences, so they run
-      // from two driver threads and each chain's jobs back-fill the
-      // other's stage tails (guide §2.6 — overlap independent jobs);
-      // only the pivot table needs all three. Staging is
-      // deterministic per frame, so the interleaving cannot change
-      // what is published.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val turnoChainF = Future {
-        val pac = stage(TurnosPipeline.paciente(wide))
-        (pac, stage(TurnosPipeline.turno(wide, pac)))
-      }
-      val prestChainF = Future {
-        val long = stage(TurnosPipeline.prestacionLong(wide))
-        (long, stage(TurnosPipeline.prestacion(long)))
-      }
-      val (pac, turnoDim) = Await.result(turnoChainF, Duration.Inf)
-      val (long, prest) = Await.result(prestChainF, Duration.Inf)
-      val pxt = stage(TurnosPipeline.prestacionXTurno(long, turnoDim, prest))
+      // long→prestacion are INDEPENDENT stage sequences, so they
+      // overlap; only the pivot table needs all three. If one chain
+      // fails, the other is cancelled before anything is published.
+      val Seq((pac, turnoDim), (long, prest)) = Stages.overlap(
+        "his paciente, turno" -> { () =>
+          val pac = Stages.stage(TurnosPipeline.paciente(wide))
+          (pac, Stages.stage(TurnosPipeline.turno(wide, pac)))
+        },
+        "his prestacion" -> { () =>
+          val long = Stages.stage(TurnosPipeline.prestacionLong(wide))
+          (long, Stages.stage(TurnosPipeline.prestacion(long)))
+        })
+      val pxt = Stages.stage(TurnosPipeline.prestacionXTurno(long, turnoDim, prest))
 
       // The fact table publishes partitioned by appointment MONTH — at
       // 100 TB readers prune whole time directories (PublishSpec proves
@@ -101,10 +86,6 @@ object TurnosJob {
         "turno" -> turnoDim.count(),
         "prestacion" -> prest.count(),
         "prestacion_x_turno" -> pxt.count()))
-    } finally {
-      // free the block-manager storage so repeated invocations (bench
-      // samples, streaming folds) don't accumulate checkpoint blocks
-      staged.foreach(df => try df.unpersist() catch { case _: Throwable => () })
     }
   }
 }

@@ -3,7 +3,7 @@ package graft.his
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Stages, Tables}
 import graft.functions.{Cleaning, Gender}
 import graft.operators.{Dedup, Reshape}
 
@@ -115,15 +115,15 @@ object TurnosPipeline {
     * shared across every `his_*` registry entry: each standalone table
     * query used to recompute the full 6-table extract (~7 s each at
     * sf0.1 — the dominant his-family bench cost), which per-query
-    * registration otherwise forces. An eager localCheckpoint computes
-    * the extract on FIRST use and later queries reuse the materialized
-    * blocks — unlike the lazy `persist()` tried in round 3 (MEASURED
-    * slower: downstream stages raced to fill the cache), the eager cut
-    * happens exactly once, before any consumer plans against it.
-    * Values are bit-identical to [[wideExtract]] (localCheckpoint only
-    * truncates lineage), so every oracle hash is unchanged. Keyed by
-    * (session, dir): Verify/Bench/ScaleCheck each reuse within their
-    * own session; a new session re-stages.
+    * registration otherwise forces. [[Stages.stage]] computes the
+    * extract on FIRST use and later queries reuse the materialized
+    * blocks (the lazy `persist()` tried in round 3 MEASURED slower:
+    * downstream stages raced to fill the cache). Values are
+    * bit-identical to [[wideExtract]] (staging only truncates lineage),
+    * so every oracle hash is unchanged. Keyed by (session, dir):
+    * Verify/Bench/ScaleCheck each reuse within their own session; a new
+    * session re-stages. Call it outside any [[Stages.scoped]] body: a
+    * scope would release the memoized frame.
     *
     * The staging thunk runs under the memo lock: TrieMap's
     * getOrElseUpdate may evaluate a racing first call's thunk twice,
@@ -131,16 +131,13 @@ object TurnosPipeline {
     * the losing copy's blocks with no handle left to unpersist them.
     * The checkpoint is seconds-scale, so holding a JVM lock for it is
     * fine (harness processes stage once per session). Entries hold
-    * localCheckpoint'd blocks for the session's lifetime BY DESIGN
-    * (the registry reuses them across queries); [[evictStaged]] is the
-    * eviction path for long-lived sessions that are done with the
-    * his family — and note localCheckpoint blocks do not survive
-    * executor loss, so a non-local deployment that can lose executors
-    * should stage through a real temp table instead. */
+    * staged blocks for the session's lifetime BY DESIGN (the registry
+    * reuses them across queries); [[evictStaged]] is the eviction path
+    * for long-lived sessions that are done with the his family. */
   def wideExtractStaged(spark: SparkSession, dir: String): DataFrame =
     wideMemo.synchronized {
       wideMemo.getOrElseUpdate((spark, dir),
-        graft.operators.NearDup.stage(wideExtract(spark, dir)))
+        Stages.stage(wideExtract(spark, dir)))
     }
 
   /** Drop every staged extract belonging to `spark` and unpersist its

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Html, LangId, TextAnalysis, Url}
 import graft.operators.{NearDup, Packing, Sampling}
+import graft.Stages
 import graft.sinks.Publish
 
 /** The end-to-end LLM corpus-build job (round-17 verdict item 1) — the
@@ -31,11 +32,13 @@ import graft.sinks.Publish
   *      and an all-or-nothing publish ([[Publish.publishTables]]).
   *
   * Stage sharing is the TurnosJob doctrine: every frame with multiple
-  * consumers (the lexified corpus, the trained model, the dedup
-  * survivors, the final assignments) is staged exactly once — without
-  * it each downstream stage re-runs the whole extract→train→dedup
-  * tree, turning the job into sum-of-standalone-queries (the
-  * wideExtract lesson, measured ~2× per re-read).
+  * consumers (the lexified corpus, the gram counts, the dedup
+  * survivors, the final assignments) is staged exactly once
+  * ([[graft.Stages.stage]]) — without it each downstream stage re-runs
+  * the whole extract→train→dedup tree, turning the job into
+  * sum-of-standalone-queries (the wideExtract lesson, measured ~2× per
+  * re-read). [[run]]'s scope releases every one of them, the
+  * operators' internal stages included, once the publish settles.
   *
   * Scale shape: every stage is the oracle-proven scale-safe form —
   * codegen expression chains for extract/URL (no UDFs), the broadcast
@@ -77,7 +80,7 @@ object CorpusJob {
       Url.registeredDomain(Url.host(urlCol)).as("domain"))
     // Lexified corpus staged ONCE (tx44's doctrine): it feeds NB
     // training, classification, the quality gate, and dedup.
-    val lex = NearDup.stage(extracted.select(col("doc_id"), col("lang"),
+    val lex = Stages.stage(extracted.select(col("doc_id"), col("lang"),
       col("domain"), LangId.lexify(col("text"), col("lang")).as("text")))
     // 3: train on the deterministic 80% split, classify with
     // abstention, route 'und' out of the corpus. The gram counts are
@@ -85,7 +88,7 @@ object CorpusJob {
     // identical rows to gramCounts(train)) and classification, so the
     // O(chars) explode+md5 pass runs once (round-18 optimization).
     val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-    val gc = NearDup.stage(LangId.gramCounts(lex, "doc_id", "text", Dim))
+    val gc = Stages.stage(LangId.gramCounts(lex, "doc_id", "text", Dim))
     val train = lex.filter(split === "train")
     // model NOT staged (round 19): it has exactly one consumer — the
     // classify broadcast below — so the eager checkpoint only added a
@@ -104,13 +107,13 @@ object CorpusJob {
     // staged: feeds canonicalize (which reads it ~4 times), the
     // survivor semi-join, and the strip below — unstaged each re-ran
     // the classify-join + metrics chain (round 18).
-    val kept = NearDup.stage(metrics.filter(
+    val kept = Stages.stage(metrics.filter(
       col("n_tokens").between(20, 2000) && col("ttr") >= 0.3 &&
         col("mean_token_len").between(2.0, 12.0))
       .select("doc_id", "lang", "lang_pred", "domain", "text"))
     // 4b: exact shrink + LSH CC; keep each component's canonical rep.
     val labels = NearDup.canonicalize(kept, "doc_id", "text")
-    val survivors = NearDup.stage(kept.join(
+    val survivors = Stages.stage(kept.join(
       labels.filter(col("canonical_id") === col("doc_id")).select("doc_id"),
       Seq("doc_id"), "left_semi"))
     // 4c: strip cross-doc duplicated 5-gram spans from the survivors;
@@ -120,7 +123,7 @@ object CorpusJob {
     // ITS input twice more (total aggregate + running-total window) —
     // unstaged, the whole strip chain re-ran per consumer. Doc-scale
     // rows (ids + counts, no text).
-    val stripped = NearDup.stage(
+    val stripped = Stages.stage(
       NearDup.stripDuplicatedSpans(survivors, "doc_id", "text", 5)
         .select(col("doc_id"), col("n_kept"))
         .join(survivors.select("doc_id", "lang", "lang_pred", "domain"),
@@ -153,13 +156,9 @@ object CorpusJob {
           version: String): Result = {
     val docs = graft.Tables.documents(spark, sfDir)
       .select("doc_id", "lang", "source", "text")
-    if (docs.isEmpty) return Result(None, Map.empty)
-    val staged = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    def stage(df: DataFrame): DataFrame = {
-      val s = df.localCheckpoint(true); staged += s; s
-    }
-    try {
-      val assigned = stage(curatedAssignments(docs,
+    if (docs.isEmpty) Result(None, Map.empty)
+    else Stages.scoped(spark) {
+      val assigned = Stages.stage(curatedAssignments(docs,
         graft.queries.TextQueries.fixtureHtmlCol,
         graft.queries.TextQueries.fixtureUrlCol))
       val shards = assigned.drop("__sh_rk", "__sh_t")
@@ -174,9 +173,6 @@ object CorpusJob {
       Result(Some(s"v-$version"), Map(
         "docs_in" -> docs.count(),
         "published" -> assigned.count()))
-    } finally {
-      staged.foreach(df =>
-        try df.unpersist() catch { case _: Throwable => () })
     }
   }
 }

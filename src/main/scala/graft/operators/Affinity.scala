@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Stages
 
 /** Market-basket co-occurrence — the single-pass frequent-pair mining
   * primitive (the support+lift core of association-rule mining, and in
@@ -34,7 +35,7 @@ object Affinity {
   def coOccurrence(items: DataFrame, basketCol: String, itemCol: String,
                    minCount: Long = 2L): DataFrame = {
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    val li = NearDup.stage(items
+    val li = Stages.stage(items
       .select(col(basketCol).as("basket"), col(itemCol).as("item"))
       .filter(col("basket").isNotNull && col("item").isNotNull)
       .distinct())

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.Stages
 
 /** Key-based deduplication and surrogate-key assignment.
   *
@@ -205,7 +206,7 @@ object Dedup {
   def sortedNeighborhood(df: DataFrame, idCol: String, keyCol: String,
                          window: Int, maxDist: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
-    val ranked = graft.operators.NearDup.stage(denseIdScalable(
+    val ranked = Stages.stage(denseIdScalable(
       df.select(col(idCol), col(keyCol)).where(col(keyCol).isNotNull),
       Seq(col(keyCol), col(idCol)), "__rn")
       .withColumn("__blk", floor(col("__rn") / window)))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Stages
 
 /** Iterative link analysis over plain (src, dst) edge lists — the graph
   * layer a curation pipeline builds ON TOP of the kNN /near-dup
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * iteration is one hash equi-join (ranks × edges on src) plus one
   * hash aggregation (contributions by dst) — the exact shape Spark
   * already scales (map-side partial sums, AQE-handled skew). Lineage is
-  * truncated per iteration with [[NearDup.stage]] (localCheckpoint), so
+  * truncated per iteration with [[Stages.stage]], so
   * the plan stays iteration-sized instead of growing by one join+agg
   * per round; at cluster scale you'd pre-bucket the staged edge list by
   * `src` so the per-iteration join is co-located.
@@ -79,7 +80,7 @@ object Graph {
     * exact-integer division rounded to 6 (null for degree < 2).
     * Output: (node, degree, n_triangles, clustering_coeff). */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = NearDup.stage(edges
+    val und = Stages.stage(edges
       .filter(col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -127,12 +128,12 @@ object Graph {
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
                      minCommon: Int = 2): DataFrame = {
     require(minCommon >= 1, s"minCommon must be >= 1, got $minCommon")
-    val und = NearDup.stage(edges
+    val und = Stages.stage(edges
       .filter(col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct())
-    val adj = NearDup.stage(
+    val adj = Stages.stage(
       und.select(col("a").as("u"), col("b").as("x"))
         .unionAll(und.select(col("b").as("u"), col("a").as("x"))))
     val deg = adj.groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
@@ -173,7 +174,7 @@ object Graph {
             k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var und = NearDup.stage(edges
+    var und = Stages.stage(edges
       .filter(col(srcCol) =!= col(dstCol))
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -184,7 +185,7 @@ object Graph {
         .groupBy(col("node")).agg(count(lit(1)).as("__d"))
         .filter(col("__d") >= k)
         .select(col("node"))
-      und = NearDup.stage(und
+      und = Stages.stage(und
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi"))
     }
@@ -214,11 +215,11 @@ object Graph {
                    seeds: DataFrame, seedCol: String,
                    maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val e = NearDup.stage(edges
+    val e = Stages.stage(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct())
-    var settled = NearDup.stage(
+    var settled = Stages.stage(
       seeds.select(col(seedCol).as("node")).distinct()
         .withColumn("hops", lit(0)))
     var frontier = settled
@@ -226,10 +227,10 @@ object Graph {
       val reached = frontier.select(col("node").as("src"))
         .join(e, Seq("src"))
         .select(col("dst").as("node")).distinct()
-      frontier = NearDup.stage(
+      frontier = Stages.stage(
         reached.join(settled, Seq("node"), "left_anti")
           .withColumn("hops", lit(h)))
-      settled = NearDup.stage(settled.unionAll(frontier))
+      settled = Stages.stage(settled.unionAll(frontier))
     }
     settled
   }
@@ -255,14 +256,14 @@ object Graph {
                        seeds: DataFrame, seedNodeCol: String,
                        seedLabelCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val e = NearDup.stage(edges
+    val e = Stages.stage(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct())
     // A node seeded with TWO different labels would silently vote (and
     // be emitted) twice — the same silent-contract class as
     // pageRankWeighted's weight-sum guard. Fail loudly instead.
-    val seed = NearDup.stage(seeds
+    val seed = Stages.stage(seeds
       .select(col(seedNodeCol).as("node"), col(seedLabelCol).as("label"))
       .distinct()
       .groupBy(col("node"))
@@ -282,7 +283,7 @@ object Graph {
       val winners = votes.groupBy(col("node"))
         .agg(min_by(col("label"), struct((-col("__c")).as("nc"), col("label")))
           .as("label"))
-      lab = NearDup.stage(
+      lab = Stages.stage(
         seed.unionAll(winners.join(seed, Seq("node"), "left_anti")))
     }
     lab
@@ -294,13 +295,13 @@ object Graph {
                            seeds: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    val e = NearDup.stage(edges.select(
+    val e = Stages.stage(edges.select(
       col(srcCol).as("__src") +: col(dstCol).as("__dst") +:
         weightCol.map(w => col(w).cast("double").as("__w")).toSeq: _*))
     val nodes0 = e.select(col("__src").as("node"))
       .unionAll(e.select(col("__dst").as("node"))).distinct()
     // seed flag joined once; nodes carry (node, __seed)
-    val nodes = NearDup.stage(seeds match {
+    val nodes = Stages.stage(seeds match {
       case Some(sd) => nodes0
         .join(broadcast(sd.withColumn("__seed", lit(true))), Seq("node"), "left")
         .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed"))
@@ -329,7 +330,7 @@ object Graph {
     // share expression is untouched (__r * __w / __od term order), so
     // the arithmetic — and the 9-decimal-rounded ranks — are
     // bit-identical to the two-join form.
-    val eDeg = NearDup.stage(e.join(deg, Seq("__src")))
+    val eDeg = Stages.stage(e.join(deg, Seq("__src")))
     val share = weightCol match {
       case Some(_) => col("__r") * col("__w") / col("__od")
       case None => col("__r") / col("__od")
@@ -346,7 +347,7 @@ object Graph {
     var r = nodes.select(col("node"), col("__seed"),
       when(col("__seed"), round(lit(1.0 / nT), 9)).otherwise(lit(0.0)).as("__r"))
     for (_ <- 1 to iters) {
-      r = NearDup.stage(prRound(eDeg, nodes, r, share, teleport, damping))
+      r = Stages.stage(prRound(eDeg, nodes, r, share, teleport, damping))
     }
     r.select(col("node"), round(col("__r"), 6).as("pagerank"))
   }
@@ -404,7 +405,7 @@ object Graph {
       // stage() per round: each doubling reads the previous state
       // TWICE (as probe and as build side) — without truncation the
       // plan itself would double per round (2^rounds scans).
-      st = NearDup.stage(st)
+      st = Stages.stage(st)
       val other = st.select(col("node").as("__onode"),
         col("path").as("__opath"), col("top").as("__otop"))
       st = st.join(other, st("top") === other("__onode"), "left")

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Stages
 import graft.functions.TextAnalysis
 
 /** Document deduplication family for training-data pipelines:
@@ -345,7 +346,7 @@ object NearDup {
     // condition. The staged frame is doc-scale (id + numHashes longs
     // — ~130 B/doc at the defaults), orders of magnitude smaller than
     // the text it summarizes.
-    val sig = stage(minhashSignature(fanOut(docs), idCol, textCol, numHashes, shingleSize))
+    val sig = Stages.stage(minhashSignature(fanOut(docs), idCol, textCol, numHashes, shingleSize))
     val banded0 = lshBands(sig, idCol, numHashes, rowsPerBand)
     val banded = maxBucketSize.fold(banded0) { cap =>
       val sizes = banded0.groupBy(col("band"), col("band_key"))
@@ -403,7 +404,7 @@ object NearDup {
     // `pairs` is consumed four times below (id restriction, A-side,
     // B-side sizes, final assembly) and is typically the output of a
     // multi-stage LSH chain — stage it so that chain runs once.
-    val p = stage(pairs)
+    val p = Stages.stage(pairs)
     // Only candidate docs need shingle sets — restrict BEFORE tokenizing
     // (at corpus scale candidates are a tiny fraction of the corpus),
     // then stage the sets so the three consumers (sizes, A-side, B-side)
@@ -417,9 +418,9 @@ object NearDup {
     // exactly this for its prefix stage) — reusing it skips a second
     // tokenize+shingle pass over the candidates.
     val shd = shinglesOpt match {
-      case Some(sh) => stage(sh.join(ids, Seq(idCol), "left_semi")
+      case Some(sh) => Stages.stage(sh.join(ids, Seq(idCol), "left_semi")
         .select(col(idCol).as("jid"), col("shingle")))
-      case None => stage(
+      case None => Stages.stage(
         shingleRows(docs.join(ids, Seq(idCol), "left_semi"),
           idCol, textCol, shingleSize)
           .select(col(idCol).as("jid"), col("shingle")).distinct())
@@ -460,7 +461,7 @@ object NearDup {
     // sets once and share them across both legs (round 19, dd13).
     val shd = shinglesOpt match {
       case Some(sh) => sh.select(col(idCol).as("jid"), col("shingle"))
-      case None => stage(shingleRows(docs, idCol, textCol, shingleSize)
+      case None => Stages.stage(shingleRows(docs, idCol, textCol, shingleSize)
         .select(col(idCol).as("jid"), col("shingle")).distinct())
     }
     val sizes = shd.groupBy(col("jid")).agg(count(lit(1)).as("ns"))
@@ -515,7 +516,7 @@ object NearDup {
                        shingleSize: Int, minJaccard: Double): DataFrame = {
     require(minJaccard > 0 && minJaccard <= 1,
       s"minJaccard must be in (0, 1], got $minJaccard")
-    val shd = stage(shingleRows(docs, idCol, textCol, shingleSize)
+    val shd = Stages.stage(shingleRows(docs, idCol, textCol, shingleSize)
       .select(col(idCol), col("shingle")).distinct())
     jaccardOnPairs(docs, prefixFilterCandidates(shd, idCol, minJaccard),
         idCol, textCol, shingleSize, shinglesOpt = Some(shd))
@@ -556,7 +557,7 @@ object NearDup {
           .as(Seq("__pp", "__pt")))
       .select(col(idCol), col("ns"), col("__pp"),
         col("__pt.shingle").as("shingle"))
-    val p = stage(pref)
+    val p = Stages.stage(pref)
     val eps = 1e-9
     // Positional filter (round 19): per candidate pair, the TIGHTEST
     // upper bound over its shared prefix shingles is attained at the
@@ -755,24 +756,9 @@ object NearDup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Eagerly materialize a small intermediate (candidate pairs, verified
-    * jaccard pairs, iteration labels) and truncate its lineage.
-    * AQE exchange reuse does NOT cover multi-branch consumption of a
-    * multi-stage subtree (measured: dd07 recomputed the shingle→minhash→
-    * band→jaccard chain in three branches), and persist() races parallel
-    * cache fills — an eager localCheckpoint computes the subtree exactly
-    * once, synchronously, before any consumer plans against it. This is
-    * the in-process analog of staging through a temp table, which is
-    * also the honest 100 TB pipeline shape (the staged sets here are
-    * pair/label-scale, orders of magnitude smaller than the corpus).
-    *
-    * Deliberate consequence: stage() runs its Spark job at DataFrame
-    * CONSTRUCTION time, so merely building a staged query (plan
-    * inspection included) executes the staged subtree. Eager is the
-    * measured choice — a lazy checkpoint reintroduces the first-action
-    * materialization race this exists to remove — so tooling that only
-    * wants plan shapes should expect construction to compute. */
-  def stage(df: DataFrame): DataFrame = df.localCheckpoint(true)
+  /** [[Stages.stage]] under its old name, for callers outside the
+    * engine; engine code calls [[Stages.stage]]. */
+  def stage(df: DataFrame): DataFrame = Stages.stage(df)
 
   /** One-step canonical assignment from verified near-dup pairs: each
     * doc's canonical id = min over itself and its neighbors with
@@ -840,7 +826,7 @@ object NearDup {
     // (bucket signatures, norms, both verify sides) and is ≤ dim rows
     // of three ints per doc — unstaged, each consumer re-ran the
     // tokenize+md5+agg chain (guide §5: reused + expensive ⇒ stage).
-    val tf = stage(TextAnalysis.hashedTf(docs, idCol, textCol, dim)
+    val tf = Stages.stage(TextAnalysis.hashedTf(docs, idCol, textCol, dim)
       .filter(col("tf") =!= 0))
     val planes = (0 until numPlanes).flatMap(p => (0 until dim).map(dI =>
         (p, dI.toLong, Similarity.planeWeightInt(p, dI))))
@@ -854,7 +840,7 @@ object NearDup {
         .otherwise(lit(0L))).as("bucket"))
     // staged: the (doc, band, bucket) signature frame feeds both sides
     // of the self-join (and the cap filter when set) — two rows per doc.
-    val bkCapped = stage(maxBucketSize match {
+    val bkCapped = Stages.stage(maxBucketSize match {
       case Some(cap) =>
         val sizes = bk.groupBy(col("band"), col("bucket"))
           .agg(count(lit(1)).as("__bc"))
@@ -1019,7 +1005,7 @@ object NearDup {
         .select(col(idCol), coalesce(col("__m"), col(idCol)).as("canonical_id"))
       return (labels, 0)
     }
-    var edges = stage(edgesNorm)
+    var edges = Stages.stage(edgesNorm)
     var edgeCount = edges.count()
     var converged = edgeCount == 0
     while (!converged && rounds < maxIter) {
@@ -1043,7 +1029,7 @@ object NearDup {
       val reattached = withM.filter(col("dst") =!= col("__mn"))
         .select(col("dst").as("src"), col("__mn").as("dst"))
       val selfEdge = withM.select(col("src"), col("__mn").as("dst"))
-      val small = stage(
+      val small = Stages.stage(
         reattached.unionAll(selfEdge)
           .filter(col("src") =!= col("dst"))
           .distinct())
@@ -1092,7 +1078,7 @@ object NearDup {
     // (rep-id filter, final join, and the caller's plan), each of
     // which would otherwise re-run the fingerprint scan. The window
     // shuffle carries only (id, 16-char fp): doc-scale, not text-scale.
-    val mapping = stage(
+    val mapping = Stages.stage(
       docs.select(col(idCol), TextAnalysis.fingerprint(col(textCol)).as("__fp"))
         .select(col(idCol),
           min(col(idCol)).over(Window.partitionBy(col("__fp"))).as("__exact")))
@@ -1137,7 +1123,7 @@ object NearDup {
       .select(col(idCol), col(textCol))
     val inc = incoming.select(col(idCol), col(textCol))
     val all = fanOut(reps.unionByName(inc))
-    val tiers = stage(
+    val tiers = Stages.stage(
       reps.select(col(idCol), lit(0).as("__tier"))
         .unionByName(inc.select(col(idCol), lit(1).as("__tier"))))
     val pairs = minhashCandidates(all, idCol, textCol, numHashes, shingleSize, rowsPerBand)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
+import graft.Stages
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ArrayType(FloatType)): brute-force cosine top-k as the exact
@@ -331,16 +332,13 @@ object Similarity {
     }
     if (!fs.exists(root)) Map.empty
     else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val perBucket = fs.listStatus(root).toSeq
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
         .map { d =>
           val b = d.getPath.getName.stripPrefix("bucket=").toLong
-          Future(b -> dataFiles(d.getPath).map(footerRows).sum)
+          s"footers bucket=$b" -> (() => b -> dataFiles(d.getPath).map(footerRows).sum)
         }
-      Await.result(Future.sequence(perBucket), Duration.Inf).toMap
+      Stages.overlap(perBucket: _*).toMap
     }
   }
 
@@ -662,7 +660,7 @@ object Similarity {
     * the 6-decimal round applied in-engine — `round(avg(v), 6)`, the
     * same expression the old plan evaluated after reassembly). The
     * k·dim rounded means are collected (model-sized — the staging bound
-    * the old per-iteration localCheckpoint relied on) and merged into
+    * the old per-iteration stage relied on) and merged into
     * the driver-side model; empty clusters keep their previous
     * centroid. Per iteration this runs ONE job over the corpus instead
     * of the old crossJoin → vec_id reassembly exchange → explode → two
@@ -808,7 +806,7 @@ object Similarity {
     * Staged — (m·codebookSize) rows, consumed by encode, LUT, and
     * norm branches. */
   def pqCodebook(corpus: DataFrame, m: Int, subDim: Int, codebookSize: Int): DataFrame =
-    NearDup.stage(subspaces(corpus.filter(col("vec_id") < codebookSize), "vec_id", m, subDim)
+    Stages.stage(subspaces(corpus.filter(col("vec_id") < codebookSize), "vec_id", m, subDim)
       .select(col("sub"), col("vec_id").as("centroid_id"),
         transform(col("sub_emb"), x => round(x.cast("double"), 6)).as("c_emb")))
 
@@ -908,7 +906,7 @@ object Similarity {
     * agg directly (round applied in-engine — `round(avg(v), 6)`, the
     * same composition the old plan evaluated), and the m·K·subDim
     * rounded means are collected and merged driver-side (model-sized —
-    * the bound the old per-iteration localCheckpoint relied on); empty
+    * the bound the old per-iteration stage relied on); empty
     * clusters keep their previous entry. At 100 TB you train on a
     * bounded sample and encode the full corpus with the frozen
     * codebook. */
@@ -1067,21 +1065,13 @@ object Similarity {
                 cbOpt: Option[DataFrame] = None): DataFrame = {
     // The coarse quantizer and the PQ codebooks are INDEPENDENT
     // Lloyd's chains of small sequential driver jobs (init collect +
-    // one agg job per iteration); training them from two driver
-    // threads lets each chain's jobs back-fill the other's stage
-    // tails instead of serializing ~6 barrier jobs end to end
-    // (guide §2.6 — overlap independent jobs). Each chain is
-    // deterministic in isolation, so the interleaving cannot change
-    // the trained models.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centsF = Future(
-      centsOpt.getOrElse(kmeansCentroids(corpus, numCentroids, kmIters)))
-    val cbF = Future(
-      cbOpt.getOrElse(pqCodebookTrained(corpus, m, subDim, codebookSize, pqIters)))
-    val cents = Await.result(centsF, Duration.Inf)
-    val cb = Await.result(cbF, Duration.Inf)
+    // one agg job per iteration), so they overlap instead of
+    // serializing ~6 barrier jobs end to end.
+    val Seq(cents, cb) = Stages.overlap(
+      "ivfpq centroids" -> (() =>
+        centsOpt.getOrElse(kmeansCentroids(corpus, numCentroids, kmIters))),
+      "ivfpq codebook" -> (() =>
+        cbOpt.getOrElse(pqCodebookTrained(corpus, m, subDim, codebookSize, pqIters))))
     // ONE fused corpus pass (round 19 — the writeIvfPqCorpus /
     // ivfPqTopKStored shape applied in-flight): coarse list and PQ
     // codes are both per-row functions of the literal models, so the
@@ -1309,7 +1299,7 @@ object Similarity {
     * broadcast-sized by construction — so each round is ONE
     * broadcast-hash join against the column-pruned corpus scan (vec_id,
     * embedding) plus one tiny edge join; nothing ever shuffles the
-    * corpus. Rounds are staged ([[NearDup.stage]]) so the plan stays
+    * corpus. Rounds are staged ([[Stages.stage]]) so the plan stays
     * linear in rounds, the PageRank-loop doctrine. On a STORED corpus
     * the candidate lookup becomes a DPP-pruned point read (ann03b's
     * layout); search cost is O(rounds · beam · degree) score
@@ -1322,7 +1312,7 @@ object Similarity {
       s"bad beam params k=$k beamWidth=$beamWidth rounds=$rounds")
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val corp = corpus.select(col("vec_id"), col("embedding"))
-    val e = NearDup.stage(edges.select(col("vec_id"), col("nbr_id")))
+    val e = Stages.stage(edges.select(col("vec_id"), col("nbr_id")))
     // score(cands): exact cosine of each (query, candidate) pair — the
     // candidate side is tiny, so it broadcasts into one corpus probe
     def score(cands: DataFrame): DataFrame =
@@ -1334,14 +1324,14 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
     def top(scored: DataFrame, n: Int): DataFrame =
       scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= n)
-    val s0 = NearDup.stage(score(
+    val s0 = Stages.stage(score(
       q.select(col("query_id")).crossJoin(broadcast(seeds.select(col("vec_id"))))))
     var beam = top(s0, beamWidth).select("query_id", "vec_id")
     var visited = s0
     for (_ <- 1 to rounds) {
       val expand = beam.join(e, Seq("vec_id"))
         .select(col("query_id"), col("nbr_id").as("vec_id"))
-      val scored = NearDup.stage(score(
+      val scored = Stages.stage(score(
         beam.union(expand).distinct()))
       // union only — ONE distinct at the end replaces the per-round
       // chained distincts (round 19; score is a deterministic
@@ -1375,7 +1365,7 @@ object Similarity {
     // corpus-scale join on vec_id re-deriving the partition column).
     // Stats frame is ≤ 2^numPlanes rows — staged so both consumers
     // share it.
-    val stats = NearDup.stage(corpus
+    val stats = Stages.stage(corpus
       .select(col("vec_id"), lshBucket(col("embedding"), numPlanes, dim).as("__bk"))
       .groupBy(col("__bk"))
       .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("__bc")))

@@ -21,10 +21,8 @@ object HisQueries {
     // the queries below AND across the standalone registry entries.
     // persist() was tried and MEASURED SLOWER at sf0.1 (68.6s ->
     // 112.4s total): parallel downstream stages raced to fill the lazy
-    // cache. wideExtractStaged is the working replacement — one EAGER
-    // localCheckpoint per (session, dir), computed before any consumer
-    // plans against it, reused by every his_* entry (hashes unchanged;
-    // lineage truncation only).
+    // cache. wideExtractStaged stages it once per (session, dir) and
+    // every his_* entry reuses it (hashes unchanged).
     Q("his_turno",
       (s, d) => {
         val wide = TurnosPipeline.wideExtractStaged(s, d)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Stages, Tables}
 import graft.functions.{Bpe, TextAnalysis}
 import graft.operators.{NearDup, Packing, Sampling}
 
@@ -217,7 +217,7 @@ t AS (SELECT doc_id, $toksSql AS toks, text,
       (s, d) => {
         val docs = Tables.documents(s, d)
         // jaccardOnPairs stages the candidate pairs and the candidate
-        // shingle sets internally (eager localCheckpoint), so the LSH
+        // shingle sets internally (eager stages), so the LSH
         // chain and the tokenize→shingle chain each run exactly once.
         val pairs = NearDup.minhashCandidates(docs, "doc_id", "text",
           NumHashes, 3, RowsPerBand)
@@ -267,13 +267,13 @@ JOIN jac j ON j.id_a = c.id_a AND j.id_b = c.id_b""")),
         // ONE staged distinct-shingle frame serves the exact ground
         // truth AND the candidate verify leg (round 19) — before, each
         // leg re-ran its own tokenize+shingle+distinct pass.
-        val shd = NearDup.stage(
+        val shd = Stages.stage(
           NearDup.shingleRows(docs, "doc_id", "text", 3)
             .select(col("doc_id"), col("shingle")).distinct())
-        val truth = NearDup.stage(
+        val truth = Stages.stage(
           NearDup.jaccardGroundTruth(docs, "doc_id", "text", 3, 0.5,
             shinglesOpt = Some(shd)))
-        val cand = NearDup.stage(NearDup.minhashCandidates(
+        val cand = Stages.stage(NearDup.minhashCandidates(
           docs, "doc_id", "text", NumHashes, 3, RowsPerBand))
         val verified = NearDup.jaccardOnPairs(docs, cand, "doc_id", "text", 3,
             shinglesOpt = Some(shd))
@@ -318,7 +318,7 @@ FROM agg""")),
           NumHashes, 3, RowsPerBand)
         // jac is consumed twice by neardupGroups (both edge directions)
         // — stage the (pair-scale) verified output once.
-        val jac = NearDup.stage(
+        val jac = Stages.stage(
           NearDup.jaccardOnPairs(docs, pairs, "doc_id", "text", 3))
         NearDup.neardupGroups(docs, jac, "doc_id", 0.5)
       },
@@ -535,7 +535,7 @@ GROUP BY d.source""")),
         val docs = Tables.documents(s, d)
         val pairs = NearDup.minhashCandidates(docs, "doc_id", "text",
           NumHashes, 3, RowsPerBand)
-        val jac = NearDup.stage(
+        val jac = Stages.stage(
           NearDup.jaccardOnPairs(docs, pairs, "doc_id", "text", 3))
         val labels = NearDup.neardupGroups(docs, jac, "doc_id", 0.5)
         val scored = docs.select(col("doc_id"),
@@ -607,7 +607,7 @@ SELECT doc_id, min(r) AS canonical_id FROM reach GROUP BY doc_id""")),
         // staged: canonicalize consumes the gated corpus ~4 times
         // (fingerprint pass, reps semi-join, signatures, verify) — each
         // would re-run the scan + qualityMetrics chain (round 18).
-        val kept = NearDup.stage(m.filter(
+        val kept = Stages.stage(m.filter(
           col("n_tokens").between(20, 2000) &&
           col("ttr") >= 0.3 &&
           col("mean_token_len").between(2.0, 12.0)).select("doc_id", "text"))
@@ -657,7 +657,7 @@ SELECT e.doc_id, cc.canonical_id FROM em e JOIN cc ON cc.doc_id = e.exact_canon"
         // staged: canonicalizeIncremental reads `existing` twice (rep
         // filter + final union) — unstaged, the whole batch-1
         // canonicalize chain ran once per consumer (round 18).
-        val existing = NearDup.stage(NearDup
+        val existing = Stages.stage(NearDup
           .canonicalize(batch1, "doc_id", "text", NumHashes, 3, RowsPerBand, 0.5)
           .join(batch1, Seq("doc_id"))) // re-attach text: incremental re-shingles reps
         NearDup.canonicalizeIncremental(existing, batch2, "doc_id", "text",
@@ -2045,7 +2045,7 @@ FROM a GROUP BY shard""")),
           .join(lbl, Seq("doc_id"))
         val xcols = (0 until dim).map(j =>
           round(col(s"`$j`").cast("double") / col("nt"), 6).as(s"x$j"))
-        val X = NearDup.stage(wide.select(
+        val X = Stages.stage(wide.select(
           (Seq(col("doc_id"), col("y")) ++ xcols :+ lit(1.0).as("xb")): _*))
         val featureCols = (0 until dim).map(j => s"x$j") :+ "xb"
         val w = graft.operators.Quality.trainLogistic(X, "y", featureCols, 3, 0.5)
@@ -2077,7 +2077,7 @@ FROM a GROUP BY shard""")),
         // sh likewise fed three simhash re-runs of the tokenize+md5
         // chain (reps, membership, and the distinct-pair generator,
         // which now takes the precomputed frame).
-        val ah = NearDup.stage(Multimodal.aHashPng(s,
+        val ah = Stages.stage(Multimodal.aHashPng(s,
           Multimodal.synthesizePng(s, docs).toDF()).toDF()
           .select(col("media_id"), col("ahash")))
         val imgReps = ah.groupBy(col("ahash")).agg(min(col("media_id")).as("rep"))
@@ -2086,7 +2086,7 @@ FROM a GROUP BY shard""")),
         val imgPairs = NearDup.bitstringNearDup(ah, "media_id", "ahash",
             bits = 64, maxHamming = 3, numBands = 4)
           .select(col("rep_a").as("src"), col("rep_b").as("dst"))
-        val sh = NearDup.stage(NearDup.simhash(docs, "doc_id", "text"))
+        val sh = Stages.stage(NearDup.simhash(docs, "doc_id", "text"))
         val txtReps = sh.groupBy(col("simhash")).agg(min(col("doc_id")).as("rep"))
         val txtMember = sh.join(txtReps, Seq("simhash"))
           .select(col("doc_id").as("src"), col("rep").as("dst"))
@@ -2232,7 +2232,7 @@ SELECT doc_id, CAST(i - 1 AS INTEGER) AS block_idx, blocks[i] AS block_text FROM
         // classify-side gram counts, and the final truth join all
         // read the checkpoint instead of re-running tokenize+lexify
         // per subtree (the wideExtractStaged lesson, measured ~2×).
-        val docs = NearDup.stage(NearDup.fanOut(Tables.documents(s, d))
+        val docs = Stages.stage(NearDup.fanOut(Tables.documents(s, d))
           .select(col("doc_id"), col("lang"),
             LangId.lexify(col("text"), col("lang")).as("st")))
         // gram counts staged ONCE and shared by training (filtered to
@@ -2240,7 +2240,7 @@ SELECT doc_id, CAST(i - 1 AS INTEGER) AS block_idx, blocks[i] AS block_text FROM
         // classification: the O(chars) explode+md5 pass runs once per
         // query instead of twice (round-18 optimization).
         val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-        val gc = NearDup.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
+        val gc = Stages.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
         val train = docs.filter(split === "train")
         // model unstaged (round 19): single consumer — the classify
         // broadcast — so the eager checkpoint only added a barrier job.
@@ -2259,11 +2259,11 @@ SELECT d.doc_id, d.lang, p.lang_pred FROM documents d JOIN pred p USING (doc_id)
     Q("tx44b_langid_accuracy",
       (s, d) => {
         import graft.functions.{LangId, TextAnalysis}
-        val docs = NearDup.stage(NearDup.fanOut(Tables.documents(s, d))
+        val docs = Stages.stage(NearDup.fanOut(Tables.documents(s, d))
           .select(col("doc_id"), col("lang"),
             LangId.lexify(col("text"), col("lang")).as("st")))
         val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-        val gc = NearDup.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
+        val gc = Stages.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
         val train = docs.filter(split === "train")
         // model unstaged (round 19): single consumer — the classify
         // broadcast — so the eager checkpoint only added a barrier job.
@@ -2297,11 +2297,11 @@ GROUP BY d.lang""")),
     Q("tx44c_langid_confusion",
       (s, d) => {
         import graft.functions.{LangId, TextAnalysis}
-        val docs = NearDup.stage(NearDup.fanOut(Tables.documents(s, d))
+        val docs = Stages.stage(NearDup.fanOut(Tables.documents(s, d))
           .select(col("doc_id"), col("lang"),
             LangId.lexify(col("text"), col("lang")).as("st")))
         val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-        val gc = NearDup.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
+        val gc = Stages.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
         val train = docs.filter(split === "train")
         // model unstaged (round 19): single consumer — the classify
         // broadcast — so the eager checkpoint only added a barrier job.

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Stages, Tables}
 import graft.operators.{Multimodal, Similarity}
 
 /** Similarity-search (EX-06) and multimodal-column queries, with DuckDB
@@ -1004,39 +1004,29 @@ WHERE cos_sim > 0.35""")),
         // the checkpoint each union branch recomputes the brute-force
         // scan (measured: ~2s of the entry at sf0.1)
         //
-        // The three staged frames are mutually independent (each trains
-        // or scans from `emb` alone), so they run from three driver
-        // threads (guide §2.6 — the ivfPqTopK / TurnosJob overlap
-        // doctrine, round 19): the two training chains' small
-        // sequential Lloyd's jobs back-fill the brute-force scan's
-        // stage tails instead of serializing three barrier chains.
-        // Each chain is deterministic in isolation, so the
-        // interleaving cannot change the staged frames.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val exactF = Future(graft.operators.NearDup.stage(
-          Similarity.bruteForceTopK(emb, q50, 10)
-            .select(col("query_id"), col("vec_id"))))
-        // each MODEL trains exactly once and serves every ladder row
-        // that uses it (ivf1/ivf2/ivf_pq share the coarse quantizer,
-        // pq_trained/ivf_pq share the PQ codebook) — the production
-        // shape, and it halves the entry's training work
-        val centsF = Future(graft.operators.NearDup.stage(
-          Similarity.kmeansCentroids(emb, 16, 2)))
-        val cbTF = Future(graft.operators.NearDup.stage(
-          Similarity.pqCodebookTrained(emb, 16, 4, 64, 2)))
-        // the graph rung's beam search stages eagerly at construction
-        // (seed scores + one checkpoint per round) and depends on none
-        // of the other frames — fourth overlapped chain
-        val beamF = Future(Similarity.beamSearchTopK(
-          Similarity.knnGraph(emb, 5, maxBucketSize = Some(200)),
-          emb, q50, Similarity.bucketSeeds(emb, maxBucketSize = Some(200)),
-          10, 8, 3))
-        val exact = Await.result(exactF, Duration.Inf)
-        val cents = Await.result(centsF, Duration.Inf)
-        val cbT = Await.result(cbTF, Duration.Inf)
-        val beam = Await.result(beamF, Duration.Inf)
+        // The staged frames and the beam search are mutually
+        // independent (each trains or scans from `emb` alone), so they
+        // overlap: the training chains' small sequential Lloyd's jobs
+        // back-fill the brute-force scan's stage tails instead of
+        // serializing four barrier chains.
+        val Seq(exact, cents, cbT, beam) = Stages.overlap(
+          "ann07 exact" -> (() => Stages.stage(
+            Similarity.bruteForceTopK(emb, q50, 10)
+              .select(col("query_id"), col("vec_id")))),
+          // each MODEL trains exactly once and serves every ladder row
+          // that uses it (ivf1/ivf2/ivf_pq share the coarse quantizer,
+          // pq_trained/ivf_pq share the PQ codebook) — the production
+          // shape, and it halves the entry's training work
+          "ann07 centroids" -> (() => Stages.stage(
+            Similarity.kmeansCentroids(emb, 16, 2))),
+          "ann07 codebook" -> (() => Stages.stage(
+            Similarity.pqCodebookTrained(emb, 16, 4, 64, 2))),
+          // the graph rung's beam search stages eagerly at construction
+          // (seed scores + one checkpoint per round)
+          "ann07 beam" -> (() => Similarity.beamSearchTopK(
+            Similarity.knnGraph(emb, 5, maxBucketSize = Some(200)),
+            emb, q50, Similarity.bucketSeeds(emb, maxBucketSize = Some(200)),
+            10, 8, 3)))
         def row(method: String, nq: Int, approx: org.apache.spark.sql.DataFrame) =
           approx.select(col("query_id"), col("vec_id"))
             .join(exact, Seq("query_id", "vec_id"))

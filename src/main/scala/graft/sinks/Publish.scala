@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Stages
 
 /** Multi-table atomic publish — the engine-level replacement for the
   * reference's all-or-nothing load transaction (reference:
@@ -39,16 +40,13 @@ object Publish {
     val vdir = new Path(root, s"v-$version")
     try {
       // The per-table writes are INDEPENDENT jobs over already-staged
-      // frames, so they run from a small driver thread pool: each
-      // write's commit/file-I/O tail frees executors the next table's
-      // tasks back-fill (guide §2.6 — overlap independent jobs).
-      // Atomicity is untouched — the manifest flip below still happens
-      // only after EVERY write has succeeded, and any failure deletes
-      // the whole staging dir.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val writes = tables.toSeq.map { case (name, df) => Future {
+      // frames, so they overlap: each write's commit/file-I/O tail
+      // frees executors the next table's tasks back-fill. Atomicity is
+      // untouched — overlap returns only after EVERY write has settled
+      // (a failure cancels the others first), so the staging dir below
+      // is never deleted while a sibling write could still recreate
+      // paths in it, and the manifest flips only after all succeeded.
+      Stages.overlap(tables.toSeq.map { case (name, df) => s"publish $name" -> { () =>
         // Cluster partitioned tables by their partition columns before
         // the write: without it every upstream task opens a file in
         // every partition directory (tasks × values small files — the
@@ -61,14 +59,7 @@ object Publish {
         val w = clustered.write.mode("overwrite")
         partitioning.get(name).filter(_.nonEmpty).fold(w)(cols => w.partitionBy(cols: _*))
           .parquet(new Path(vdir, name).toString)
-      }}
-      // Wait for EVERY write to settle (success or failure) before
-      // rethrowing — deleting the staging dir while a sibling write is
-      // still running would let it recreate paths after the cleanup.
-      val settled = Await.result(
-        Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
-        Duration.Inf)
-      settled.collectFirst { case scala.util.Failure(e) => throw e }
+      }}: _*)
     } catch {
       case e: Throwable =>
         try ctx.delete(vdir, true) catch { case _: Throwable => () }

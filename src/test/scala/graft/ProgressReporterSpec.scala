@@ -30,4 +30,20 @@ class ProgressReporterSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(rep)
     }
   }
+
+  test("job lines carry the overlap chain's label and the job's duration") {
+    val buf = new ConcurrentLinkedQueue[String]()
+    val rep = ProgressReporter.attach(spark, buf.add(_))
+    try {
+      Stages.overlap("progress probe" -> (() => spark.range(100).count()))
+      def lines = buf.asScala.toSeq
+      def labelled = lines.exists(l => l.contains("'progress probe' finished in ") && l.contains(" ms: "))
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (System.nanoTime() < deadline && !labelled) Thread.sleep(50)
+      assert(lines.exists(l => l.contains("'progress probe' started")), lines.mkString("\n"))
+      assert(labelled, lines.mkString("\n"))
+    } finally {
+      spark.sparkContext.removeSparkListener(rep)
+    }
+  }
 }

@@ -15,7 +15,7 @@ class LangIdSpec extends SparkSpec {
       LangId.lexify(col("text"), col("lang")).as("st"))
 
   private lazy val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-  private lazy val model = graft.operators.NearDup.stage(
+  private lazy val model = graft.Stages.stage(
     LangId.trainNaiveBayes(docs.filter(split === "train"), "doc_id", "st", "lang", dim))
 
   test("lexify maps only the target language's words and keeps the rest") {

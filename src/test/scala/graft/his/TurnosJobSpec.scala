@@ -62,4 +62,24 @@ class TurnosJobSpec extends SparkSpec {
     assert(Publish.currentVersion(spark, root).contains("v-001"))
     assert(Publish.readTable(spark, root, "turno").count() > 0)
   }
+
+  test("a failing chain cancels its sibling: nothing runs on, nothing stays staged, v-001 stays current") {
+    val root = freshRoot()
+    TurnosJob.run(spark, sf0001, root, "001")
+    // paciente needs the dropped column, so its chain fails at analysis
+    // while the prestacion chain is still staging
+    val wide = TurnosPipeline.wideExtract(spark, sf0001).drop("paciente_nombre_raw")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[Exception](TurnosJob.runFromWide(spark, wide, root, "002"))
+    val active = sc.statusTracker.getActiveJobIds
+    assert(active.isEmpty, s"jobs ${active.mkString(",")} still run after the job failed")
+    assert(e.getMessage.contains("paciente_nombre_raw"), e.getMessage)
+    // compare key sets, not sizes: the context cleaner may drop older
+    // RDDs meanwhile, which is no leak of this call
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the failed job left ${added.size} persisted RDDs behind")
+    assert(Publish.currentVersion(spark, root).contains("v-001"))
+    assert(!new java.io.File(root, "v-002").exists())
+  }
 }

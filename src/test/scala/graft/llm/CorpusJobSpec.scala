@@ -70,4 +70,14 @@ class CorpusJobSpec extends SparkSpec {
       new java.io.File(root).listFiles().forall(_ => false),
       "an empty extract must not create a published version")
   }
+
+  test("run releases every frame it stages, the operators' internal stages included") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val res = CorpusJob.run(spark, sf0001, freshRoot(), "001")
+    assert(res.published.contains("v-001"))
+    // compare key sets, not sizes: the context cleaner may drop older
+    // RDDs meanwhile, which is no leak of this call
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"the job left ${added.size} persisted RDDs behind")
+  }
 }

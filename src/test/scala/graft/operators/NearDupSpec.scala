@@ -434,7 +434,7 @@ class NearDupSpec extends SparkSpec {
        ((1 to 9).map(i => s"m$i") :+ "n1").map((5L, _)) ++
        ((1 to 9).map(i => s"m$i") :+ "n2").map((6L, _)))
         .toDF("doc_id", "shingle")
-    val cand = NearDup.prefixFilterCandidates(NearDup.stage(rows), "doc_id", 0.6)
+    val cand = NearDup.prefixFilterCandidates(graft.Stages.stage(rows), "doc_id", 0.6)
       .as[(Long, Long)].collect().toSet
     assert(!cand.contains((1L, 2L)),
       s"positional filter must prune the below-bound pair; got $cand")

@@ -883,7 +883,7 @@ class SimilaritySpec extends SparkSpec {
     // — recall falls to the seed-hit rate, far below the floor.
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val q50 = emb.filter($"vec_id" < 50)
-    val exact = NearDup.stage(Similarity.bruteForceTopK(emb, q50, 10)
+    val exact = graft.Stages.stage(Similarity.bruteForceTopK(emb, q50, 10)
       .select($"query_id", $"vec_id"))
     val degraded = Similarity.beamSearchTopK(
       Similarity.knnGraph(emb, 5, maxBucketSize = Some(200)),
@@ -902,7 +902,7 @@ class SimilaritySpec extends SparkSpec {
     // below the floor, so the ladder test above WOULD fail on it.
     val emb = graft.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val q = emb.filter($"vec_id" < 10)
-    val exact = NearDup.stage(Similarity.bruteForceTopK(emb, q, 10)
+    val exact = graft.Stages.stage(Similarity.bruteForceTopK(emb, q, 10)
       .select($"query_id", $"vec_id"))
     val degraded = Similarity.ivfPqRefineTopK(emb, q, 10, refineFactor = 1)
       .select($"query_id", $"vec_id")
