@@ -81,7 +81,7 @@ object Stages {
   /** `Dataset.unpersist` does not reach a staged frame's blocks: it only
     * uncaches `persist`ed plans, and a staged frame scans its checkpoint
     * RDD, which holds them. */
-  private def release(staged: DataFrame): Unit = staged.queryExecution.logical match {
+  private[graft] def release(staged: DataFrame): Unit = staged.queryExecution.logical match {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => ()
   }

@@ -140,13 +140,14 @@ object TurnosPipeline {
         Stages.stage(wideExtract(spark, dir)))
     }
 
-  /** Drop every staged extract belonging to `spark` and unpersist its
-    * checkpoint blocks (blocking = false: reclaim is async, callers
-    * don't wait on the BlockManager). Safe to call between his-family
-    * workloads; the next `wideExtractStaged` simply re-stages. */
+  /** Drop every staged extract belonging to `spark` and release its
+    * checkpoint blocks ([[Stages.release]]; reclaim is async, callers
+    * don't wait on the BlockManager). An evicted frame can no longer be
+    * read. Safe to call between his-family workloads; the next
+    * `wideExtractStaged` simply re-stages. */
   def evictStaged(spark: SparkSession): Unit = wideMemo.synchronized {
     wideMemo.keys.filter(_._1 eq spark).foreach { k =>
-      wideMemo.remove(k).foreach(_.unpersist(false))
+      wideMemo.remove(k).foreach(Stages.release)
     }
   }
 

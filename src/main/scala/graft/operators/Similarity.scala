@@ -1,22 +1,60 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import graft.Stages
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ArrayType(FloatType)): brute-force cosine top-k as the exact
-  * baseline, and sign-random-projection (hyperplane) LSH bucketing as
-  * the 100 TB path — candidates are restricted to the query's bucket,
-  * turning O(n·q) into O(q · bucket_size).
+  * baseline, and the ANN families — sign-random-projection (hyperplane)
+  * LSH buckets, IVF inverted lists, IVF-PQ codes, JL/SQ8/PQ
+  * compression and kNN-graph beam search — that restrict or compress
+  * the candidates so a query costs O(q · candidates), not O(n · q).
   *
   * All arithmetic is double-precision column expressions (zip_with +
   * aggregate) inside codegen; similarities are rounded to 6 decimals and
-  * ranked with a vec_id tiebreak so results are deterministic across
-  * engines and summation orders.
+  * ranked by one helper, [[topK]] (score descending, vec_id ascending),
+  * so results are deterministic across engines and summation orders.
+  *
+  * Index model. Each stored family — bucketed (LSH), IVF and IVF-PQ —
+  * is three parts ([[Layout]]): an assign projection from (vec_id,
+  * embedding) rows to index rows, its model sidecars (`_centroids`,
+  * `_codebook`; none for LSH, whose hyperplanes are md5-derived) and
+  * the partition column the assign fills (`bucket`, `centroid_id`,
+  * `list_id`). The family's entry points derive from those parts:
+  *  - build = train the models, write the sidecars, assign, clustered
+  *    write (overwrite);
+  *  - append = read the sidecars, the same assign, clustered write
+  *    (append): only the touched partition directories gain files, so
+  *    maintenance costs O(batch), never O(corpus);
+  *  - in-flight search = assign the corpus, then score it against the
+  *    broadcast query probes ([[probeTopK]], or [[ivfPqScore]] for
+  *    codes);
+  *  - stored search = read the index directory, then the same scorer.
+  *    The probe join on the partition column lets Spark's dynamic
+  *    partition pruning read only the probed directories (PlanSpec
+  *    gates it).
+  *
+  * In-flight ≡ stored: given the same models and parameters, a stored
+  * search returns exactly the rows of the in-flight search over the
+  * indexed vectors — the layout changes cost, never results.
+  * SimilaritySpec pins it per family after an append; the stored
+  * registry queries re-check the in-flight oracles. Retraining a model
+  * is a rebuild to a fresh path plus a manifest flip, never an append:
+  * drifted models would strand the vectors already written.
+  *
+  * Single writer: appends, and the bucketed index's `_stats` manifest
+  * read-merge-write, carry no coordination. Two concurrent appenders
+  * can lose one batch's counts for good, and a crash between the data
+  * append and the manifest write leaves the manifest behind the data.
+  * Run appends from one writer at a time (the streaming ingest
+  * serializes micro-batches; batch pipelines publish through
+  * [[graft.sinks.Publish]]'s one-writer versions). Both failure shapes
+  * are detectable: the manifest's bytes no longer match the directory
+  * listing, which [[bucketStatsVerified]] checks and repairs.
   */
 object Similarity {
 
@@ -46,29 +84,43 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The rank tail of every search here: per `group`, the top `n` rows
+    * by `score` descending with `id` ascending as the tiebreak. The
+    * other columns pass through and `rk` (long) is appended. The rank
+    * filter sits directly on the window, the shape Spark's
+    * WindowGroupLimit pushes below the sort (PlanSpec sweeps for it). */
+  private def topK(scored: DataFrame, score: String, n: Int,
+                   group: String = "query_id", id: String = "vec_id"): DataFrame = {
+    val w = Window.partitionBy(col(group)).orderBy(col(score).desc, col(id).asc)
+    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= n)
+      .select(scored.columns.map(col) :+ col("rk").cast("long").as("rk"): _*)
+  }
+
   /** Exact top-k by cosine for each query vector (brute force — the
     * correctness baseline; broadcast the small query set, one pass over
     * the corpus, per-query top-k via window). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = fanOut(corpus).crossJoin(broadcast(q))
+    topK(fanOut(corpus).crossJoin(broadcast(q))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk").cast("long").as("rk"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim")), "cos_sim", k)
   }
 
-  /** Deterministic pseudo-random hyperplanes: component (p,d) derived
-    * from md5("<p>_<d>") — reproducible in any engine with md5, which is
-    * what makes the LSH bucketing oracle-checkable. Range ≈ [-1, 1]. */
-  def planeWeight(p: Int, d: Int): Double = {
-    val mdigest = java.security.MessageDigest.getInstance("MD5")
-    val hex = mdigest.digest(s"${p}_$d".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.substring(0, 8)
+  /** A deterministic pseudo-random weight in [-1, 1] (steps of 1/1000)
+    * derived from md5(`key`) — reproducible in any engine with md5,
+    * which is what makes the LSH planes and JL directions
+    * oracle-checkable. */
+  private def md5Weight(key: String): Double = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.substring(0, 8)
     ((java.lang.Long.parseLong(hex, 16) % 2001) - 1000).toDouble / 1000.0
   }
+
+  /** Hyperplane p's component d: [[md5Weight]] of "<p>_<d>". */
+  def planeWeight(p: Int, d: Int): Double = md5Weight(s"${p}_$d")
+
+  private def plane(p: Int, dim: Int): Column =
+    typedLit((0 until dim).map(d => planeWeight(p, d)))
 
   /** [[planeWeight]]'s numerator as an exact integer (w = k/1000 ⇒ k):
     * for INTEGER-valued vectors the sign test Σ v·k ≥ 0 stays in long
@@ -81,29 +133,78 @@ object Similarity {
     * bucket = Σ bit_p << p. Pure projection — no shuffle. */
   def lshBucket(emb: Column, numPlanes: Int, dim: Int): Column = {
     val bits = (0 until numPlanes).map { p =>
-      val plane = typedLit((0 until dim).map(d => planeWeight(p, d)))
-      when(dot(emb, plane) >= 0, lit(1L << p)).otherwise(lit(0L))
+      when(dot(emb, plane(p, dim)) >= 0, lit(1L << p)).otherwise(lit(0L))
     }
     bits.reduce(_ + _).cast("long")
   }
 
-  /** Bucketed approximate top-k: queries only scored against corpus
-    * vectors in the same hyperplane bucket. Recall < 1 by construction;
-    * the 100 TB path (bucket column becomes the partition/bucketing key
-    * of the stored corpus, so a query touches one bucket's files). */
-  def bucketedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                   numPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    val cb = fanOut(corpus).withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim))
-    val qb = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("bucket", lshBucket(col("q_emb"), numPlanes, dim))
-    val scored = cb.join(broadcast(qb), Seq("bucket"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk").cast("long").as("rk"))
+  /** One stored family's layout (the object doc's index model):
+    * `assign` maps (vec_id, embedding, …) rows to index rows carrying
+    * the partition column `key`; `parts` is the clustered write's
+    * partition count (None: AQE picks it). */
+  private final case class Layout(key: String, parts: Option[Int],
+                                  assign: DataFrame => DataFrame) {
+    /** Build (`overwrite`) or append: assign, then one [[clustered]] write. */
+    def write(vectors: DataFrame, path: String, mode: String): Unit =
+      clustered(assign(vectors), parts, key).mode(mode).parquet(path)
   }
+
+  /** The clustered partitioned write of every stored index: rows are
+    * repartitioned by the first partition column before `partitionBy`.
+    * Without it every task writes a file into every directory (tasks ×
+    * directories small files); with it each directory's rows land in
+    * one task, so one file per directory per write — the layout a
+    * 100 TB reader wants. `parts` pins the partition count where the
+    * directory count is known (one task per LSH bucket): an N-less
+    * repartition is AQE-coalescible, and on a small input AQE folds the
+    * whole write into ONE task that then creates all 2^planes files
+    * serially (measured 3.5 s vs 1.4 s for the bucketed build at sf0.1
+    * — small-file commit overhead is per-file and serial within a
+    * task). */
+  private def clustered(df: DataFrame, parts: Option[Int],
+                        keys: String*): DataFrameWriter[Row] = {
+    val key = col(keys.head)
+    parts.fold(df.repartition(key))(df.repartition(_, key)).write.partitionBy(keys: _*)
+  }
+
+  /** The bucketed family: the LSH bucket is a pure projection of the
+    * embedding (no model sidecar), one directory per bucket. */
+  private def lshLayout(numPlanes: Int, dim: Int): Layout =
+    Layout("bucket", Some(1 << numPlanes),
+      _.withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim)))
+
+  /** The cosine scorer of the bucketed and IVF families, in-flight and
+    * stored alike: index rows (vec_id, embedding, `key`) ⋈ broadcast
+    * probes (query_id, q_emb, `key`). A vector lives under exactly one
+    * key, so a multi-probe query never scores it twice. */
+  private def probeTopK(index: DataFrame, probes: DataFrame, key: String,
+                        k: Int): DataFrame =
+    topK(index.join(broadcast(probes), Seq(key))
+      .select(col("query_id"), col("vec_id"),
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim")), "cos_sim", k)
+
+  /** The bucketed family's probes: each query once per
+    * [[lshProbeBuckets]] bucket, typed `keyType` — a stored index's
+    * inferred partition-column type, so the join key needs no cast on
+    * the scan side (one would defeat the pruning). The generator must
+    * be the top-level expression of its projection (Spark rejects
+    * explode nested in a cast), so the cast is a second projection,
+    * still on the broadcast side. */
+  private def lshProbes(queries: DataFrame, numPlanes: Int, dim: Int, nprobe: Int,
+                        keyType: DataType = LongType): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      .select(col("query_id"), col("q_emb"),
+        explode(lshProbeBuckets(col("q_emb"), numPlanes, dim, nprobe)).as("probe"))
+      .select(col("query_id"), col("q_emb"), col("probe").cast(keyType).as("bucket"))
+
+  /** Bucketed approximate top-k: queries are scored only against corpus
+    * vectors in their own hyperplane bucket, or with `nprobe` > 1 in
+    * any of their [[lshProbeBuckets]]. Recall < 1 by construction; the
+    * 100 TB path is [[bucketedTopKStored]]. */
+  def bucketedTopK(corpus: DataFrame, queries: DataFrame, k: Int,
+                   numPlanes: Int = 8, dim: Int = 64, nprobe: Int = 1): DataFrame =
+    probeTopK(lshLayout(numPlanes, dim).assign(fanOut(corpus)),
+      lshProbes(queries, numPlanes, dim, nprobe), "bucket", k)
 
   /** Multi-probe LSH probe set (Lv et al. 2007, arXiv publication of
     * the perturbation idea; here the single-bit-flip variant): probe 0
@@ -124,8 +225,7 @@ object Similarity {
     if (nprobe == 1) array(base)
     else {
       val margins = (0 until numPlanes).map { p =>
-        val plane = typedLit((0 until dim).map(d => planeWeight(p, d)))
-        struct(round(abs(dot(emb, plane)), 6).as("m"), lit(p).as("p"))
+        struct(round(abs(dot(emb, plane(p, dim))), 6).as("m"), lit(p).as("p"))
       }
       val weakest = array_sort(array(margins: _*)) // (m asc, p asc)
       val flips = (0 until nprobe - 1).map { i =>
@@ -145,20 +245,9 @@ object Similarity {
   def writeBucketedCorpus(corpus: DataFrame, path: String,
                           numPlanes: Int = 8, dim: Int = 64,
                           metaCols: Seq[String] = Nil): Unit = {
-    fanOut(corpus.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*))
-      .withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim))
-      // Cluster by bucket before the partitioned write: without it every
-      // task writes a file into every bucket directory (tasks × 2^planes
-      // small files); with it each bucket's rows land in one task → one
-      // file per bucket per write — the layout a 100 TB reader wants.
-      // The partition count is pinned to the bucket count (one task per
-      // bucket): an N-less repartition is AQE-coalescible, and on a
-      // small input AQE folds the whole write into ONE task that then
-      // creates all 2^planes files serially (measured 3.5 s vs 1.4 s
-      // for this write at sf0.1 — guide §2.4/§6 small-file commit
-      // overhead is per-file and serial within a task).
-      .repartition(1 << numPlanes, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    lshLayout(numPlanes, dim).write(
+      fanOut(corpus.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*)),
+      path, "overwrite")
     // counts from the freshly-written footers — no second corpus pass
     // (the pre-round-19 form re-ran lshBucket over every row in a
     // dedicated aggregation job per build; at production widths that
@@ -186,7 +275,7 @@ object Similarity {
     * the post-write listing — so any difference means the manifest
     * missed data: a crash between an append's data write and its
     * manifest write, a concurrent append losing the read-merge-write
-    * race (out of [[appendToStoredBuckets]]'s single-writer contract,
+    * race (out of the single-writer contract in the object doc,
     * but detected rather than trusted), or streaming
     * [[writeIndexBatch]] ingest that deliberately defers manifest
     * maintenance to compaction. On drift the manifest is REBUILT
@@ -342,38 +431,17 @@ object Similarity {
     }
   }
 
-  /** Incremental maintenance of the stored bucket index: a batch of
-    * new vectors is bucketed with the SAME hyperplanes and appended in
-    * place. Parquet append + `partitionBy` writes files ONLY into the
-    * directories of buckets the batch actually hits — untouched
-    * buckets keep their exact files (spec-pinned), so maintaining a
-    * 100 TB index costs O(batch), never O(corpus), and readers of
-    * other buckets are undisturbed. Pairs with the incremental dedup
-    * ingest: dedup incrementally, index incrementally, no rebuilds.
+  /** Append a batch to the stored bucket index with the SAME
+    * hyperplanes: untouched buckets keep their exact files
+    * (spec-pinned), and readers of other buckets are undisturbed.
     * Queries via [[bucketedTopKStored]] see old ∪ new immediately
     * (ann03c proves parity with the all-at-once build against ann03's
-    * oracle).
-    *
-    * SINGLE-WRITER contract: the `_stats` maintenance below is a
-    * read-merge-write with no coordination — two concurrent appenders
-    * interleaving it lose one batch's counts permanently, and a crash
-    * between the data append and the manifest write leaves the
-    * manifest behind the data. Run appends from one writer at a time
-    * (the streaming ingest already serializes micro-batches; batch
-    * pipelines publish through [[graft.sinks.Publish]]'s one-writer
-    * versions). Both failure shapes are DETECTABLE after the fact:
-    * the manifest's recorded bytes no longer match the directory
-    * listing, which [[bucketStatsVerified]] checks and repairs with
-    * an authoritative index rescan — so consumers of the stats
-    * ([[hotBuckets]]) self-heal rather than trust the contract. */
+    * oracle). Single writer only (object doc); consumers of the stats
+    * ([[hotBuckets]]) self-heal through [[bucketStatsVerified]]. */
   def appendToStoredBuckets(newVectors: DataFrame, path: String,
                             numPlanes: Int = 8, dim: Int = 64): Unit = {
-    newVectors.select(col("vec_id"), col("embedding"))
-      .withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim))
-      // bucket-count partitions, not AQE-coalesced — see
-      // [[writeBucketedCorpus]]'s write comment.
-      .repartition(1 << numPlanes, col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+    lshLayout(numPlanes, dim).write(
+      newVectors.select(col("vec_id"), col("embedding")), path, "append")
     // Stats maintenance is O(batch ∪ buckets), never O(corpus): the
     // batch's counts (ONE agg job, bounded collect) merge into the
     // existing manifest driver-side — untouched buckets' rows carry
@@ -453,16 +521,12 @@ object Similarity {
     * streaming maintenance protocol already schedules.
     */
   def writeIndexBatch(vectors: DataFrame, path: String, batchId: Long,
-                      numPlanes: Int = 8, dim: Int = 64): Unit =
-    vectors.select(col("vec_id"), col("embedding"))
-      .withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim))
-      .withColumn("ingest_batch", lit(batchId))
-      // bucket-count partitions, not AQE-coalesced — see
-      // [[writeBucketedCorpus]]'s write comment.
-      .repartition(1 << numPlanes, col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket", "ingest_batch").parquet(path)
+                      numPlanes: Int = 8, dim: Int = 64): Unit = {
+    val lsh = lshLayout(numPlanes, dim)
+    clustered(lsh.assign(vectors.select(col("vec_id"), col("embedding")))
+        .withColumn("ingest_batch", lit(batchId)), lsh.parts, "bucket", "ingest_batch")
+      .mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
+  }
 
   /** Compaction for an append-maintained bucket index: every
     * [[appendToStoredBuckets]] batch adds files, and scan cost is
@@ -476,12 +540,8 @@ object Similarity {
   def compactStoredBuckets(spark: org.apache.spark.sql.SparkSession,
                            src: String, dest: String,
                            numBuckets: Int = 256): Unit = {
-    spark.read.parquet(src)
-      .select(col("vec_id"), col("embedding"), col("bucket"))
-      // bucket-count partitions, not AQE-coalesced — see
-      // [[writeBucketedCorpus]]'s write comment.
-      .repartition(numBuckets, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dest)
+    clustered(spark.read.parquet(src).select(col("vec_id"), col("embedding"), col("bucket")),
+      Some(numBuckets), "bucket").mode("overwrite").parquet(dest)
     // fresh manifest from the compacted footers — one file per bucket,
     // O(buckets) parallel metadata reads (was a count-only re-scan job
     // of dest before round 19).
@@ -489,13 +549,10 @@ object Similarity {
   }
 
   /** [[bucketedTopK]] against a STORED bucket-partitioned corpus
-    * ([[writeBucketedCorpus]]'s layout): the broadcast-hash join on the
-    * partition column triggers Spark's dynamic partition pruning, so
-    * the corpus scan reads ONLY the buckets the query set hashes into —
-    * the claim PlanSpec gates (DynamicPruningExpression in the scan's
-    * PartitionFilters). Results are identical to the in-flight
-    * [[bucketedTopK]] (ann03's oracle re-checks this form as
-    * ann03b). */
+    * ([[writeBucketedCorpus]]'s layout): the scan reads ONLY the buckets
+    * the query set probes (DynamicPruningExpression in the scan's
+    * PartitionFilters, PlanSpec-gated). ann03b/ann03e re-check ann03's
+    * and the multi-probe oracle on this form. */
   def bucketedTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                          queries: DataFrame, k: Int,
                          numPlanes: Int = 8, dim: Int = 64,
@@ -509,51 +566,9 @@ object Similarity {
     // the index written with the metadata columns (`metaCols` on
     // [[writeBucketedCorpus]]). Top-k ranks MATCHING vectors only.
     val corpus = pred.foldLeft(spark.read.parquet(path))(_.filter(_))
-    // Partition-column type inference yields IntegerType for the
-    // directory values; compute the query bucket in that exact type so
-    // the join key needs no cast (a cast on the partition column would
-    // defeat the pruning).
-    val bucketType = corpus.schema("bucket").dataType
-    // nprobe > 1 = multi-probe ([[lshProbeBuckets]]): the query fans
-    // out to its probe buckets BEFORE the broadcast, so the one
-    // corpus scan DPP-prunes to the union of all probe buckets. A
-    // corpus vector lives in exactly one bucket, so probes never
-    // double-score it. The generator must be the TOP-LEVEL expression
-    // of its projection (Spark rejects explode nested in a cast), so
-    // the partition-type cast happens in a second projection — still
-    // on the broadcast query side, so pruning is unaffected.
-    val qb = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .select(col("query_id"), col("q_emb"),
-        explode(lshProbeBuckets(col("q_emb"), numPlanes, dim, nprobe)).as("probe"))
-      .select(col("query_id"), col("q_emb"), col("probe").cast(bucketType).as("bucket"))
-    val scored = corpus.join(broadcast(qb), Seq("bucket"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk").cast("long").as("rk"))
-  }
-
-  /** In-flight multi-probe counterpart of [[bucketedTopK]]: queries
-    * score every corpus vector in any of their [[lshProbeBuckets]].
-    * Same results as the stored form with the same `nprobe` (ann03e
-    * checks the stored one against the oracle; SimilaritySpec pins
-    * in-flight ≡ stored). */
-  def bucketedTopKMultiProbe(corpus: DataFrame, queries: DataFrame, k: Int,
-                             numPlanes: Int = 8, dim: Int = 64,
-                             nprobe: Int = 4): DataFrame = {
-    val cb = fanOut(corpus).withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim))
-    val qb = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("bucket",
-        explode(lshProbeBuckets(col("q_emb"), numPlanes, dim, nprobe)))
-    val scored = cb.join(broadcast(qb), Seq("bucket"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk").cast("long").as("rk"))
+    // partition-column inference types `bucket` as IntegerType
+    probeTopK(corpus, lshProbes(queries, numPlanes, dim, nprobe,
+      corpus.schema("bucket").dataType), "bucket", k)
   }
 
   /** Driver-side materialization of a bounded MODEL table — k centroids
@@ -691,12 +706,12 @@ object Similarity {
   }
 
   /** IVF-style ANN top-k: the corpus is partitioned into inverted lists
-    * by nearest centroid and each query probes only its own centroid's
-    * list (nprobe=1). Centroids come from [[kmeansCentroids]]
+    * by nearest centroid and each query probes only the lists of its
+    * `nprobe` nearest centroids. Centroids come from [[kmeansCentroids]]
     * (deterministic Lloyd's; `kmeansIters = 0` degenerates to the
-    * first-`numCentroids`-vectors init). The partition/probe machinery
-    * is the part that matters at scale: the inverted-list id becomes
-    * the storage partition key, so a query touches one partition. */
+    * first-`numCentroids`-vectors init). At scale the inverted-list id
+    * is the storage partition key ([[ivfTopKStored]]), so a query
+    * touches `nprobe` partitions. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               numCentroids: Int = 16, kmeansIters: Int = 2,
               nprobe: Int = 1,
@@ -705,26 +720,28 @@ object Similarity {
     // production shape (one model, many serving calls), and what lets
     // ann07's ladder train each model exactly once
     val cents = centsOpt.getOrElse(kmeansCentroids(corpus, numCentroids, kmeansIters))
-    // Corpus lists stay disjoint (nprobe applies to the QUERY side
-    // only), so a probed corpus vector is scored exactly once even
-    // when a query probes several lists.
     // NOT fanned out (round 19): ivfAssign is one compiled
     // NearestModelEntry loop per row — nothing like the PQ/codec
     // chains that justify the parallelism floor — and the driver
     // measured the added round-robin exchange as a net regression
     // (ann04 1.95→2.66 s, ann05 1.81→2.88 s at sf0.1).
-    val ca = ivfAssign(corpus.select(col("vec_id"), col("embedding")), cents)
-    val qa = ivfAssignN(queries.select(col("vec_id"), col("embedding")), cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("centroid_id"),
-        col("embedding").as("q_emb"))
-    val scored = ca.join(broadcast(qa), Seq("centroid_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk").cast("long").as("rk"))
+    probeTopK(ivfLayout(cents).assign(corpus),
+      ivfProbes(queries, cents, nprobe, "centroid_id"), "centroid_id", k)
   }
+
+  /** The IVF family: nearest-centroid list id, `_centroids` sidecar. */
+  private def ivfLayout(cents: DataFrame): Layout = Layout("centroid_id", None,
+    v => ivfAssign(v.select(col("vec_id"), col("embedding")), cents))
+
+  /** The IVF families' probes: each query (query_id, q_emb) once per
+    * centroid of its `nprobe` nearest, as `key` in `keyType` (see
+    * [[lshProbes]]). Corpus lists stay disjoint — nprobe applies to
+    * the query side only. */
+  private def ivfProbes(queries: DataFrame, cents: DataFrame, nprobe: Int,
+                        key: String, keyType: DataType = LongType): DataFrame =
+    ivfAssignN(queries.select(col("vec_id"), col("embedding")), cents, nprobe)
+      .select(col("vec_id").as("query_id"), col("centroid_id").cast(keyType).as(key),
+        col("embedding").as("q_emb"))
 
   /** Materialize the corpus as STORED inverted lists: trained k-means
     * centroids ([[kmeansCentroids]] — deterministic), nearest-centroid
@@ -737,56 +754,28 @@ object Similarity {
                      numCentroids: Int = 16, kmeansIters: Int = 2): Unit = {
     val cents = kmeansCentroids(corpus, numCentroids, kmeansIters)
     cents.write.mode("overwrite").parquet(s"$path/_centroids")
-    // assignment not fanned out (round 19): the clustered-write
-    // repartition right below already provides the exchange, so the
-    // extra round-robin shuffle was pure cost (the ann04b regression).
-    ivfAssign(corpus.select(col("vec_id"), col("embedding")), cents)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
+    // assignment not fanned out (round 19): the clustered write's
+    // repartition already provides the exchange, so the extra
+    // round-robin shuffle was pure cost (the ann04b regression).
+    ivfLayout(cents).write(corpus, s"$path/lists", "overwrite")
   }
 
-  /** Incremental maintenance of the stored IVF index: a batch of new
-    * vectors is assigned with the index's OWN centroids (read from
-    * `_centroids` — no retraining; the index's partitioning contract
-    * is the frozen centroid set) and parquet-appended ONLY into the
-    * inverted-list directories the batch lands in — O(batch), never
-    * O(corpus), exactly like [[appendToStoredBuckets]]. Periodic
-    * retraining is a REBUILD ([[writeIvfCorpus]] to a fresh path +
-    * manifest flip), not an append — centroid drift would silently
-    * re-partition queries away from old vectors. */
+  /** Append a batch to the stored IVF index, assigned with the index's
+    * frozen `_centroids` (not fanned out — see [[writeIvfCorpus]]). */
   def appendToIvfCorpus(spark: org.apache.spark.sql.SparkSession,
-                        newVectors: DataFrame, path: String): Unit = {
-    val cents = spark.read.parquet(s"$path/_centroids")
-    // not fanned out — see [[writeIvfCorpus]]'s assignment comment.
-    ivfAssign(newVectors.select(col("vec_id"), col("embedding")), cents)
-      .repartition(col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id").parquet(s"$path/lists")
-  }
+                        newVectors: DataFrame, path: String): Unit =
+    ivfLayout(spark.read.parquet(s"$path/_centroids"))
+      .write(newVectors, s"$path/lists", "append")
 
   /** [[ivfTopK]] against a STORED inverted-list corpus
-    * ([[writeIvfCorpus]]'s layout): queries are assigned to their
-    * `nprobe` nearest centroids (read from the index's own centroid
-    * table — no retraining) and the broadcast equi-join on the
-    * partition column dynamically prunes the list scan to the probed
-    * centroids' directories, exactly like the LSH path (PlanSpec
-    * gates it). Results are identical to the in-flight [[ivfTopK]]
-    * with the same constants (ann04b re-checks ann04's oracle). */
+    * ([[writeIvfCorpus]]'s layout), probing with the index's own
+    * centroids: the scan reads only the probed lists' directories
+    * (PlanSpec-gated; ann04b re-checks ann04's oracle). */
   def ivfTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     val lists = spark.read.parquet(s"$path/lists")
-    val cents = spark.read.parquet(s"$path/_centroids")
-    val cidType = lists.schema("centroid_id").dataType
-    val qa = ivfAssignN(queries.select(col("vec_id"), col("embedding")), cents, nprobe)
-      .select(col("vec_id").as("query_id"),
-        col("centroid_id").cast(cidType).as("centroid_id"),
-        col("embedding").as("q_emb"))
-    val scored = lists.join(broadcast(qa), Seq("centroid_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk").cast("long").as("rk"))
+    probeTopK(lists, ivfProbes(queries, spark.read.parquet(s"$path/_centroids"), nprobe,
+      "centroid_id", lists.schema("centroid_id").dataType), "centroid_id", k)
   }
 
   /** Long-form subspace split for product quantization: one row per
@@ -981,18 +970,6 @@ object Similarity {
     pqAdc(codes, cb, queries, k, m, subDim)
   }
 
-  /** IVF-PQ — the production ANN composition (the FAISS IVFPQ shape,
-    * here without residual encoding so the whole chain stays
-    * oracle-checkable): a coarse k-means quantizer restricts each
-    * query's candidates to its `nprobe` nearest inverted lists, and
-    * trained PQ codes — not full vectors — score those candidates via
-    * broadcast lookup tables. Per-query cost: m·K LUT dots + the
-    * probed lists' code rows (m small ints each); the full-precision
-    * corpus is read only at index-build time. Recall compounds the
-    * list-restriction loss (ann04/05's lever) with quantization loss
-    * (ann06's lever) — both knobs measured in ann07's ladder;
-    * SimilaritySpec pins `nprobe = numCentroids` ≡ the global trained
-    * PQ ranking (no restriction ⇒ identical scores). */
   /** Scalar-quantization (SQ8) ANN — the third compression family
     * next to PQ (ann06/ann10) and JL random projection (ann08), and
     * the Faiss `SQ8` counterpart: per-dimension [lo, hi] trained on
@@ -1046,17 +1023,24 @@ object Similarity {
       }).as("r_emb"))
     val q = queries.select(col("vec_id").as("query_id"),
       toDouble(col("embedding")).as("q_emb"))
-    val scored = ra.crossJoin(broadcast(q))
+    topK(ra.crossJoin(broadcast(q))
       .select(col("query_id"), col("vec_id"),
         round(dot(col("q_emb"), col("r_emb")) /
-          (norm(col("q_emb")) * norm(col("r_emb"))), 6).as("sq_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("sq_sim"),
-        col("rk").cast("long").as("rk"))
+          (norm(col("q_emb")) * norm(col("r_emb"))), 6).as("sq_sim")), "sq_sim", k)
   }
 
+  /** IVF-PQ — the production ANN composition (the FAISS IVFPQ shape,
+    * here without residual encoding so the whole chain stays
+    * oracle-checkable): a coarse k-means quantizer restricts each
+    * query's candidates to its `nprobe` nearest inverted lists, and
+    * trained PQ codes — not full vectors — score those candidates via
+    * broadcast lookup tables. Per-query cost: m·K LUT dots + the
+    * probed lists' code rows (m small ints each); the full-precision
+    * corpus is read only at index-build time. Recall compounds the
+    * list-restriction loss (ann04/05's lever) with quantization loss
+    * (ann06's lever) — both knobs measured in ann07's ladder;
+    * SimilaritySpec pins `nprobe = numCentroids` ≡ the global trained
+    * PQ ranking (no restriction ⇒ identical scores). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 numCentroids: Int = 16, kmIters: Int = 2, m: Int = 16,
                 subDim: Int = 4, codebookSize: Int = 64, pqIters: Int = 2,
@@ -1072,129 +1056,40 @@ object Similarity {
         centsOpt.getOrElse(kmeansCentroids(corpus, numCentroids, kmIters))),
       "ivfpq codebook" -> (() =>
         cbOpt.getOrElse(pqCodebookTrained(corpus, m, subDim, codebookSize, pqIters))))
-    // ONE fused corpus pass (round 19 — the writeIvfPqCorpus /
-    // ivfPqTopKStored shape applied in-flight): coarse list and PQ
-    // codes are both per-row functions of the literal models, so the
-    // old two-scan build (lists, codes) and its codes ⋈ pairs
-    // reassembly join on vec_id — a corpus-code-table shuffle —
-    // collapse into one projection joined to the broadcast probe set
-    // on the list id. A corpus vector lives in exactly one list, so
-    // multi-probe never duplicates a candidate pair, and the scoring
-    // below is the stored index's scorer verbatim (spec-pinned
-    // in-flight ≡ stored).
-    val centModel = modelRows(cents, "centroid_id", "c_emb")
-    val codes = pqAssignL2(fanOut(corpus.select(col("vec_id"), col("embedding")))
-        .withColumn("list_id", nearestCentroid(centModel, col("embedding"))),
-        codebookRows(cb), m, subDim)
-      .select(col("vec_id"), col("list_id"), col("sub"),
-        col("centroid_id").as("code"))
+    // ONE fused corpus pass (round 19): coarse list and PQ codes are
+    // both per-row functions of the literal models, so the corpus is
+    // assigned exactly as the stored index is built, and scored by the
+    // stored index's scorer.
+    val codes = ivfPqLayout(modelRows(cents, "centroid_id", "c_emb"), codebookRows(cb),
+      m, subDim).assign(fanOut(corpus.select(col("vec_id"), col("embedding"))))
+    ivfPqScore(codes, ivfProbes(queries, cents, nprobe, "list_id"), cb, queries, k, m, subDim)
+  }
+
+  /** The IVF-PQ family: one fused projection gives each vector its
+    * coarse list (`list_id`, the partition column) and its m PQ codes —
+    * rows (vec_id, list_id, sub, code); sidecars `_centroids` and
+    * `_codebook`. */
+  private def ivfPqLayout(centModel: Seq[(Long, Seq[Double])],
+                          cb: Map[Int, Seq[(Long, Seq[Double])]],
+                          m: Int, subDim: Int): Layout = Layout("list_id", None, v =>
+    pqAssignL2(v.select(col("vec_id"), col("embedding"))
+        .withColumn("list_id", nearestCentroid(centModel, col("embedding"))), cb, m, subDim)
+      .select(col("vec_id"), col("list_id"), col("sub"), col("centroid_id").as("code")))
+
+  /** The IVF-PQ scorer (asymmetric distance computation), in-flight and
+    * stored alike. ONE scan of the code rows ⋈ broadcast probes on
+    * `list_id` fans each candidate out to its probing queries; then
+    * pq_sim = Σ_s lut(q, s, code) / (‖q‖ · √Σ_s ‖codeword‖²), with one
+    * (q_sub · codeword) LUT per query from the codebook `cb` (sub,
+    * centroid_id, c_emb). A corpus vector lives in one list, so
+    * multi-probe never duplicates a candidate pair. */
+  private def ivfPqScore(codes: DataFrame, probes: DataFrame, cb: DataFrame,
+                         queries: DataFrame, k: Int, m: Int, subDim: Int): DataFrame = {
     val qs = queries.select(col("vec_id").as("query_id"), col("embedding"))
-    val probes = ivfAssignN(
-        queries.select(col("vec_id"), col("embedding")), cents, nprobe)
-      .select(col("vec_id").as("query_id"), col("centroid_id").as("list_id"))
     val cbn = cb.select(col("sub"), col("centroid_id").as("code"),
       dot(col("c_emb"), col("c_emb")).as("__n2"))
-    // ONE scan fans candidate code rows out to their probing queries
     val cand = codes.join(broadcast(probes), Seq("list_id"))
     // reconstructed norms per CANDIDATE vector only (query-independent —
-    // dedup the multi-query fan-out first; candidate-sized shuffle).
-    // The old pqAdc form aggregated norms over the ENTIRE code table
-    // even though the inner join with the candidate scores discarded
-    // every non-candidate row.
-    val rec = cand.select(col("vec_id"), col("sub"), col("code")).distinct()
-      .join(broadcast(cbn), Seq("sub", "code"))
-      .groupBy(col("vec_id")).agg(sum(col("__n2")).as("__rn2"))
-    val lut = subspaces(qs, "query_id", m, subDim)
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("centroid_id").as("code"),
-        dot(col("sub_emb"), col("c_emb")).as("__dp"))
-    val qn = qs.select(col("query_id"), norm(col("embedding")).as("__qn"))
-    val sc = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("vec_id"), col("query_id")).agg(sum(col("__dp")).as("__adp"))
-    val scored = sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("pq_sim"),
-        col("rk").cast("long").as("rk"))
-  }
-
-  /** Materialize the DEPLOYABLE IVF-PQ index: PQ code rows partitioned
-    * by coarse list (`path/lists/list_id=N/…`), trained centroids and
-    * codebook alongside (`_centroids`, `_codebook`) so queries never
-    * retrain — and never touch the full-precision corpus at all. The
-    * stored bytes are m small ints per vector: at 100 TB of vectors
-    * the index is ~m/(4·dim) of the corpus (~6% at m=16, dim=64
-    * float). */
-  def writeIvfPqCorpus(corpus: DataFrame, path: String,
-                       numCentroids: Int = 16, kmIters: Int = 2,
-                       m: Int = 16, subDim: Int = 4,
-                       codebookSize: Int = 64, pqIters: Int = 2): Unit = {
-    val cents = kmeansCentroids(corpus, numCentroids, kmIters)
-    val cb = pqCodebookTrained(corpus, m, subDim, codebookSize, pqIters)
-    cents.write.mode("overwrite").parquet(s"$path/_centroids")
-    cb.write.mode("overwrite").parquet(s"$path/_codebook")
-    // codes AND coarse list in ONE fused projection over one corpus
-    // scan: both are per-row functions of the literal models, so the
-    // old two-branch build (codes ⋈ lists on vec_id — a corpus-sized
-    // join) collapses into the clustered-write shuffle alone.
-    val centModel = modelRows(cents, "centroid_id", "c_emb")
-    pqAssignL2(fanOut(corpus.select(col("vec_id"), col("embedding")))
-        .withColumn("__list", nearestCentroid(centModel, col("embedding"))),
-        codebookRows(cb), m, subDim)
-      .select(col("vec_id"), col("sub"), col("centroid_id").as("code"),
-        col("__list").as("list_id"))
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(s"$path/lists")
-  }
-
-  /** Incremental maintenance of the stored IVF-PQ index: a new batch
-    * is coarse-assigned with the index's FROZEN centroids and encoded
-    * with its FROZEN codebook (retraining either model = rebuild +
-    * manifest flip, never an append — drift would strand old codes),
-    * then parquet-appended only into the touched lists' directories:
-    * O(batch) at any corpus size, same contract as
-    * [[appendToStoredBuckets]] / [[appendToIvfCorpus]]. */
-  def appendToIvfPqCorpus(spark: org.apache.spark.sql.SparkSession,
-                          newVectors: DataFrame, path: String,
-                          m: Int = 16, subDim: Int = 4): Unit = {
-    val cents = spark.read.parquet(s"$path/_centroids")
-    val cb = spark.read.parquet(s"$path/_codebook")
-    val centModel = modelRows(cents, "centroid_id", "c_emb")
-    pqAssignL2(newVectors.select(col("vec_id"), col("embedding"))
-        .withColumn("__list", nearestCentroid(centModel, col("embedding"))),
-        codebookRows(cb), m, subDim)
-      .select(col("vec_id"), col("sub"), col("centroid_id").as("code"),
-        col("__list").as("list_id"))
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/lists")
-  }
-
-  /** Query the stored IVF-PQ index: the probe join DPP-prunes the code
-    * scan to the probed lists' directories (the ann04b treatment), and
-    * ADC scores the pruned code rows via broadcast LUTs from the stored
-    * codebook. Result-identical to the in-flight [[ivfPqTopK]] with the
-    * same parameters (spec-pinned) — the layout changes cost, never
-    * results. */
-  def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
-                      queries: DataFrame, k: Int, nprobe: Int = 1,
-                      m: Int = 16, subDim: Int = 4): DataFrame = {
-    val cents = spark.read.parquet(s"$path/_centroids")
-    val cb = spark.read.parquet(s"$path/_codebook")
-    val codesAll = spark.read.parquet(s"$path/lists")
-    val listType = codesAll.schema("list_id").dataType
-    val qs = queries.select(col("vec_id").as("query_id"), col("embedding"))
-    val probes = ivfAssignN(
-        queries.select(col("vec_id"), col("embedding")), cents, nprobe)
-      .select(col("vec_id").as("query_id"),
-        col("centroid_id").cast(listType).as("list_id"))
-    val cbn = cb.select(col("sub"), col("centroid_id").as("code"),
-      dot(col("c_emb"), col("c_emb")).as("__n2"))
-    // ONE DPP-pruned scan fans candidate code rows out to their queries
-    val cand = codesAll.join(broadcast(probes), Seq("list_id"))
-    // reconstructed norms per candidate vector (query-independent —
     // dedup the multi-query fan-out first; candidate-sized shuffle)
     val rec = cand.select(col("vec_id"), col("sub"), col("code")).distinct()
       .join(broadcast(cbn), Seq("sub", "code"))
@@ -1206,14 +1101,77 @@ object Similarity {
     val qn = qs.select(col("query_id"), norm(col("embedding")).as("__qn"))
     val sc = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
       .groupBy(col("vec_id"), col("query_id")).agg(sum(col("__dp")).as("__adp"))
-    val scored = sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
+    topK(sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("pq_sim"),
-        col("rk").cast("long").as("rk"))
+        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim")), "pq_sim", k)
+  }
+
+  /** Materialize the DEPLOYABLE IVF-PQ index: PQ code rows partitioned
+    * by coarse list (`path/lists/list_id=N/…`), trained centroids and
+    * codebook alongside (`_centroids`, `_codebook`) so queries never
+    * retrain — and never touch the full-precision corpus at all. The
+    * stored bytes are m small ints per vector: at 100 TB of vectors
+    * the index is ~m/(4·dim) of the corpus (~6% at m=16, dim=64
+    * float). The codebook fixes the index's shape (m, subDim): appends
+    * and queries read it from there. */
+  def writeIvfPqCorpus(corpus: DataFrame, path: String,
+                       numCentroids: Int = 16, kmIters: Int = 2,
+                       m: Int = 16, subDim: Int = 4,
+                       codebookSize: Int = 64, pqIters: Int = 2): Unit = {
+    val cents = kmeansCentroids(corpus, numCentroids, kmIters)
+    val cb = pqCodebookTrained(corpus, m, subDim, codebookSize, pqIters)
+    cents.write.mode("overwrite").parquet(s"$path/_centroids")
+    cb.write.mode("overwrite").parquet(s"$path/_codebook")
+    ivfPqLayout(modelRows(cents, "centroid_id", "c_emb"), codebookRows(cb), m, subDim)
+      .write(fanOut(corpus.select(col("vec_id"), col("embedding"))), s"$path/lists", "overwrite")
+  }
+
+  /** Append a batch to the stored IVF-PQ index, coarse-assigned with its
+    * frozen `_centroids` and encoded with its frozen `_codebook`, at the
+    * codebook's own shape. */
+  def appendToIvfPqCorpus(spark: org.apache.spark.sql.SparkSession,
+                          newVectors: DataFrame, path: String): Unit = {
+    val cents = modelRows(spark.read.parquet(s"$path/_centroids"), "centroid_id", "c_emb")
+    val cb = storedCodebook(spark, path)
+    val (m, subDim) = pqShape(cb)
+    ivfPqLayout(cents, cb, m, subDim).write(newVectors, s"$path/lists", "append")
+  }
+
+  /** Query the stored IVF-PQ index: the probe join DPP-prunes the code
+    * scan to the probed lists' directories (the ann04b treatment; ann10b
+    * re-checks the in-flight oracle), and [[ivfPqScore]] scores the
+    * pruned code rows with the stored codebook at its own shape. */
+  def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
+                      queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
+    val cents = spark.read.parquet(s"$path/_centroids")
+    val cb = spark.read.parquet(s"$path/_codebook")
+    val codes = spark.read.parquet(s"$path/lists")
+    val (m, subDim) = pqShape(storedCodebook(spark, path))
+    ivfPqScore(codes, ivfProbes(queries, cents, nprobe, "list_id",
+      codes.schema("list_id").dataType), cb, queries, k, m, subDim)
+  }
+
+  /** A stored index's `_codebook` read on the driver ([[readParquetDriver]]:
+    * no Spark job), in [[codebookRows]]' form. */
+  private def storedCodebook(spark: org.apache.spark.sql.SparkSession,
+                             path: String): Map[Int, Seq[(Long, Seq[Double])]] =
+    readParquetDriver(spark, s"$path/_codebook") { g =>
+      val emb = g.getGroup("c_emb", 0) // Spark's 3-level list: list.element
+      (g.getInteger("sub", 0), (g.getLong("centroid_id", 0),
+        (0 until emb.getFieldRepetitionCount(0)).map(i => emb.getGroup(0, i).getDouble(0, 0))))
+    }.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sortBy(_._1) }
+
+  /** A codebook's shape: m = its subspace count, subDim = its entry
+    * length. A search or encode at another shape would slice queries
+    * against the wrong codewords, and `graft_array_dot` returns null on
+    * a length mismatch, so every score would be null. */
+  private def pqShape(cb: Map[Int, Seq[(Long, Seq[Double])]]): (Int, Int) = {
+    val lens = cb.values.flatten.map(_._2.size).toSet
+    require(lens.size == 1,
+      s"PQ codebook entries must exist and share one length, got lengths: $lens")
+    val m = cb.keys.max + 1
+    requireCodebook(cb, m)
+    (m, lens.head)
   }
 
   /** IVF-PQ with exact re-ranking (the FAISS IndexRefineFlat shape):
@@ -1237,16 +1195,11 @@ object Similarity {
       .select(col("query_id"), col("vec_id"))
     val qs = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("__qemb"))
-    val exact = corpus.select(col("vec_id"), col("embedding"))
+    topK(corpus.select(col("vec_id"), col("embedding"))
       .join(cand, Seq("vec_id"))
       .join(broadcast(qs), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("embedding"), col("__qemb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    exact.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"),
-        col("rk").cast("long").as("rk"))
+        round(cosine(col("embedding"), col("__qemb")), 6).as("cos_sim")), "cos_sim", k)
   }
 
   /** Shared ADC scoring: given the code table and its codebook, score
@@ -1266,19 +1219,13 @@ object Similarity {
       .select(col("query_id"), col("sub"), col("centroid_id"),
         dot(col("sub_emb"), col("c_emb")).as("__dp"))
     val qn = qs.select(col("query_id"), norm(col("embedding")).as("__qn"))
-    // (The IVF-PQ candidate-restricted variant lives inline in
-    // [[ivfPqTopK]] since round 19 — it scores from the fused
-    // list+code projection, so this global form only serves the
-    // whole-corpus PQ scorers.)
+    // Every code row meets every query here; the candidate-restricted
+    // IVF-PQ form is [[ivfPqScore]].
     val sc = codes.join(broadcast(lut), Seq("sub", "centroid_id"))
       .groupBy(col("vec_id"), col("query_id")).agg(sum(col("__dp")).as("__adp"))
-    val scored = sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
+    topK(sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
       .select(col("query_id"), col("vec_id"),
-        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("pq_sim").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("pq_sim"), col("rk").cast("long").as("rk"))
+        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim")), "pq_sim", k)
   }
 
   /** Graph-based ANN (the fourth family next to hash/LSH, tree/IVF,
@@ -1320,10 +1267,7 @@ object Similarity {
         .join(broadcast(q), Seq("query_id"))
         .select(col("query_id"), col("vec_id"),
           round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    def top(scored: DataFrame, n: Int): DataFrame =
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= n)
+    def top(scored: DataFrame, n: Int): DataFrame = topK(scored, "cos_sim", n)
     val s0 = Stages.stage(score(
       q.select(col("query_id")).crossJoin(broadcast(seeds.select(col("vec_id"))))))
     var beam = top(s0, beamWidth).select("query_id", "vec_id")
@@ -1341,8 +1285,6 @@ object Similarity {
       beam = top(scored, beamWidth).select("query_id", "vec_id")
     }
     top(visited.distinct(), k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"),
-        col("rk").cast("long").as("rk"))
   }
 
   /** STORED kNN-graph index (round-17 verdict item 7 — the ann03b
@@ -1358,29 +1300,16 @@ object Similarity {
   def writeGraphIndex(corpus: DataFrame, path: String, k: Int,
                       numPlanes: Int = 8, dim: Int = 64,
                       maxBucketSize: Option[Int] = None): Unit = {
-    // Round 19: ONE bucket-stats pass serves both the hot-bucket cap
-    // and the _seeds sidecar (was: knnGraph's cap agg and bucketSeeds
-    // each ran their own corpus-scale lshBucket pass), and the edges
-    // carry their source node's bucket out of the self-join (was: a
-    // corpus-scale join on vec_id re-deriving the partition column).
-    // Stats frame is ≤ 2^numPlanes rows — staged so both consumers
-    // share it.
-    val stats = Stages.stage(corpus
-      .select(col("vec_id"), lshBucket(col("embedding"), numPlanes, dim).as("__bk"))
-      .groupBy(col("__bk"))
-      .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("__bc")))
-    val kept = maxBucketSize match {
-      case Some(cap) => stats.filter(col("__bc") <= cap)
-      case None      => stats
-    }
+    // ONE bucket-stats pass serves both the hot-bucket cap and the
+    // _seeds sidecar, and the edges carry their source node's bucket
+    // out of the self-join. Staged (≤ 2^numPlanes rows) so both
+    // consumers share it.
+    val kept = cappedBuckets(Stages.stage(bucketCounts(corpus, numPlanes, dim)),
+      maxBucketSize)
     val edges = knnGraphEdges(corpus, k, numPlanes, dim,
-      maxBucketSize = None,
-      keepBuckets = maxBucketSize.map(_ => kept.select(col("__bk"))))
-    edges.withColumnRenamed("__bk", "bucket")
-      // bucket-count partitions, not AQE-coalesced — see
-      // [[writeBucketedCorpus]]'s write comment.
-      .repartition(1 << numPlanes, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+      maxBucketSize.map(_ => kept.select(col("__bk"))))
+    clustered(edges.withColumnRenamed("__bk", "bucket"), Some(1 << numPlanes), "bucket")
+      .mode("overwrite").parquet(path)
     kept.select(col("vec_id"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_seeds")
   }
@@ -1491,11 +1420,6 @@ object Similarity {
     stored.join(broadcast(frontier), Seq("bucket", "vec_id"))
       .select(col("query_id"), col("nbr_id").as("vec_id"))
 
-  /** [[graphFrontierExpansion]] over the adjacency stored at `path`. */
-  def graphFrontierExpansion(spark: org.apache.spark.sql.SparkSession,
-                             path: String, frontier: DataFrame): DataFrame =
-    graphFrontierExpansion(spark.read.parquet(path), frontier)
-
   /** One round's expansion exactly as [[beamSearchTopKStored]] builds
     * it: the driver-side frontier rows (query_id, vec_id, bucket in the
     * partition-column type) as a local relation against the opened
@@ -1514,19 +1438,20 @@ object Similarity {
     * the min-id vector of every (capped) LSH bucket — one deterministic
     * seed per graph component, ≤ 2^numPlanes rows. */
   def bucketSeeds(corpus: DataFrame, numPlanes: Int = 8, dim: Int = 64,
-                  maxBucketSize: Option[Int] = None): DataFrame = {
-    val b = corpus.select(col("vec_id"),
-      lshBucket(col("embedding"), numPlanes, dim).as("__bk"))
-    val kept = maxBucketSize match {
-      case Some(cap) =>
-        b.groupBy(col("__bk")).agg(min(col("vec_id")).as("vec_id"),
-            count(lit(1)).as("__bc"))
-          .filter(col("__bc") <= cap)
-      case None =>
-        b.groupBy(col("__bk")).agg(min(col("vec_id")).as("vec_id"))
-    }
-    kept.select(col("vec_id"))
-  }
+                  maxBucketSize: Option[Int] = None): DataFrame =
+    cappedBuckets(bucketCounts(corpus, numPlanes, dim), maxBucketSize).select(col("vec_id"))
+
+  /** Per-LSH-bucket stats of the graph family, ≤ 2^numPlanes rows:
+    * (`__bk`, `vec_id` = the bucket's min id, `__bc` = its size). The
+    * seeds, the stored graph's `_seeds` and the hot-bucket cap all read
+    * this one aggregate; unused columns are pruned from it. */
+  private def bucketCounts(corpus: DataFrame, numPlanes: Int, dim: Int): DataFrame =
+    corpus.select(col("vec_id"), lshBucket(col("embedding"), numPlanes, dim).as("__bk"))
+      .groupBy(col("__bk"))
+      .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("__bc"))
+
+  private def cappedBuckets(stats: DataFrame, maxBucketSize: Option[Int]): DataFrame =
+    maxBucketSize.fold(stats)(cap => stats.filter(col("__bc") <= cap))
 
   /** Batch kNN-graph: every corpus vector's top-k neighbors, LSH-
     * bucket-blocked (the input to graph-based dedup, kNN-LM data
@@ -1549,41 +1474,28 @@ object Similarity {
   def knnGraph(corpus: DataFrame, k: Int,
                numPlanes: Int = 8, dim: Int = 64,
                maxBucketSize: Option[Int] = None): DataFrame =
-    knnGraphEdges(corpus, k, numPlanes, dim, maxBucketSize).drop("__bk")
+    knnGraphEdges(corpus, k, numPlanes, dim, maxBucketSize.map(cap =>
+      cappedBuckets(bucketCounts(fanOut(corpus), numPlanes, dim), Some(cap))
+        .select(col("__bk")))).drop("__bk")
 
   /** [[knnGraph]] keeping each source node's LSH bucket (`__bk`, the
     * self-join's own blocking key) in the output — the stored-graph
     * writer partitions by it without a corpus-scale re-join (round 19).
-    * `keepBuckets` (a precomputed ≤ 2^numPlanes-row keep set) replaces
-    * the internal hot-bucket cap agg when the caller already has one. */
-  private[graft] def knnGraphEdges(corpus: DataFrame, k: Int,
-                                   numPlanes: Int = 8, dim: Int = 64,
-                                   maxBucketSize: Option[Int] = None,
-                                   keepBuckets: Option[DataFrame] = None): DataFrame = {
+    * `keepBuckets` (≤ 2^numPlanes rows of `__bk`) is the hot-bucket
+    * cap's keep set, broadcast into the join; None keeps every bucket. */
+  private[graft] def knnGraphEdges(corpus: DataFrame, k: Int, numPlanes: Int, dim: Int,
+                                   keepBuckets: Option[DataFrame]): DataFrame = {
     val b0 = fanOut(corpus).select(col("vec_id"), col("embedding"),
       lshBucket(col("embedding"), numPlanes, dim).as("__bk"))
-    val b = keepBuckets match {
-      case Some(keep) => b0.join(broadcast(keep), Seq("__bk"))
-      case None => maxBucketSize match {
-        case Some(cap) =>
-          val keep = b0.groupBy(col("__bk")).agg(count(lit(1)).as("__bc"))
-            .filter(col("__bc") <= cap).select(col("__bk"))
-          b0.join(keep, Seq("__bk"))
-        case None => b0
-      }
-    }
+    val b = keepBuckets.fold(b0)(keep => b0.join(broadcast(keep), Seq("__bk")))
     val a = b.select(col("__bk"), col("vec_id"), col("embedding"))
     val bb = b.select(col("__bk"), col("vec_id").as("nbr_id"),
       col("embedding").as("__nemb"))
-    val scored = a.join(bb, Seq("__bk"))
+    topK(a.join(bb, Seq("__bk"))
       .filter(col("vec_id") =!= col("nbr_id"))
-      .select(col("__bk"), col("vec_id"), col("nbr_id"),
-        round(cosine(col("embedding"), col("__nemb")), 6).as("cos_sim"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_sim").desc, col("nbr_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("vec_id"), col("nbr_id"), col("cos_sim"),
-        col("rk").cast("long").as("rk"), col("__bk"))
+      .select(col("vec_id"), col("nbr_id"),
+        round(cosine(col("embedding"), col("__nemb")), 6).as("cos_sim"), col("__bk")),
+      "cos_sim", k, group = "vec_id", id = "nbr_id")
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1681,15 +1593,10 @@ object Similarity {
       .filter(col("cos_sim") > threshold)
   }
 
-  /** Deterministic random-projection matrix component (j, d): the
-    * [[planeWeight]] md5 derivation under an `rp_` namespace, so the
-    * projection directions are independent of the LSH hyperplanes. */
-  def rpWeight(j: Int, d: Int): Double = {
-    val mdigest = java.security.MessageDigest.getInstance("MD5")
-    val hex = mdigest.digest(s"rp_${j}_$d".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.substring(0, 8)
-    ((java.lang.Long.parseLong(hex, 16) % 2001) - 1000).toDouble / 1000.0
-  }
+  /** Random-projection matrix component (j, d): [[md5Weight]] under an
+    * `rp_` namespace, so the projection directions are independent of
+    * the LSH hyperplanes. */
+  def rpWeight(j: Int, d: Int): Double = md5Weight(s"rp_${j}_$d")
 
   /** Johnson–Lindenstrauss projection onto `outDim` md5-derived random
     * directions: `outDim` literal-plane [[dot]]s — a pure codegen
@@ -1727,25 +1634,16 @@ object Similarity {
     // project before the exchange). The exact re-rank re-attaches the
     // embeddings afterwards via candidate-sized broadcast joins
     // against the corpus — a narrow point probe, never a shuffle.
-    val scored = cp.crossJoin(broadcast(qp))
+    val candidates = topK(cp.crossJoin(broadcast(qp))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("qp_emb"), col("p_emb")), 6).as("p_sim"))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("p_sim").desc, col("vec_id").asc)
-    val candidates = scored.withColumn("crk", row_number().over(wc))
-      .filter(col("crk") <= cand)
+        round(cosine(col("qp_emb"), col("p_emb")), 6).as("p_sim")), "p_sim", cand)
       .select(col("query_id"), col("vec_id"))
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    corpus.select(col("vec_id"), col("embedding"))
+    topK(corpus.select(col("vec_id"), col("embedding"))
       .join(broadcast(candidates), Seq("vec_id"))
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("query_id"), col("vec_id"), col("cos_sim"),
-        col("rk").cast("long").as("rk"))
+        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim")), "cos_sim", k)
   }
 }

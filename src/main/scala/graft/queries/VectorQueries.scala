@@ -1048,7 +1048,7 @@ WHERE cos_sim > 0.35""")),
           // multi-probe: the recall knob that costs query fan-out, not
           // index rebuild
           .unionAll(row("lsh_multiprobe4", 50,
-            Similarity.bucketedTopKMultiProbe(emb, q50, 10, nprobe = 4)))
+            Similarity.bucketedTopK(emb, q50, 10, nprobe = 4)))
           // JL candidate gen + exact rerank — smooth recall decay vs
           // the bucket paths' hash cliffs
           .unionAll(row("jl_rerank", 50,

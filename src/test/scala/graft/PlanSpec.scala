@@ -114,7 +114,7 @@ class PlanSpec extends SparkSpec {
       .select(lit(0L).as("query_id"), col("vec_id"),
         Similarity.lshBucket(col("embedding"), 8, 64).cast(bucketType)
           .as("bucket"))
-    val df = Similarity.graphFrontierExpansion(spark, path, frontier)
+    val df = Similarity.graphFrontierExpansion(spark.read.parquet(path), frontier)
     df.collect() // finalize the adaptive plan (DPP subquery included)
     val plan = formatted(df)
     val pf = plan.linesIterator.filter(_.contains("PartitionFilters"))
@@ -318,6 +318,22 @@ class PlanSpec extends SparkSpec {
     val allowed = "src/main/scala/graft/operators/Dedup.scala"
     assert(offenders.forall(_ == allowed),
       s"no-partition windows outside $allowed: ${offenders.filterNot(_ == allowed)}")
+  }
+
+  test("source lint: row_number() in Similarity only inside its top-k helper") {
+    // Every ANN family ranks through one helper, so the (score desc,
+    // id asc) tiebreak and the rank filter WindowGroupLimit needs are
+    // written once. Strip comments, then require exactly one
+    // row_number() and that it sits in `def topK`.
+    val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      "src/main/scala/graft/operators/Similarity.scala")), "UTF-8")
+    val code = src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+    val sites = "\\brow_number\\s*\\(".r.findAllMatchIn(code).map(_.start).toList
+    assert(sites.size == 1, s"row_number() sites in Similarity.scala: ${sites.size}")
+    val helper = code.indexOf("def topK(")
+    val nextDef = code.indexOf("def ", helper + 1)
+    assert(helper >= 0 && sites.head > helper && (nextDef < 0 || sites.head < nextDef),
+      "row_number() must be inside Similarity's topK helper")
   }
 
   test("no registered query joins without equi-keys outside the broadcast whitelist") {

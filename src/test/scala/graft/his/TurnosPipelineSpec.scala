@@ -47,11 +47,19 @@ class TurnosPipelineSpec extends SparkSpec {
     val a = TurnosPipeline.wideExtractStaged(spark, sf0001)
     val b = TurnosPipeline.wideExtractStaged(spark, sf0001)
     assert(a eq b, "second call must reuse the staged extract, not re-checkpoint")
+    // an evicted frame's blocks are gone, so read it before eviction
+    val aCount = a.count()
+    val stagedRdd = a.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(spark.sparkContext.getPersistentRDDs.contains(stagedRdd))
     TurnosPipeline.evictStaged(spark)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(stagedRdd),
+      "eviction must release the staged checkpoint blocks")
     val c = TurnosPipeline.wideExtractStaged(spark, sf0001)
     assert(!(a eq c), "eviction must drop the memo so the next call re-stages")
     // values are bit-identical across staging generations
-    assert(c.count() == a.count())
+    assert(c.count() == aCount)
     TurnosPipeline.evictStaged(spark)
   }
 }

@@ -589,7 +589,7 @@ class SimilaritySpec extends SparkSpec {
       // the stored layout and the in-flight form must agree at every nprobe
       Seq(1, 2, 4).foreach { np =>
         assert(
-          Similarity.bucketedTopKMultiProbe(emb, q, 5, nprobe = np).collect().toSet ==
+          Similarity.bucketedTopK(emb, q, 5, nprobe = np).collect().toSet ==
             Similarity.bucketedTopKStored(spark, path, q, 5, nprobe = np).collect().toSet,
           s"stored multi-probe diverges from in-flight at nprobe=$np")
       }
@@ -598,7 +598,7 @@ class SimilaritySpec extends SparkSpec {
       val exact = Similarity.bruteForceTopK(emb, q, 10)
         .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet
       val recalls = Seq(1, 2, 4, 8).map { np =>
-        val hits = Similarity.bucketedTopKMultiProbe(emb, q, 10, nprobe = np)
+        val hits = Similarity.bucketedTopK(emb, q, 10, nprobe = np)
           .select($"query_id", $"vec_id").as[(Long, Long)].collect().toSet
           .intersect(exact).size
         np -> hits.toDouble / exact.size
@@ -662,6 +662,72 @@ class SimilaritySpec extends SparkSpec {
           s"stored IVF-PQ diverges from in-flight at nprobe=$np")
       }
     } finally graft.Scratch.delete(path)
+  }
+
+  /** Build an index over the first 400 vectors, append the rest as one
+    * batch, then require each (label, stored, in-flight) case to agree.
+    * The in-flight side searches the whole corpus with the index's own
+    * frozen models, read from its sidecars. */
+  private def storedParity(build: (org.apache.spark.sql.DataFrame, String) => Unit,
+                           append: (org.apache.spark.sql.DataFrame, String) => Unit)(
+      cases: String => Seq[(String, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame)]): Unit = {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val path = java.nio.file.Files.createTempDirectory("graft_parity_spec").toString
+    try {
+      build(emb.filter($"vec_id" < 400), path)
+      append(emb.filter($"vec_id" >= 400), path)
+      cases(path).foreach { case (label, stored, inFlight) =>
+        val s = stored.collect().toSet
+        assert(s.nonEmpty && s == inFlight.collect().toSet,
+          s"$label: stored index diverges from in-flight search")
+      }
+    } finally graft.Scratch.delete(path)
+  }
+
+  test("stored index ≡ in-flight search after one append, per family and nprobe") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 10)
+    def model(path: String, name: String) = Some(spark.read.parquet(s"$path/$name"))
+    storedParity(Similarity.writeBucketedCorpus(_, _),
+      Similarity.appendToStoredBuckets(_, _)) { path =>
+      ("bucketed default nprobe", Similarity.bucketedTopKStored(spark, path, q, 10),
+        Similarity.bucketedTopK(emb, q, 10)) +:
+      Seq(1, 2, 4).map(np => (s"bucketed nprobe=$np",
+        Similarity.bucketedTopKStored(spark, path, q, 10, nprobe = np),
+        Similarity.bucketedTopK(emb, q, 10, nprobe = np)))
+    }
+    storedParity(Similarity.writeIvfCorpus(_, _),
+      Similarity.appendToIvfCorpus(spark, _, _)) { path =>
+      Seq(1, 2).map(np => (s"IVF nprobe=$np",
+        Similarity.ivfTopKStored(spark, path, q, 10, nprobe = np),
+        Similarity.ivfTopK(emb, q, 10, nprobe = np,
+          centsOpt = model(path, "_centroids"))))
+    }
+    storedParity(Similarity.writeIvfPqCorpus(_, _),
+      Similarity.appendToIvfPqCorpus(spark, _, _)) { path =>
+      Seq(1, 2).map(np => (s"IVF-PQ nprobe=$np",
+        Similarity.ivfPqTopKStored(spark, path, q, 10, nprobe = np),
+        Similarity.ivfPqTopK(emb, q, 10, nprobe = np,
+          centsOpt = model(path, "_centroids"), cbOpt = model(path, "_codebook"))))
+    }
+  }
+
+  test("stored IVF-PQ takes its shape (m, subDim) from the stored codebook") {
+    // A non-default shape: a search or append that assumed the default
+    // m = 16, subDim = 4 would slice the query against the wrong
+    // codewords (null ADC scores, so the in-flight side differs) or
+    // fail the codebook check.
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 10)
+    storedParity(Similarity.writeIvfPqCorpus(_, _, m = 8, subDim = 8),
+      Similarity.appendToIvfPqCorpus(spark, _, _)) { path =>
+      Seq(1, 2).map(np => (s"IVF-PQ m=8 subDim=8 nprobe=$np",
+        Similarity.ivfPqTopKStored(spark, path, q, 10, nprobe = np),
+        Similarity.ivfPqTopK(emb, q, 10, m = 8, subDim = 8, nprobe = np,
+          centsOpt = Some(spark.read.parquet(s"$path/_centroids")),
+          cbOpt = Some(spark.read.parquet(s"$path/_codebook")))))
+    }
   }
 
   test("IVF-PQ refine: full candidate coverage recovers exact brute force; default is a subset re-rank") {
