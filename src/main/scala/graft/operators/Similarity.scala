@@ -631,8 +631,12 @@ object Similarity {
     * input rows one-for-one, where the old groupBy(vec_id) shapes
     * collapsed them; every caller in this repo feeds fixture/corpus
     * frames whose vec_id is a key. Dedupe upstream if yours is not. */
-  def ivfAssignN(vectors: DataFrame, centroids: DataFrame, n: Int): DataFrame = {
-    val model = modelRows(centroids, "centroid_id", "c_emb")
+  def ivfAssignN(vectors: DataFrame, centroids: DataFrame, n: Int): DataFrame =
+    assignNearest(vectors, modelRows(centroids, "centroid_id", "c_emb"), n)
+
+  /** [[ivfAssignN]] over centroid rows already on the driver. */
+  private def assignNearest(vectors: DataFrame, model: Seq[(Long, Seq[Double])],
+                            n: Int): DataFrame = {
     if (model.isEmpty)
       // empty centroid table: the old inner crossJoin produced no rows
       return vectors.select(col("vec_id"),
@@ -719,7 +723,8 @@ object Similarity {
     // centsOpt: reuse an already-trained coarse quantizer — the
     // production shape (one model, many serving calls), and what lets
     // ann07's ladder train each model exactly once
-    val cents = centsOpt.getOrElse(kmeansCentroids(corpus, numCentroids, kmeansIters))
+    val cents = modelRows(centsOpt.getOrElse(kmeansCentroids(corpus, numCentroids, kmeansIters)),
+      "centroid_id", "c_emb")
     // NOT fanned out (round 19): ivfAssign is one compiled
     // NearestModelEntry loop per row — nothing like the PQ/codec
     // chains that justify the parallelism floor — and the driver
@@ -730,16 +735,16 @@ object Similarity {
   }
 
   /** The IVF family: nearest-centroid list id, `_centroids` sidecar. */
-  private def ivfLayout(cents: DataFrame): Layout = Layout("centroid_id", None,
-    v => ivfAssign(v.select(col("vec_id"), col("embedding")), cents))
+  private def ivfLayout(cents: Seq[(Long, Seq[Double])]): Layout = Layout("centroid_id", None,
+    v => assignNearest(v.select(col("vec_id"), col("embedding")), cents, 1))
 
   /** The IVF families' probes: each query (query_id, q_emb) once per
     * centroid of its `nprobe` nearest, as `key` in `keyType` (see
     * [[lshProbes]]). Corpus lists stay disjoint — nprobe applies to
     * the query side only. */
-  private def ivfProbes(queries: DataFrame, cents: DataFrame, nprobe: Int,
+  private def ivfProbes(queries: DataFrame, cents: Seq[(Long, Seq[Double])], nprobe: Int,
                         key: String, keyType: DataType = LongType): DataFrame =
-    ivfAssignN(queries.select(col("vec_id"), col("embedding")), cents, nprobe)
+    assignNearest(queries.select(col("vec_id"), col("embedding")), cents, nprobe)
       .select(col("vec_id").as("query_id"), col("centroid_id").cast(keyType).as(key),
         col("embedding").as("q_emb"))
 
@@ -757,15 +762,15 @@ object Similarity {
     // assignment not fanned out (round 19): the clustered write's
     // repartition already provides the exchange, so the extra
     // round-robin shuffle was pure cost (the ann04b regression).
-    ivfLayout(cents).write(corpus, s"$path/lists", "overwrite")
+    ivfLayout(modelRows(cents, "centroid_id", "c_emb"))
+      .write(corpus, s"$path/lists", "overwrite")
   }
 
   /** Append a batch to the stored IVF index, assigned with the index's
     * frozen `_centroids` (not fanned out — see [[writeIvfCorpus]]). */
   def appendToIvfCorpus(spark: org.apache.spark.sql.SparkSession,
                         newVectors: DataFrame, path: String): Unit =
-    ivfLayout(spark.read.parquet(s"$path/_centroids"))
-      .write(newVectors, s"$path/lists", "append")
+    ivfLayout(storedCentroids(spark, path)).write(newVectors, s"$path/lists", "append")
 
   /** [[ivfTopK]] against a STORED inverted-list corpus
     * ([[writeIvfCorpus]]'s layout), probing with the index's own
@@ -774,9 +779,17 @@ object Similarity {
   def ivfTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     val lists = spark.read.parquet(s"$path/lists")
-    probeTopK(lists, ivfProbes(queries, spark.read.parquet(s"$path/_centroids"), nprobe,
+    probeTopK(lists, ivfProbes(queries, storedCentroids(spark, path), nprobe,
       "centroid_id", lists.schema("centroid_id").dataType), "centroid_id", k)
   }
+
+  /** A stored index's `_centroids` read on the driver ([[readParquetDriver]]:
+    * no Spark job), in [[modelRows]]' form. */
+  private def storedCentroids(spark: org.apache.spark.sql.SparkSession,
+                              path: String): Seq[(Long, Seq[Double])] =
+    readParquetDriver(spark, s"$path/_centroids") { g =>
+      (g.getLong("centroid_id", 0), listDoubles(g, "c_emb"))
+    }.sortBy(_._1)
 
   /** Long-form subspace split for product quantization: one row per
     * (id, sub) carrying that subspace's `subDim`-dim slice. Pure
@@ -921,10 +934,7 @@ object Similarity {
         }
       }
     }
-    import spark.implicits._
-    model.toSeq.sortBy(_._1)
-      .flatMap { case (s, entries) => entries.map { case (cid, ce) => (s, cid, ce) } }
-      .toDF("sub", "centroid_id", "c_emb")
+    codebookFrame(spark, model)
   }
 
   /** PQ ANN top-k by asymmetric distance computation (ADC): queries
@@ -1040,7 +1050,10 @@ object Similarity {
     * list-restriction loss (ann04/05's lever) with quantization loss
     * (ann06's lever) — both knobs measured in ann07's ladder;
     * SimilaritySpec pins `nprobe = numCentroids` ≡ the global trained
-    * PQ ranking (no restriction ⇒ identical scores). */
+    * PQ ranking (no restriction ⇒ identical scores). A given codebook
+    * (`cbOpt`) fixes the shape (m, subDim) itself, as a stored
+    * `_codebook` does for [[ivfPqTopKStored]]; `m` and `subDim` then
+    * shape nothing, they only shape a codebook trained here. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 numCentroids: Int = 16, kmIters: Int = 2, m: Int = 16,
                 subDim: Int = 4, codebookSize: Int = 64, pqIters: Int = 2,
@@ -1060,9 +1073,13 @@ object Similarity {
     // both per-row functions of the literal models, so the corpus is
     // assigned exactly as the stored index is built, and scored by the
     // stored index's scorer.
-    val codes = ivfPqLayout(modelRows(cents, "centroid_id", "c_emb"), codebookRows(cb),
-      m, subDim).assign(fanOut(corpus.select(col("vec_id"), col("embedding"))))
-    ivfPqScore(codes, ivfProbes(queries, cents, nprobe, "list_id"), cb, queries, k, m, subDim)
+    val centRows = modelRows(cents, "centroid_id", "c_emb")
+    val cbRows = codebookRows(cb)
+    val (cbM, cbSubDim) = if (cbOpt.isDefined) pqShape(cbRows) else (m, subDim)
+    val codes = ivfPqLayout(centRows, cbRows, cbM, cbSubDim)
+      .assign(fanOut(corpus.select(col("vec_id"), col("embedding"))))
+    ivfPqScore(codes, ivfProbes(queries, centRows, nprobe, "list_id"), cb, queries, k,
+      cbM, cbSubDim)
   }
 
   /** The IVF-PQ family: one fused projection gives each vector its
@@ -1131,10 +1148,10 @@ object Similarity {
     * codebook's own shape. */
   def appendToIvfPqCorpus(spark: org.apache.spark.sql.SparkSession,
                           newVectors: DataFrame, path: String): Unit = {
-    val cents = modelRows(spark.read.parquet(s"$path/_centroids"), "centroid_id", "c_emb")
     val cb = storedCodebook(spark, path)
     val (m, subDim) = pqShape(cb)
-    ivfPqLayout(cents, cb, m, subDim).write(newVectors, s"$path/lists", "append")
+    ivfPqLayout(storedCentroids(spark, path), cb, m, subDim)
+      .write(newVectors, s"$path/lists", "append")
   }
 
   /** Query the stored IVF-PQ index: the probe join DPP-prunes the code
@@ -1143,12 +1160,11 @@ object Similarity {
     * pruned code rows with the stored codebook at its own shape. */
   def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val cents = spark.read.parquet(s"$path/_centroids")
-    val cb = spark.read.parquet(s"$path/_codebook")
+    val cb = storedCodebook(spark, path)
+    val (m, subDim) = pqShape(cb)
     val codes = spark.read.parquet(s"$path/lists")
-    val (m, subDim) = pqShape(storedCodebook(spark, path))
-    ivfPqScore(codes, ivfProbes(queries, cents, nprobe, "list_id",
-      codes.schema("list_id").dataType), cb, queries, k, m, subDim)
+    ivfPqScore(codes, ivfProbes(queries, storedCentroids(spark, path), nprobe, "list_id",
+      codes.schema("list_id").dataType), codebookFrame(spark, cb), queries, k, m, subDim)
   }
 
   /** A stored index's `_codebook` read on the driver ([[readParquetDriver]]:
@@ -1156,10 +1172,26 @@ object Similarity {
   private def storedCodebook(spark: org.apache.spark.sql.SparkSession,
                              path: String): Map[Int, Seq[(Long, Seq[Double])]] =
     readParquetDriver(spark, s"$path/_codebook") { g =>
-      val emb = g.getGroup("c_emb", 0) // Spark's 3-level list: list.element
-      (g.getInteger("sub", 0), (g.getLong("centroid_id", 0),
-        (0 until emb.getFieldRepetitionCount(0)).map(i => emb.getGroup(0, i).getDouble(0, 0))))
+      (g.getInteger("sub", 0), (g.getLong("centroid_id", 0), listDoubles(g, "c_emb")))
     }.groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).sortBy(_._1) }
+
+  /** A double-array field of a [[readParquetDriver]] record (Spark's
+    * 3-level list: list.element). */
+  private def listDoubles(g: org.apache.parquet.example.data.Group,
+                          field: String): Seq[Double] = {
+    val emb = g.getGroup(field, 0)
+    (0 until emb.getFieldRepetitionCount(0)).map(i => emb.getGroup(0, i).getDouble(0, 0))
+  }
+
+  /** A codebook's rows as the (sub, centroid_id, c_emb) frame that
+    * [[pqCodebookTrained]] returns and `_codebook` stores. */
+  private def codebookFrame(spark: org.apache.spark.sql.SparkSession,
+                            cb: Map[Int, Seq[(Long, Seq[Double])]]): DataFrame = {
+    import spark.implicits._
+    cb.toSeq.sortBy(_._1)
+      .flatMap { case (s, entries) => entries.map { case (cid, ce) => (s, cid, ce) } }
+      .toDF("sub", "centroid_id", "c_emb")
+  }
 
   /** A codebook's shape: m = its subspace count, subDim = its entry
     * length. A search or encode at another shape would slice queries

@@ -730,6 +730,25 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("in-flight IVF-PQ takes its shape (m, subDim) from a given codebook") {
+    // The call leaves m and subDim at their defaults (16, 4), which must
+    // shape nothing once cbOpt is set. At m = 8 the defaults would ask
+    // for subspaces the codebook lacks; at m = 16, subDim = 2 they would
+    // slice 4-long query pieces against 2-long codewords, and every ADC
+    // score would be null.
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 10)
+    for ((m, subDim) <- Seq((8, 8), (16, 2)))
+      storedParity(Similarity.writeIvfPqCorpus(_, _, m = m, subDim = subDim),
+          Similarity.appendToIvfPqCorpus(spark, _, _)) { path =>
+        Seq(1, 2).map(np => (s"IVF-PQ m=$m subDim=$subDim codebook, default knobs, nprobe=$np",
+          Similarity.ivfPqTopKStored(spark, path, q, 10, nprobe = np),
+          Similarity.ivfPqTopK(emb, q, 10, nprobe = np,
+            centsOpt = Some(spark.read.parquet(s"$path/_centroids")),
+            cbOpt = Some(spark.read.parquet(s"$path/_codebook")))))
+      }
+  }
+
   test("IVF-PQ refine: full candidate coverage recovers exact brute force; default is a subset re-rank") {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val q = emb.filter($"vec_id" < 5)
