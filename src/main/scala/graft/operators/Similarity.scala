@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import graft.Stages
@@ -33,10 +34,16 @@ import graft.Stages
   *  - in-flight search = assign the corpus, then score it against the
   *    broadcast query probes ([[probeTopK]], or [[ivfPqScore]] for
   *    codes);
-  *  - stored search = read the index directory, then the same scorer.
-  *    The probe join on the partition column lets Spark's dynamic
-  *    partition pruning read only the probed directories (PlanSpec
-  *    gates it).
+  *  - stored search = open the index directory from its file manifest
+  *    ([[openIndex]]), then the same scorer. The probe join on the
+  *    partition column lets Spark's dynamic partition pruning read
+  *    only the probed directories (PlanSpec gates it).
+  *
+  * Every write ends by recording the directory's data files — path,
+  * size, mtime — and its columns in a file manifest (`_files`, next to
+  * the data; [[commit]]). A stored search opens the index from that
+  * manifest: no listing job, no schema-inference job, so building the
+  * search starts no Spark job. The manifest write is the commit point.
   *
   * In-flight ≡ stored: given the same models and parameters, a stored
   * search returns exactly the rows of the in-flight search over the
@@ -46,15 +53,19 @@ import graft.Stages
   * is a rebuild to a fresh path plus a manifest flip, never an append:
   * drifted models would strand the vectors already written.
   *
-  * Single writer: appends, and the bucketed index's `_stats` manifest
-  * read-merge-write, carry no coordination. Two concurrent appenders
-  * can lose one batch's counts for good, and a crash between the data
-  * append and the manifest write leaves the manifest behind the data.
-  * Run appends from one writer at a time (the streaming ingest
-  * serializes micro-batches; batch pipelines publish through
-  * [[graft.sinks.Publish]]'s one-writer versions). Both failure shapes
-  * are detectable: the manifest's bytes no longer match the directory
-  * listing, which [[bucketStatsVerified]] checks and repairs.
+  * Single writer: appends, and the read-merge-write of the `_files`
+  * and the bucketed index's `_stats` manifests, carry no coordination.
+  * Two concurrent appenders can drop one batch from both manifests,
+  * and a crash between the data append and the manifest writes leaves
+  * data files no manifest names. Readers never see such unreferenced
+  * files: they read what the file manifest names. Run appends from one
+  * writer at a time (the streaming ingest serializes micro-batches;
+  * batch pipelines publish through [[graft.sinks.Publish]]'s one-writer
+  * versions). Both failure shapes are detectable: `_stats`' bytes no
+  * longer match the directory listing, which [[bucketStatsVerified]]
+  * checks; its repair adopts the unreferenced files into both
+  * manifests, as the index's next append also does (an append records
+  * the whole listing).
   */
 object Similarity {
 
@@ -140,37 +151,76 @@ object Similarity {
 
   /** One stored family's layout (the object doc's index model):
     * `assign` maps (vec_id, embedding, …) rows to index rows carrying
-    * the partition column `key`; `parts` is the clustered write's
-    * partition count (None: AQE picks it). */
-  private final case class Layout(key: String, parts: Option[Int],
+    * the partition column `key`; `dirs` is the number of partition
+    * directories the write is sized against ([[writeTasks]]). */
+  private final case class Layout(key: String, dirs: Int,
                                   assign: DataFrame => DataFrame) {
-    /** Build (`overwrite`) or append: assign, then one [[clustered]] write. */
-    def write(vectors: DataFrame, path: String, mode: String): Unit =
-      clustered(assign(vectors), parts, key).mode(mode).parquet(path)
+    /** Build (`overwrite`) or append: assign, one [[clustered]] write,
+      * then the file manifest ([[commit]]). */
+    def write(vectors: DataFrame, path: String, mode: String): Written = {
+      val rows = assign(vectors)
+      clustered(rows, writeTasks(vectors, dirs), key).mode(mode).parquet(path)
+      commit(vectors.sparkSession, path, rows.schema)
+    }
   }
 
   /** The clustered partitioned write of every stored index: rows are
     * repartitioned by the first partition column before `partitionBy`.
     * Without it every task writes a file into every directory (tasks ×
     * directories small files); with it each directory's rows land in
-    * one task, so one file per directory per write — the layout a
-    * 100 TB reader wants. `parts` pins the partition count where the
-    * directory count is known (one task per LSH bucket): an N-less
-    * repartition is AQE-coalescible, and on a small input AQE folds the
-    * whole write into ONE task that then creates all 2^planes files
-    * serially (measured 3.5 s vs 1.4 s for the bucketed build at sf0.1
-    * — small-file commit overhead is per-file and serial within a
-    * task). */
-  private def clustered(df: DataFrame, parts: Option[Int],
+    * one task, so one file per directory per write. `sizing` = (tasks,
+    * salts) from [[writeTasks]] pins the partition count; salts > 1 add
+    * `vec_id`'s hash mod salts to the key, so a directory's rows spread
+    * over up to `salts` tasks and files.
+    *
+    * Why the count is derived from the data: it used to be one task
+    * per directory, 2^planes — 256 tasks for a 500-vector sf0.01 index,
+    * and 256 tasks of ~400 GB each at 100 TB. Per-file commit work is
+    * serial within a task, so a small write wants every core and no
+    * more tasks than that; an unpinned, AQE-coalescible repartition (the
+    * IVF lists' count until then) is worse still: AQE folds a small
+    * write into ONE task that creates every file serially (3.5 s vs
+    * 1.4 s for the sf0.1 bucketed build).
+    * Measured on 4 cores (`local[4]`): the same 8-plane bucketed build
+    * of 500 vectors (208 files) took 3.3–3.7 s with 256 tasks and
+    * 1.1–1.2 s with 4; of 2,000 vectors (255 files) 4.3–4.5 s and
+    * 1.5–1.8 s, still one file per bucket. In a traced `ann_index`
+    * benchmark run (seed 11; 6 planes, 64 buckets, 16 IVF lists) one
+    * append of 100 vectors to three indexes went from 71 tasks and
+    * 2.58 s to 15 tasks and 1.79 s, and the four-index build from 194
+    * tasks to 80. */
+  private def clustered(df: DataFrame, sizing: (Int, Int),
                         keys: String*): DataFrameWriter[Row] = {
-    val key = col(keys.head)
-    parts.fold(df.repartition(key))(df.repartition(_, key)).write.partitionBy(keys: _*)
+    val (tasks, salts) = sizing
+    val salt = if (salts > 1) Seq(pmod(xxhash64(col("vec_id")), lit(salts))) else Nil
+    df.repartition(tasks, col(keys.head) +: salt: _*).write.partitionBy(keys: _*)
+  }
+
+  /** (tasks, salts) of a [[clustered]] write of `input`'s rows into
+    * `dirs` partition directories: tasks = max(defaultParallelism,
+    * ⌈input bytes / AQE's advisory partition size⌉), salts = ⌈tasks /
+    * dirs⌉. Input bytes are the optimizer's size of each source the
+    * input reads (files, local rows), summed — a join's estimate would
+    * multiply; a source of unknown size counts as nothing. Up to one
+    * task per directory, hashing the directory key leaves one file per
+    * directory; past it, each directory splits into advisory-sized
+    * files. */
+  private def writeTasks(input: DataFrame, dirs: Int): (Int, Int) = {
+    val spark = input.sparkSession
+    val conf = spark.sessionState.conf
+    val unknown = BigInt(conf.defaultSizeInBytes)
+    val bytes = input.queryExecution.optimizedPlan.collectLeaves()
+      .map(_.stats.sizeInBytes).filter(_ < unknown).sum
+    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val tasks = math.max(spark.sparkContext.defaultParallelism,
+      ((bytes + advisory - 1) / advisory).min(Int.MaxValue).toInt)
+    (tasks, (tasks + dirs - 1) / dirs)
   }
 
   /** The bucketed family: the LSH bucket is a pure projection of the
     * embedding (no model sidecar), one directory per bucket. */
   private def lshLayout(numPlanes: Int, dim: Int): Layout =
-    Layout("bucket", Some(1 << numPlanes),
+    Layout("bucket", 1 << numPlanes,
       _.withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim)))
 
   /** The cosine scorer of the bucketed and IVF families, in-flight and
@@ -245,7 +295,7 @@ object Similarity {
   def writeBucketedCorpus(corpus: DataFrame, path: String,
                           numPlanes: Int = 8, dim: Int = 64,
                           metaCols: Seq[String] = Nil): Unit = {
-    lshLayout(numPlanes, dim).write(
+    val written = lshLayout(numPlanes, dim).write(
       fanOut(corpus.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*)),
       path, "overwrite")
     // counts from the freshly-written footers — no second corpus pass
@@ -253,7 +303,7 @@ object Similarity {
     // dedicated aggregation job per build; at production widths that
     // was a full corpus re-scan, where the footer pass is O(files)
     // driver-side metadata).
-    writeStats(corpus.sparkSession, path, footerCounts(corpus.sparkSession, path))
+    rebuildStats(corpus.sparkSession, path, written.files)
   }
 
   /** Per-bucket cardinality/size manifest of a stored bucket index
@@ -262,47 +312,45 @@ object Similarity {
     * tiny metadata read instead of being discovered at query time (or
     * via a 100 TB file listing). Underscore-prefixed like `_centroids`,
     * so index scans never see it. n_vectors is exact and
-    * oracle-checkable (ann03f); n_bytes comes from an O(buckets)
-    * driver-side directory listing of files this writer just produced. */
+    * oracle-checkable (ann03f); n_bytes comes from the driver-side
+    * directory listing of files this writer just produced. Read on the
+    * driver ([[readParquetDriver]]: no Spark job) and returned as a
+    * local frame of three long columns. */
   def bucketStats(spark: org.apache.spark.sql.SparkSession,
                   path: String): DataFrame =
-    spark.read.parquet(s"$path/$StatsName")
+    spark.createDataFrame(readStats(spark, path).map(Row.fromTuple).asJava,
+      StructType(Seq("bucket", "n_vectors", "n_bytes").map(StructField(_, LongType))))
 
   /** [[bucketStats]] with a drift check in front: the manifest's
     * per-bucket byte totals are compared against a FRESH directory
     * listing (O(buckets) namenode calls, never a data read). A clean
     * manifest lists identical bytes — every manifest writer records
     * the post-write listing — so any difference means the manifest
-    * missed data: a crash between an append's data write and its
-    * manifest write, a concurrent append losing the read-merge-write
-    * race (out of the single-writer contract in the object doc,
-    * but detected rather than trusted), or streaming
-    * [[writeIndexBatch]] ingest that deliberately defers manifest
-    * maintenance to compaction. On drift the manifest is REBUILT
-    * authoritatively from the index itself (the same rescan the
-    * missing-manifest branch runs) and rewritten, so the returned
-    * frame is always consistent with the data on disk. Between
-    * streaming micro-batches that rescan recurs — capacity reports
-    * over a live streaming index should run after compaction, as the
-    * maintenance protocol already schedules. */
+    * missed data: a crash between a write's data files and its
+    * manifests, a concurrent append losing the read-merge-write race
+    * (out of the single-writer contract in the object doc, but
+    * detected rather than trusted), or a file put there by hand. On
+    * drift the manifest is REBUILT authoritatively from the index
+    * itself (the same footer pass the missing-manifest branch runs)
+    * and rewritten, and the file manifest adopts the listed files, so
+    * the returned frame, the stored search and the data on disk agree
+    * again. */
   def bucketStatsVerified(spark: org.apache.spark.sql.SparkSession,
                           path: String): DataFrame = {
-    val statsPath = new org.apache.hadoop.fs.Path(s"$path/$StatsName")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def manifestBytes: Option[Map[Long, Long]] =
-      if (!fs.exists(statsPath)) None
-      else Some(bucketStats(spark, path)
-        .select(col("bucket"), col("n_bytes")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    if (!manifestBytes.contains(listBucketBytes(spark, path))) {
-      rebuildStats(spark, path)
+      if (!exists(spark, s"$path/$StatsName")) None
+      else Some(readStats(spark, path).map { case (b, _, nb) => b -> nb }.toMap)
+    val files = listData(spark, path)
+    if (!manifestBytes.contains(bucketBytes(files))) {
+      rebuildStats(spark, path, files)
+      readFiles(spark, path).foreach(m => recordFiles(spark, path, m.schema, files))
       // Convergence check (round-17 ADVICE): a rebuild reconciles the
       // manifest with the listing by construction ([[writeStats]] now
       // carries listing-only buckets as zero-count rows), so a SECOND
       // mismatch means something is mutating the index concurrently or
       // the filesystem listing is unstable — fail loudly instead of
       // silently re-triggering the full O(corpus) rescan on every call.
-      val after = listBucketBytes(spark, path)
+      val after = bucketBytes(listData(spark, path))
       if (!manifestBytes.contains(after)) throw new IllegalStateException(
         s"bucketStatsVerified: manifest at $path/$StatsName still drifts " +
           s"from the directory listing after an authoritative rebuild — " +
@@ -323,22 +371,23 @@ object Similarity {
       .orderBy(col("n_vectors").desc, col("bucket").asc)
 
   private val StatsName = "_stats"
+  private val FilesName = "_files"
 
   /** Authoritative manifest rebuild from the index data itself — the
     * recovery path for a missing or drifted `_stats`. Row counts come
     * from the bucket files' parquet FOOTERS ([[footerCounts]]), so
     * the rebuild is O(files) driver-side metadata reads — never a
     * data scan, never a Spark job. */
-  private def rebuildStats(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Unit =
-    writeStats(spark, path, footerCounts(spark, path))
+  private def rebuildStats(spark: org.apache.spark.sql.SparkSession, path: String,
+                           files: Seq[DataFile]): Unit =
+    writeStats(spark, path, footerCounts(spark, files), files)
 
-  private def writeStats(spark: org.apache.spark.sql.SparkSession,
-                         path: String, counts: Map[Long, Long]): Unit = {
+  private def writeStats(spark: org.apache.spark.sql.SparkSession, path: String,
+                         counts: Map[Long, Long], files: Seq[DataFile]): Unit = {
     // The manifest is bucket-count bounded (≤ 2^planes rows), so the
     // byte-listing merge happens DRIVER-SIDE — the guarded-collect
     // class of k-means centroids.
-    val bytes = listBucketBytes(spark, path)
+    val bytes = bucketBytes(files)
     // Listing-only buckets (a bucket dir whose files hold zero data
     // rows — e.g. a crashed write's leftovers) are carried as
     // zero-count rows: byte totals then always reconcile with the
@@ -347,48 +396,57 @@ object Similarity {
     val rows = (counts.keySet ++ bytes.keySet).toSeq.sorted.map { b =>
       (b, counts.getOrElse(b, 0L), bytes.getOrElse(b, 0L))
     }
-    // Written DIRECTLY with the parquet-hadoop writer on the driver
-    // (round 18): the rows are already a driver-side map, and routing
-    // them through a one-partition Spark write paid a full job +
-    // commit protocol per index write (~0.3-0.5 s of fixed overhead ×
-    // build/append/compact). spark.read.parquet reads the file
-    // identically (same schema: three required INT64s).
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$StatsName")
-    val fs = dir.getFileSystem(conf)
-    fs.delete(dir, true)
-    fs.mkdirs(dir)
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message stats { required int64 bucket; required int64 n_vectors; " +
-        "required int64 n_bytes; }")
-    val gconf = new org.apache.hadoop.conf.Configuration(conf)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, gconf)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile
-        .fromPath(new org.apache.hadoop.fs.Path(dir, "part-00000.parquet"), gconf))
-      .withConf(gconf)
-      .build()
-    val factory = new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
-    try rows.foreach { case (b, n, nb) =>
-      w.write(factory.newGroup()
-        .append("bucket", b).append("n_vectors", n).append("n_bytes", nb))
-    } finally w.close()
+    writeParquetDriver(spark, s"$path/$StatsName", "message stats { required int64 bucket; " +
+        "required int64 n_vectors; required int64 n_bytes; }") { f =>
+      rows.map { case (b, n, nb) =>
+        f.newGroup().append("bucket", b).append("n_vectors", n).append("n_bytes", nb)
+      }
+    }
   }
 
-  /** (bucket → total file bytes) from one directory listing per bucket
-    * dir — O(2^planes) namenode calls, never a data read. */
-  private def listBucketBytes(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Map[Long, Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Map.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-      .map { d =>
-        val b = d.getPath.getName.stripPrefix("bucket=").toLong
-        b -> fs.listStatus(d.getPath).map(_.getLen).sum
-      }.toMap
+  /** (bucket, n_vectors, n_bytes) rows of an existing `_stats`
+    * manifest — the read twin of [[writeStats]], O(buckets) rows. */
+  private def readStats(spark: org.apache.spark.sql.SparkSession,
+                        path: String): Seq[(Long, Long, Long)] =
+    readParquetDriver(spark, s"$path/$StatsName")(g =>
+      (g.getLong("bucket", 0), g.getLong("n_vectors", 0), g.getLong("n_bytes", 0)))
+
+  /** One data file of an index directory: its path relative to the
+    * directory (`bucket=3/part-….parquet`) and its listing status. */
+  private final case class DataFile(rel: String, status: org.apache.hadoop.fs.FileStatus) {
+    /** The LSH bucket directory it sits under, if any. */
+    def bucket: Option[Long] =
+      Some(rel.takeWhile(_ != '/')).filter(_.startsWith("bucket="))
+        .map(_.stripPrefix("bucket=").toLong)
   }
+
+  /** Every data file under an index directory, from one listing per
+    * partition directory — O(directories) namenode calls on the
+    * driver, never a Spark job. Names Spark treats as hidden (`_…`,
+    * `.…`: sidecars, manifests, checksums, staging) are skipped, as a
+    * Spark listing skips them. */
+  private def listData(spark: org.apache.spark.sql.SparkSession,
+                       root: String): Seq[DataFile] = {
+    val dir = new org.apache.hadoop.fs.Path(root)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(d: org.apache.hadoop.fs.Path, prefix: String): Seq[DataFile] =
+      fs.listStatus(d).toSeq.flatMap { s =>
+        val n = s.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Nil
+        else if (s.isDirectory) walk(s.getPath, s"$prefix$n/")
+        else Seq(DataFile(prefix + n, s))
+      }
+    if (fs.exists(dir)) walk(dir, "") else Nil
+  }
+
+  private def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** bucket → total data-file bytes of a listing. */
+  private def bucketBytes(files: Seq[DataFile]): Map[Long, Long] =
+    files.flatMap(f => f.bucket.map(_ -> f.status.getLen)).groupMapReduce(_._1)(_._2)(_ + _)
 
   /** (bucket → exact row count) from one parquet-FOOTER read per data
     * file (a parquet footer records its file's row total) — O(files)
@@ -397,87 +455,121 @@ object Similarity {
     * each open is a few ms of positioned reads, and a freshly-written
     * index has one file per bucket, so serial opens would cost
     * O(buckets × ms) on the driver (measured 2.5× on the ann03d
-    * lifecycle before parallelizing). Non-parquet sidecars (_SUCCESS,
-    * .crc) are skipped; a streaming layout's `ingest_batch=`
-    * subdirectories are descended so the count covers every data file
-    * under the bucket. */
+    * lifecycle before parallelizing). A streaming layout's files under
+    * `ingest_batch=` subdirectories count toward their bucket. */
   private def footerCounts(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Map[Long, Long] = {
-    val root = new org.apache.hadoop.fs.Path(path)
+                           files: Seq[DataFile]): Map[Long, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
-    def dataFiles(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(dir).toSeq.flatMap { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory) dataFiles(s.getPath)
-        else if (n.startsWith("_") || n.startsWith(".")) Nil
-        else Seq(s)
-      }
     def footerRows(st: org.apache.hadoop.fs.FileStatus): Long = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(st, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }
-    if (!fs.exists(root)) Map.empty
-    else {
-      val perBucket = fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
-        .map { d =>
-          val b = d.getPath.getName.stripPrefix("bucket=").toLong
-          s"footers bucket=$b" -> (() => b -> dataFiles(d.getPath).map(footerRows).sum)
-        }
-      Stages.overlap(perBucket: _*).toMap
+    val perBucket = files.flatMap(f => f.bucket.map(_ -> f.status))
+      .groupMap(_._1)(_._2).toSeq.map { case (b, sts) =>
+        s"footers bucket=$b" -> (() => b -> sts.map(footerRows).sum)
+      }
+    Stages.overlap(perBucket: _*).toMap
+  }
+
+  /** The file manifest of an index directory (`<dir>/_files`): the
+    * written columns, and per data file its path relative to the
+    * directory, its size and its modification time. */
+  private final case class IndexFiles(schema: StructType, files: Seq[(String, Long, Long)])
+
+  /** One index write's outcome: the directory's data files after it,
+    * and the relative paths its manifest named before it (None: the
+    * directory had no manifest). */
+  private final case class Written(files: Seq[DataFile], before: Option[Set[String]])
+
+  /** The end of every index write: list the directory's data files and
+    * record them as its manifest, keeping the manifest's column schema
+    * when there is one (an append), else `written`'s (the frame just
+    * written, partition columns included). Readers open the index from
+    * this manifest ([[openIndex]]), so its write is the commit point:
+    * files no manifest names are never read. */
+  private def commit(spark: org.apache.spark.sql.SparkSession, root: String,
+                     written: StructType): Written = {
+    val before = readFiles(spark, root)
+    val files = listData(spark, root)
+    recordFiles(spark, root, before.fold(written)(_.schema), files)
+    Written(files, before.map(_.files.map(_._1).toSet))
+  }
+
+  private def recordFiles(spark: org.apache.spark.sql.SparkSession, root: String,
+                          schema: StructType, files: Seq[DataFile]): Unit = {
+    val json = schema.json
+    writeParquetDriver(spark, s"$root/$FilesName", "message files { required binary path " +
+        "(STRING); required int64 size; required int64 mtime; required binary schema (STRING); }") {
+      f => files.sortBy(_.rel).map { d =>
+        f.newGroup().append("path", d.rel).append("size", d.status.getLen)
+          .append("mtime", d.status.getModificationTime).append("schema", json)
+      }
     }
   }
+
+  /** An index directory's file manifest, read on the driver; None when
+    * it has none (or it names no file). */
+  private def readFiles(spark: org.apache.spark.sql.SparkSession,
+                        root: String): Option[IndexFiles] = {
+    if (!exists(spark, s"$root/$FilesName")) None
+    else {
+      val rows = readParquetDriver(spark, s"$root/$FilesName")(g => (g.getString("path", 0),
+        g.getLong("size", 0), g.getLong("mtime", 0), g.getString("schema", 0)))
+      rows.headOption.map(h => IndexFiles(DataType.fromJson(h._4).asInstanceOf[StructType],
+        rows.map(r => (r._1, r._2, r._3))))
+    }
+  }
+
+  /** A stored index directory as a DataFrame — the frame
+    * `spark.read.parquet(root)` gives. With a file manifest it is a
+    * parquet relation over exactly the recorded files
+    * ([[ManifestFileIndex]]): no listing job, no schema-inference
+    * job, so building a search over it starts no Spark job. A directory
+    * without one (written before the manifest existed, or by hand) is
+    * read with `spark.read.parquet`. */
+  private[graft] def openIndex(spark: org.apache.spark.sql.SparkSession,
+                               root: String): DataFrame =
+    readFiles(spark, root).fold(spark.read.parquet(root))(m =>
+      ManifestFileIndex.open(spark, root, m.files, m.schema))
 
   /** Append a batch to the stored bucket index with the SAME
     * hyperplanes: untouched buckets keep their exact files
     * (spec-pinned), and readers of other buckets are undisturbed.
-    * Queries via [[bucketedTopKStored]] see old ∪ new immediately
-    * (ann03c proves parity with the all-at-once build against ann03's
-    * oracle). Single writer only (object doc); consumers of the stats
-    * ([[hotBuckets]]) self-heal through [[bucketStatsVerified]]. */
+    * Queries via [[bucketedTopKStored]] see old ∪ new once the file
+    * manifest is written (ann03c proves parity with the all-at-once
+    * build against ann03's oracle). Single writer only (object doc);
+    * consumers of the stats ([[hotBuckets]]) self-heal through
+    * [[bucketStatsVerified]]. */
   def appendToStoredBuckets(newVectors: DataFrame, path: String,
                             numPlanes: Int = 8, dim: Int = 64): Unit = {
-    lshLayout(numPlanes, dim).write(
+    val spark = newVectors.sparkSession
+    val written = lshLayout(numPlanes, dim).write(
       newVectors.select(col("vec_id"), col("embedding")), path, "append")
     // Stats maintenance is O(batch ∪ buckets), never O(corpus): the
-    // batch's counts (ONE agg job, bounded collect) merge into the
+    // footers of the files the file manifest did not name before this
+    // write (the batch's) give its counts, which merge into the
     // existing manifest driver-side — untouched buckets' rows carry
     // over verbatim (spec-pinned). Deliberately NOT the footer pass
     // the build/compact writers use: an append-heavy index accumulates
     // files, so re-reading every footer per append is O(index files)
-    // where this merge stays O(batch). An index predating the manifest
-    // (no _stats) gets one authoritative footer rebuild.
-    val spark = newVectors.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$StatsName"))) {
-      val batchCounts = newVectors
-        .select(lshBucket(col("embedding"), numPlanes, dim).as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n_vectors"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // old manifest read DRIVER-SIDE (round 19): it is ≤ 2^planes rows
-      // in one file this library wrote itself — routing it through a
-      // Spark read paid a full job per append.
-      val old = readStatsDriver(spark, path)
-      writeStats(spark, path, (old.keySet ++ batchCounts.keySet).map(b =>
-        b -> (old.getOrElse(b, 0L) + batchCounts.getOrElse(b, 0L))).toMap)
-    } else rebuildStats(spark, path)
+    // where this merge stays O(batch). An index predating either
+    // manifest gets one authoritative footer rebuild.
+    written.before.filter(_ => exists(spark, s"$path/$StatsName")) match {
+      case Some(seen) =>
+        val batch = footerCounts(spark, written.files.filterNot(f => seen(f.rel)))
+        val old = readStats(spark, path).map { case (b, n, _) => b -> n }.toMap
+        writeStats(spark, path, (old.keySet ++ batch.keySet).map(b =>
+          b -> (old.getOrElse(b, 0L) + batch.getOrElse(b, 0L))).toMap, written.files)
+      case None => rebuildStats(spark, path, written.files)
+    }
   }
 
-  /** (bucket → n_vectors) of an existing `_stats` manifest — the read
-    * twin of [[writeStats]]'s driver-side writer, O(buckets) rows. */
-  private def readStatsDriver(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Map[Long, Long] =
-    readParquetDriver(spark, s"$path/$StatsName")(g =>
-      g.getLong("bucket", 0) -> g.getLong("n_vectors", 0)).toMap
-
   /** Every row of a small parquet directory this library wrote itself
-    * (the `_stats` manifest, the graph index's `_seeds`), read with the
-    * parquet-hadoop Group reader on the driver: no Spark job, no schema
-    * inference. `row` maps one record. */
+    * (the `_stats` and `_files` manifests, the graph index's `_seeds`),
+    * read with the parquet-hadoop Group reader on the driver: no Spark
+    * job, no schema inference. `row` maps one record. */
   private def readParquetDriver[T](spark: org.apache.spark.sql.SparkSession,
                                    path: String)(
       row: org.apache.parquet.example.data.Group => T): Seq[T] = {
@@ -500,6 +592,40 @@ object Similarity {
       }
   }
 
+  /** Replace the parquet directory `dir` by ONE file of `rows` (schema
+    * `message`), written directly with the parquet-hadoop writer on the
+    * driver (round 18): the rows are already driver-side, and routing
+    * them through a one-partition Spark write paid a full job + commit
+    * protocol per index write (~0.3-0.5 s of fixed overhead ×
+    * build/append/compact). The file is written under a hidden name and
+    * renamed into place once complete, so a reader sees the old file,
+    * no file, or the new one — never a torn one; for `_files` "no file"
+    * means a listing read, which is always correct. */
+  private def writeParquetDriver(spark: org.apache.spark.sql.SparkSession, dir: String,
+                                 message: String)(
+      rows: org.apache.parquet.example.data.simple.SimpleGroupFactory =>
+        Seq[org.apache.parquet.example.data.Group]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val fs = d.getFileSystem(conf)
+    fs.mkdirs(d)
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(message)
+    val gconf = new org.apache.hadoop.conf.Configuration(conf)
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, gconf)
+    val tmp = new org.apache.hadoop.fs.Path(d, s".${java.util.UUID.randomUUID}.parquet")
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, gconf))
+      .withConf(gconf)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema))
+      .foreach(w.write)
+    finally w.close()
+    fs.listStatus(d).map(_.getPath).filterNot(_.getName.startsWith("."))
+      .foreach(fs.delete(_, true))
+    fs.rename(tmp, new org.apache.hadoop.fs.Path(d, "part-00000.parquet"))
+  }
+
   /** One ingest batch of the STREAMING index-maintenance path
     * ([[graft.streaming.StreamingOps.annIndexIngest]]): vectors are
     * bucketed with the index's hyperplanes and written via DYNAMIC
@@ -513,39 +639,46 @@ object Similarity {
     * top-level directory, so query-side dynamic partition pruning is
     * unaffected; [[compactStoredBuckets]] folds the batch level away.
     *
-    * Stats note: this streaming path deliberately does NOT touch the
-    * `_stats` manifest per micro-batch (a replayed batch would
-    * double-merge counts — the manifest write is not idempotent the
-    * way the dynamic-partition data write is); the manifest refreshes
-    * authoritatively at [[compactStoredBuckets]] time, which the
-    * streaming maintenance protocol already schedules.
+    * Each batch ends by re-recording the file manifest from a fresh
+    * listing ([[commit]]), which converges under replay the same way
+    * the directories do. The `_stats` manifest is deliberately NOT
+    * touched per micro-batch (a replayed batch would double-merge
+    * counts — the counts merge is not idempotent the way the
+    * dynamic-partition data write is); it refreshes authoritatively at
+    * [[compactStoredBuckets]] time, which the streaming maintenance
+    * protocol already schedules.
     */
   def writeIndexBatch(vectors: DataFrame, path: String, batchId: Long,
                       numPlanes: Int = 8, dim: Int = 64): Unit = {
     val lsh = lshLayout(numPlanes, dim)
-    clustered(lsh.assign(vectors.select(col("vec_id"), col("embedding")))
-        .withColumn("ingest_batch", lit(batchId)), lsh.parts, "bucket", "ingest_batch")
+    val input = vectors.select(col("vec_id"), col("embedding"))
+    val rows = lsh.assign(input).withColumn("ingest_batch", lit(batchId))
+    clustered(rows, writeTasks(input, lsh.dirs), "bucket", "ingest_batch")
       .mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
+    commit(vectors.sparkSession, path, rows.schema)
   }
 
   /** Compaction for an append-maintained bucket index: every
     * [[appendToStoredBuckets]] batch adds files, and scan cost is
     * per-file, so an append-heavy index degrades the same way a
-    * streaming lake table does. One clustered rewrite restores the
-    * one-file-per-bucket layout into `dest` (a NEW path — visibility
-    * flips belong to the caller's catalog/manifest protocol, as in
-    * [[graft.sinks.Publish]]; compacting in place would race live
-    * readers). Results are layout-invariant: ann03d hash-matches the
-    * same oracle as ann03/ann03b/ann03c. */
+    * streaming lake table does. One clustered rewrite, sized against
+    * `numBuckets` directories ([[writeTasks]]), restores one file per
+    * bucket (per advisory-sized slice of a large bucket) into `dest`
+    * (a NEW path — visibility flips belong to the caller's
+    * catalog/manifest protocol, as in [[graft.sinks.Publish]];
+    * compacting in place would race live readers). Results are
+    * layout-invariant: ann03d hash-matches the same oracle as
+    * ann03/ann03b/ann03c. */
   def compactStoredBuckets(spark: org.apache.spark.sql.SparkSession,
                            src: String, dest: String,
                            numBuckets: Int = 256): Unit = {
-    clustered(spark.read.parquet(src).select(col("vec_id"), col("embedding"), col("bucket")),
-      Some(numBuckets), "bucket").mode("overwrite").parquet(dest)
-    // fresh manifest from the compacted footers — one file per bucket,
-    // O(buckets) parallel metadata reads (was a count-only re-scan job
-    // of dest before round 19).
-    writeStats(spark, dest, footerCounts(spark, dest))
+    val rows = openIndex(spark, src).select(col("vec_id"), col("embedding"), col("bucket"))
+    clustered(rows, writeTasks(rows, numBuckets), "bucket")
+      .mode("overwrite").parquet(dest)
+    // fresh manifest from the compacted footers — O(files) parallel
+    // metadata reads (was a count-only re-scan job of dest before
+    // round 19).
+    rebuildStats(spark, dest, commit(spark, dest, rows.schema).files)
   }
 
   /** [[bucketedTopK]] against a STORED bucket-partitioned corpus
@@ -565,7 +698,7 @@ object Similarity {
     // into the parquet scan (PushedFilters; PlanSpec-gated). Requires
     // the index written with the metadata columns (`metaCols` on
     // [[writeBucketedCorpus]]). Top-k ranks MATCHING vectors only.
-    val corpus = pred.foldLeft(spark.read.parquet(path))(_.filter(_))
+    val corpus = pred.foldLeft(openIndex(spark, path))(_.filter(_))
     // partition-column inference types `bucket` as IntegerType
     probeTopK(corpus, lshProbes(queries, numPlanes, dim, nprobe,
       corpus.schema("bucket").dataType), "bucket", k)
@@ -735,8 +868,9 @@ object Similarity {
   }
 
   /** The IVF family: nearest-centroid list id, `_centroids` sidecar. */
-  private def ivfLayout(cents: Seq[(Long, Seq[Double])]): Layout = Layout("centroid_id", None,
-    v => assignNearest(v.select(col("vec_id"), col("embedding")), cents, 1))
+  private def ivfLayout(cents: Seq[(Long, Seq[Double])]): Layout =
+    Layout("centroid_id", math.max(1, cents.size),
+      v => assignNearest(v.select(col("vec_id"), col("embedding")), cents, 1))
 
   /** The IVF families' probes: each query (query_id, q_emb) once per
     * centroid of its `nprobe` nearest, as `key` in `keyType` (see
@@ -778,7 +912,7 @@ object Similarity {
     * (PlanSpec-gated; ann04b re-checks ann04's oracle). */
   def ivfTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val lists = spark.read.parquet(s"$path/lists")
+    val lists = openIndex(spark, s"$path/lists")
     probeTopK(lists, ivfProbes(queries, storedCentroids(spark, path), nprobe,
       "centroid_id", lists.schema("centroid_id").dataType), "centroid_id", k)
   }
@@ -1088,10 +1222,11 @@ object Similarity {
     * `_codebook`. */
   private def ivfPqLayout(centModel: Seq[(Long, Seq[Double])],
                           cb: Map[Int, Seq[(Long, Seq[Double])]],
-                          m: Int, subDim: Int): Layout = Layout("list_id", None, v =>
-    pqAssignL2(v.select(col("vec_id"), col("embedding"))
-        .withColumn("list_id", nearestCentroid(centModel, col("embedding"))), cb, m, subDim)
-      .select(col("vec_id"), col("list_id"), col("sub"), col("centroid_id").as("code")))
+                          m: Int, subDim: Int): Layout =
+    Layout("list_id", math.max(1, centModel.size), v =>
+      pqAssignL2(v.select(col("vec_id"), col("embedding"))
+          .withColumn("list_id", nearestCentroid(centModel, col("embedding"))), cb, m, subDim)
+        .select(col("vec_id"), col("list_id"), col("sub"), col("centroid_id").as("code")))
 
   /** The IVF-PQ scorer (asymmetric distance computation), in-flight and
     * stored alike. ONE scan of the code rows ⋈ broadcast probes on
@@ -1162,7 +1297,7 @@ object Similarity {
                       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
     val cb = storedCodebook(spark, path)
     val (m, subDim) = pqShape(cb)
-    val codes = spark.read.parquet(s"$path/lists")
+    val codes = openIndex(spark, s"$path/lists")
     ivfPqScore(codes, ivfProbes(queries, storedCentroids(spark, path), nprobe, "list_id",
       codes.schema("list_id").dataType), codebookFrame(spark, cb), queries, k, m, subDim)
   }
@@ -1328,7 +1463,9 @@ object Similarity {
     * frontier's buckets, PlanSpec-gated) —
     * at 100 TB the graph build's Σ bucket² self-join is paid at index
     * time, and each query round touches O(frontier) partitions, never
-    * the full adjacency. */
+    * the full adjacency. The write is sized by the corpus
+    * ([[writeTasks]]; past one task per bucket, salted on the source
+    * `vec_id`) and ends with the file manifest ([[commit]]). */
   def writeGraphIndex(corpus: DataFrame, path: String, k: Int,
                       numPlanes: Int = 8, dim: Int = 64,
                       maxBucketSize: Option[Int] = None): Unit = {
@@ -1340,10 +1477,12 @@ object Similarity {
       maxBucketSize)
     val edges = knnGraphEdges(corpus, k, numPlanes, dim,
       maxBucketSize.map(_ => kept.select(col("__bk"))))
-    clustered(edges.withColumnRenamed("__bk", "bucket"), Some(1 << numPlanes), "bucket")
+    val rows = edges.withColumnRenamed("__bk", "bucket")
+    clustered(rows, writeTasks(corpus, 1 << numPlanes), "bucket")
       .mode("overwrite").parquet(path)
     kept.select(col("vec_id"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_seeds")
+    commit(corpus.sparkSession, path, rows.schema)
   }
 
   /** [[beamSearchTopK]] against a [[writeGraphIndex]] layout: same
@@ -1352,11 +1491,11 @@ object Similarity {
     *
     * The beam lives on the DRIVER as plain rows — per round it is
     * queries × beamWidth rows, which the in-flight plan broadcasts
-    * anyway. One call opens the stored adjacency once (a schema job,
-    * plus a listing job when the bucket directories outnumber Spark's
-    * parallel-discovery threshold), collects the query batch once and
-    * reads the `_seeds` sidecar driver-side (no job). The seeds are
-    * scored, then each round runs two small collects:
+    * anyway. One call opens the stored adjacency once, from its file
+    * manifest ([[openIndex]]: no job), collects the query batch once
+    * (one job) and reads the `_seeds` sidecar driver-side (no job). The
+    * seeds are scored (two jobs), then each round runs two small
+    * collects:
     *  1. the expansion ([[storedFrontierExpansion]]): the frontier —
     *     each beam vector with its LSH bucket — broadcast against the
     *     adjacency on (bucket, vec_id), the scan filtered to the
@@ -1366,7 +1505,10 @@ object Similarity {
     *     that also returns each candidate's bucket, the next round's
     *     frontier key.
     * Each collect is a broadcast job plus a scan job: four jobs per
-    * round, at most 5 + 4·rounds per call. Ranking runs on the driver in
+    * round, at most 3 + 4·rounds per call (an index without a file
+    * manifest adds a schema job, and a listing job when its bucket
+    * directories outnumber Spark's parallel-discovery threshold of 32).
+    * Ranking runs on the driver in
     * Spark's order — `cos_sim` descending with NaN highest, -0.0 =
     * 0.0 and nulls last, then `vec_id` ascending — and the answer is a
     * local relation (query_id, vec_id, cos_sim, rk).
@@ -1384,7 +1526,7 @@ object Similarity {
                            dim: Int = 64): DataFrame = {
     require(k >= 1 && beamWidth >= 1 && rounds >= 0,
       s"bad beam params k=$k beamWidth=$beamWidth rounds=$rounds")
-    val stored = spark.read.parquet(path)
+    val stored = openIndex(spark, path)
     val bucketType = stored.schema("bucket").dataType
     val q = queries.filter(col("vec_id").isNotNull)
       .select(col("vec_id").cast("long").as("query_id"), col("embedding").as("q_emb"))

@@ -87,6 +87,18 @@ object Lake {
       .write.mode("overwrite").parquet(s"$path/$StatsDir")
   }
 
+  /** The stats manifest of the table at `path`, read from its part
+    * files. Spark's path filter classes the `_`-prefixed manifest root
+    * itself as hidden and reads it only through its fallback to the
+    * unfiltered path list (logging "All paths were ignored"); the part
+    * files, listed on the driver, are ordinary paths. */
+  private def readManifest(spark: SparkSession, path: String): DataFrame = {
+    val dir = new org.apache.hadoop.fs.Path(s"$path/$StatsDir")
+    val parts = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dir)
+      .map(_.getPath).filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+    spark.read.parquet(parts.map(_.toString).toSeq: _*)
+  }
+
   /** Driver-side mirror of [[RuntimeFilter.bloomPositions]] (same md5
     * slicing), for probing the manifest with a literal key. */
   private[sinks] def bloomPositionsLocal(value: String): Seq[Long] = {
@@ -103,7 +115,7 @@ object Lake {
   def readPrunedEq(spark: SparkSession, path: String, column: String,
                    value: Any, maxFiles: Int = MaxPrunedFiles): DataFrame = {
     val pos = bloomPositionsLocal(String.valueOf(value))
-    val stats = spark.read.parquet(s"$path/$StatsDir")
+    val stats = readManifest(spark, path)
     val files = collectFilesBounded(stats
       .filter(pos.map(p => array_contains(col(s"bloom_$column"), p)).reduce(_ && _)),
       maxFiles, path)
@@ -142,7 +154,7 @@ object Lake {
   def pruneStatsEq(spark: SparkSession, path: String, column: String,
                    value: Any): (Long, Long) = {
     val pos = bloomPositionsLocal(String.valueOf(value))
-    val stats = spark.read.parquet(s"$path/$StatsDir")
+    val stats = readManifest(spark, path)
     val kept = stats
       .filter(pos.map(p => array_contains(col(s"bloom_$column"), p)).reduce(_ && _))
       .count()
@@ -160,7 +172,7 @@ object Lake {
     * stats). */
   def readPruned(spark: SparkSession, path: String, column: String,
                  lo: Long, hi: Long, maxFiles: Int = MaxPrunedFiles): DataFrame = {
-    val stats = spark.read.parquet(s"$path/$StatsDir")
+    val stats = readManifest(spark, path)
     val files = collectFilesBounded(stats
       .filter(col(s"max_$column") >= lo && col(s"min_$column") <= hi),
       maxFiles, path)
@@ -172,7 +184,7 @@ object Lake {
     * ratio, for specs and ops visibility. */
   def pruneStats(spark: SparkSession, path: String, column: String,
                  lo: Long, hi: Long): (Long, Long) = {
-    val stats = spark.read.parquet(s"$path/$StatsDir")
+    val stats = readManifest(spark, path)
     val kept = stats.filter(col(s"max_$column") >= lo && col(s"min_$column") <= hi).count()
     (kept, stats.count())
   }

@@ -1,0 +1,226 @@
+package graft.operators
+
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.SparkSpec
+
+/** Stored ANN indexes open from their own file manifest and write with
+  * data-sized tasks: the jobs a search starts, what a reader sees of
+  * files no manifest names, and the files a write leaves per bucket. */
+class StoredIndexSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def tmp(name: String): String =
+    java.nio.file.Files.createTempDirectory(name).toFile.getAbsolutePath
+
+  /** The final-stage task count of every Spark job `body` starts. A
+    * listener keeps the jobs of this thread's job group; a marker job
+    * before and after `body` fences its events, so all of them have
+    * arrived when the count is read. */
+  private def jobsOf(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"stored-index-spec-${java.util.UUID.randomUUID}"
+    val events = new LinkedBlockingQueue[(String, Int)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          events.put((String.valueOf(e.properties.getProperty("spark.job.description")),
+            e.stageInfos.maxBy(_.stageId).numTasks))
+    }
+    def fence(): Seq[Int] = {
+      val marker = s"fence-${java.util.UUID.randomUUID}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val seen = Seq.newBuilder[Int]
+      var e = events.poll(60, TimeUnit.SECONDS)
+      while (e != null && e._1 != marker) {
+        seen += e._2
+        e = events.poll(60, TimeUnit.SECONDS)
+      }
+      assert(e != null, "the listener never saw the fence job")
+      seen.result()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try {
+      fence()
+      body
+      fence()
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** Data files per bucket directory of an index. */
+  private def filesPerBucket(root: String): Map[String, Int] =
+    new java.io.File(root).listFiles().filter(_.getName.startsWith("bucket="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  private def rows(df: DataFrame): Set[String] = df.collect().map(_.mkString("|")).toSet
+
+  test("building a stored bucketed, IVF, IVF-PQ or graph search starts no Spark job") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 5)
+    val root = tmp("graft_open_jobs")
+    Similarity.writeBucketedCorpus(emb, s"$root/bucketed")
+    Similarity.writeIvfCorpus(emb, s"$root/ivf")
+    Similarity.writeIvfPqCorpus(emb, s"$root/ivfpq")
+    Similarity.writeGraphIndex(emb, s"$root/graph", 5, maxBucketSize = Some(200))
+    val frontier = emb.filter($"vec_id" < 8)
+      .select($"vec_id", Similarity.lshBucket($"embedding", 8, 64).cast("int"))
+      .collect().toSeq.map(r => (0L, r.getLong(0), r.get(1)))
+    var searches = Map.empty[String, DataFrame]
+    val built = Seq[(String, () => DataFrame)](
+      "bucketed" -> (() => Similarity.bucketedTopKStored(spark, s"$root/bucketed", q, 5)),
+      "ivf" -> (() => Similarity.ivfTopKStored(spark, s"$root/ivf", q, 5)),
+      "ivfpq" -> (() => Similarity.ivfPqTopKStored(spark, s"$root/ivfpq", q, 5)),
+      "graph" -> (() => Similarity.storedFrontierExpansion(
+        Similarity.openIndex(spark, s"$root/graph"), frontier)))
+    for ((family, search) <- built) {
+      val jobs = jobsOf(searches += family -> search())
+      assert(jobs.isEmpty, s"building the stored $family search started ${jobs.size} jobs")
+    }
+    // and each search answers
+    searches.foreach { case (family, df) =>
+      assert(df.collect().nonEmpty, s"the stored $family search returned nothing")
+    }
+    graft.Scratch.delete(root)
+  }
+
+  test("stored beam search runs at most 3 + 4·rounds jobs") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 5)
+    val path = tmp("graft_beam_jobs")
+    Similarity.writeGraphIndex(emb, path, 5, maxBucketSize = Some(200))
+    for (rounds <- Seq(1, 3)) {
+      val jobs = jobsOf(Similarity.beamSearchTopKStored(spark, path, emb, q, 10, 8, rounds))
+      assert(jobs.size <= 3 + 4 * rounds,
+        s"$rounds rounds ran ${jobs.size} jobs, above 3 + 4·rounds = ${3 + 4 * rounds}")
+    }
+    graft.Scratch.delete(path)
+  }
+
+  test("the file manifest is the commit point: a stray file is not read until bucketStatsVerified adopts it") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val path = tmp("graft_stray")
+    Similarity.writeBucketedCorpus(emb.filter($"vec_id" < 300), path)
+    val q = emb.filter($"vec_id" < 5)
+    val clean = rows(Similarity.bucketedTopKStored(spark, path, q, 5))
+    // a copy of query 0 under a fresh id, dropped into query 0's bucket
+    // after the manifest write: any reader of that bucket ranks it first
+    val bucket = q.filter($"vec_id" === 0L)
+      .select(Similarity.lshBucket($"embedding", 8, 64)).as[Long].head()
+    val stray = tmp("graft_stray_file")
+    q.filter($"vec_id" === 0L).select(($"vec_id" + 1000000L).as("vec_id"), $"embedding")
+      .coalesce(1).write.mode("overwrite").parquet(stray)
+    val part = new java.io.File(stray).listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath,
+      new java.io.File(s"$path/bucket=$bucket/${part.getName}").toPath)
+    assert(spark.read.parquet(path).filter($"vec_id" === 1000000L).count() == 1,
+      "precondition: a listing read sees the stray file")
+    val stale = Similarity.bucketStats(spark, path).as[(Long, Long, Long)].collect()
+      .map(r => r._1 -> r._2).toMap
+    assert(rows(Similarity.bucketedTopKStored(spark, path, q, 5)) == clean,
+      "the stored search read a file its manifest does not name")
+    // the drift check still sees the file: it rebuilds `_stats` from the
+    // listing and adopts the file into the file manifest
+    val repaired = Similarity.bucketStatsVerified(spark, path).as[(Long, Long, Long)]
+      .collect().map(r => r._1 -> r._2).toMap
+    assert(repaired == stale.updated(bucket, stale(bucket) + 1),
+      s"bucketStatsVerified must count the stray vector in bucket $bucket")
+    assert(Similarity.bucketedTopKStored(spark, path, q, 5)
+      .filter($"vec_id" === 1000000L).count() == 1,
+      "after the repair the adopted file is part of the index")
+    graft.Scratch.delete(path)
+    graft.Scratch.delete(stray)
+  }
+
+  test("a stored index opens like spark.read.parquet, with or without a manifest") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 5)
+    val root = tmp("graft_open_legacy")
+    Similarity.writeBucketedCorpus(emb, s"$root/bucketed", metaCols = Seq("label"))
+    Similarity.writeIvfCorpus(emb, s"$root/ivf")
+    Similarity.writeIvfPqCorpus(emb, s"$root/ivfpq")
+    Similarity.writeGraphIndex(emb, s"$root/graph", 5, maxBucketSize = Some(200))
+    val dirs = Seq("bucketed", "ivf/lists", "ivfpq/lists", "graph").map(d => s"$root/$d")
+    def searches(): Seq[Set[String]] = Seq(
+      rows(Similarity.bucketedTopKStored(spark, s"$root/bucketed", q, 5,
+        pred = Some($"label" === 1))),
+      rows(Similarity.ivfTopKStored(spark, s"$root/ivf", q, 5, nprobe = 2)),
+      rows(Similarity.ivfPqTopKStored(spark, s"$root/ivfpq", q, 5)),
+      rows(Similarity.beamSearchTopKStored(spark, s"$root/graph", emb, q, 10, 8, 3)))
+    for (d <- dirs) {
+      val opened = Similarity.openIndex(spark, d)
+      val listed = spark.read.parquet(d)
+      assert(opened.schema == listed.schema, s"$d opens with another schema")
+      assert(rows(opened) == rows(listed), s"$d opens with other rows")
+    }
+    val withManifest = searches()
+    dirs.foreach(d => graft.Scratch.delete(s"$d/_files"))
+    assert(dirs.forall(d => !new java.io.File(s"$d/_files").exists))
+    assert(searches() == withManifest, "a directory without a manifest answers differently")
+    graft.Scratch.delete(root)
+  }
+
+  test("a small index write runs defaultParallelism tasks and leaves one file per bucket per write") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val cores = spark.sparkContext.defaultParallelism
+    val path = tmp("graft_small_write")
+    val build = jobsOf(Similarity.writeBucketedCorpus(emb.filter($"vec_id" < 300), path))
+    assert(build.max == cores, s"build final-stage tasks per job: $build")
+    val built = filesPerBucket(path)
+    assert(built.values.forall(_ == 1), s"a build leaves one file per bucket: $built")
+    val batch = emb.filter($"vec_id" >= 300 && $"vec_id" < 400)
+    val append = jobsOf(Similarity.appendToStoredBuckets(batch, path))
+    assert(append.max == cores, s"append final-stage tasks per job: $append")
+    val hit = batch.select(Similarity.lshBucket($"embedding", 8, 64)).as[Long].collect()
+      .map(b => s"bucket=$b").toSet
+    val appended = filesPerBucket(path)
+    appended.foreach { case (b, n) =>
+      assert(n == built.getOrElse(b, 0) + (if (hit(b)) 1 else 0),
+        s"$b holds $n files after one build and one append")
+    }
+    val graph = tmp("graft_small_graph")
+    val graphJobs = jobsOf(Similarity.writeGraphIndex(emb, graph, 5, maxBucketSize = Some(200)))
+    assert(graphJobs.max == cores, s"graph build final-stage tasks per job: $graphJobs")
+    assert(filesPerBucket(graph).values.forall(_ == 1))
+    // stored ≡ in-flight over the written vectors
+    val q = emb.filter($"vec_id" < 10)
+    assert(rows(Similarity.bucketedTopKStored(spark, path, q, 5)) ==
+      rows(Similarity.bucketedTopK(emb.filter($"vec_id" < 400), q, 5)))
+    graft.Scratch.delete(path)
+    graft.Scratch.delete(graph)
+  }
+
+  test("a write larger than the advisory partition size salts each bucket over several tasks and files") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val planes = 2
+    val path = tmp("graft_salted_write")
+    val graph = tmp("graft_salted_graph")
+    spark.conf.set(key, "16k")
+    try {
+      val build = jobsOf(Similarity.writeBucketedCorpus(emb, path, planes))
+      assert(build.max > (1 << planes), s"build final-stage tasks per job: $build")
+      val built = filesPerBucket(path)
+      assert(built.size == (1 << planes) && built.values.forall(_ > 1),
+        s"every bucket must hold several files: $built")
+      val graphJobs = jobsOf(Similarity.writeGraphIndex(emb, graph, 5, planes))
+      assert(graphJobs.max > (1 << planes), s"graph build final-stage tasks per job: $graphJobs")
+      assert(filesPerBucket(graph).values.forall(_ > 1))
+    } finally spark.conf.unset(key)
+    // stored ≡ in-flight on the salted layouts
+    val q = emb.filter($"vec_id" < 10)
+    assert(rows(Similarity.bucketedTopKStored(spark, path, q, 5, planes)) ==
+      rows(Similarity.bucketedTopK(emb, q, 5, planes)))
+    assert(rows(Similarity.beamSearchTopKStored(spark, graph, emb, q, 10, 8, 3, planes)) ==
+      rows(Similarity.beamSearchTopK(Similarity.knnGraph(emb, 5, planes), emb, q,
+        Similarity.bucketSeeds(emb, planes), 10, 8, 3)))
+    graft.Scratch.delete(path)
+    graft.Scratch.delete(graph)
+  }
+}
