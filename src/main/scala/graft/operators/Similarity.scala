@@ -40,10 +40,12 @@ import graft.Stages
   *    only the probed directories (PlanSpec gates it).
   *
   * Every write ends by recording the directory's data files — path,
-  * size, mtime — and its columns in a file manifest (`_files`, next to
-  * the data; [[commit]]). A stored search opens the index from that
-  * manifest: no listing job, no schema-inference job, so building the
-  * search starts no Spark job. The manifest write is the commit point.
+  * size, mtime, row count — and its columns in a file manifest
+  * (`_files`, next to the data; [[commit]]), the index's only
+  * manifest. A stored search opens the index from it: no listing job,
+  * no schema-inference job, so building the search starts no Spark
+  * job. The bucketed index's per-bucket stats ([[bucketStats]]) are
+  * sums over it. The manifest write is the commit point.
   *
   * In-flight ≡ stored: given the same models and parameters, a stored
   * search returns exactly the rows of the in-flight search over the
@@ -53,19 +55,19 @@ import graft.Stages
   * is a rebuild to a fresh path plus a manifest flip, never an append:
   * drifted models would strand the vectors already written.
   *
-  * Single writer: appends, and the read-merge-write of the `_files`
-  * and the bucketed index's `_stats` manifests, carry no coordination.
-  * Two concurrent appenders can drop one batch from both manifests,
-  * and a crash between the data append and the manifest writes leaves
-  * data files no manifest names. Readers never see such unreferenced
-  * files: they read what the file manifest names. Run appends from one
-  * writer at a time (the streaming ingest serializes micro-batches;
-  * batch pipelines publish through [[graft.sinks.Publish]]'s one-writer
-  * versions). Both failure shapes are detectable: `_stats`' bytes no
-  * longer match the directory listing, which [[bucketStatsVerified]]
-  * checks; its repair adopts the unreferenced files into both
-  * manifests, as the index's next append also does (an append records
-  * the whole listing).
+  * Single writer: appends, and the one read-merge-write of `_files`
+  * each write ends with, carry no coordination. Two concurrent
+  * appenders can drop one batch from the manifest, and a crash between
+  * the data append and the manifest write leaves data files the
+  * manifest does not name. Readers never see such unreferenced files:
+  * they read what the manifest names. Run appends from one writer at
+  * a time (the streaming ingest serializes micro-batches; batch
+  * pipelines publish through [[graft.sinks.Publish]]'s one-writer
+  * versions). Both failure shapes are detectable: the manifest's
+  * (path, size) pairs no longer match the directory listing, which
+  * [[bucketStatsVerified]] checks; its repair adopts the unreferenced
+  * files into the manifest, as the index's next write also does (a
+  * write records the whole listing).
   */
 object Similarity {
 
@@ -157,7 +159,7 @@ object Similarity {
                                   assign: DataFrame => DataFrame) {
     /** Build (`overwrite`) or append: assign, one [[clustered]] write,
       * then the file manifest ([[commit]]). */
-    def write(vectors: DataFrame, path: String, mode: String): Written = {
+    def write(vectors: DataFrame, path: String, mode: String): Unit = {
       val rows = assign(vectors)
       clustered(rows, writeTasks(vectors, dirs), key).mode(mode).parquet(path)
       commit(vectors.sparkSession, path, rows.schema)
@@ -294,67 +296,63 @@ object Similarity {
     * `partitionBy` lays each bucket out as its own directory. */
   def writeBucketedCorpus(corpus: DataFrame, path: String,
                           numPlanes: Int = 8, dim: Int = 64,
-                          metaCols: Seq[String] = Nil): Unit = {
-    val written = lshLayout(numPlanes, dim).write(
+                          metaCols: Seq[String] = Nil): Unit =
+    lshLayout(numPlanes, dim).write(
       fanOut(corpus.select((Seq("vec_id", "embedding") ++ metaCols).map(col): _*)),
       path, "overwrite")
-    // counts from the freshly-written footers — no second corpus pass
-    // (the pre-round-19 form re-ran lshBucket over every row in a
-    // dedicated aggregation job per build; at production widths that
-    // was a full corpus re-scan, where the footer pass is O(files)
-    // driver-side metadata).
-    rebuildStats(corpus.sparkSession, path, written.files)
+
+  /** Per-bucket cardinality and size of a stored bucket index (bucket,
+    * n_vectors, n_bytes), summed per `bucket=` directory over its file
+    * manifest (`<path>/_files`): every write records each data file's
+    * size and footer row count there ([[commit]]), so a HOT LSH bucket
+    * is visible from one tiny metadata read instead of being discovered
+    * at query time (or via a 100 TB file listing). n_vectors is exact
+    * and oracle-checkable (ann03f). Read on the driver
+    * ([[readParquetDriver]]: no Spark job) and returned as a local frame
+    * of three long columns, by bucket. A directory without a manifest
+    * with row counts (written by hand, or before manifests recorded
+    * them) fails: [[bucketStatsVerified]] records one. */
+  def bucketStats(spark: org.apache.spark.sql.SparkSession,
+                  path: String): DataFrame = {
+    val files = readFiles(spark, path).getOrElse(throw new IllegalStateException(
+      s"bucketStats: $path has no file manifest with row counts ($path/$FilesName); " +
+        "bucketStatsVerified records one from the directory listing"))
+    val rows = files.flatMap(f => bucketOf(f.path).map(_ -> ((f.rows, f.size))))
+      .groupMapReduce(_._1)(_._2)((a, b) => (a._1 + b._1, a._2 + b._2))
+      .toSeq.sortBy(_._1).map { case (b, (n, nb)) => Row(b, n, nb) }
+    spark.createDataFrame(rows.asJava,
+      StructType(Seq("bucket", "n_vectors", "n_bytes").map(StructField(_, LongType))))
   }
 
-  /** Per-bucket cardinality/size manifest of a stored bucket index
-    * (`<path>/_stats`: bucket, n_vectors, n_bytes) — emitted at
-    * write/append/compact time so a HOT LSH bucket is visible from one
-    * tiny metadata read instead of being discovered at query time (or
-    * via a 100 TB file listing). Underscore-prefixed like `_centroids`,
-    * so index scans never see it. n_vectors is exact and
-    * oracle-checkable (ann03f); n_bytes comes from the driver-side
-    * directory listing of files this writer just produced. Read on the
-    * driver ([[readParquetDriver]]: no Spark job) and returned as a
-    * local frame of three long columns. */
-  def bucketStats(spark: org.apache.spark.sql.SparkSession,
-                  path: String): DataFrame =
-    spark.createDataFrame(readStats(spark, path).map(Row.fromTuple).asJava,
-      StructType(Seq("bucket", "n_vectors", "n_bytes").map(StructField(_, LongType))))
-
-  /** [[bucketStats]] with a drift check in front: the manifest's
-    * per-bucket byte totals are compared against a FRESH directory
-    * listing (O(buckets) namenode calls, never a data read). A clean
-    * manifest lists identical bytes — every manifest writer records
-    * the post-write listing — so any difference means the manifest
-    * missed data: a crash between a write's data files and its
-    * manifests, a concurrent append losing the read-merge-write race
-    * (out of the single-writer contract in the object doc, but
-    * detected rather than trusted), or a file put there by hand. On
-    * drift the manifest is REBUILT authoritatively from the index
-    * itself (the same footer pass the missing-manifest branch runs)
-    * and rewritten, and the file manifest adopts the listed files, so
-    * the returned frame, the stored search and the data on disk agree
-    * again. */
+  /** [[bucketStats]] with a drift check in front: the file manifest's
+    * (path, size) pairs are compared against a FRESH directory listing
+    * (O(directories) namenode calls, never a data read). A clean
+    * manifest names exactly the listed files — every write records its
+    * post-write listing — so any difference means the manifest missed
+    * data: a crash between a write's data files and its manifest, a
+    * concurrent append losing the read-merge-write race (out of the
+    * single-writer contract in the object doc, but detected rather than
+    * trusted), or a file put there by hand. A directory without a
+    * manifest with row counts drifts too. On drift the manifest is
+    * re-recorded from the listing through [[commit]] (recorded counts
+    * carried over, footers read for the other files), so the returned
+    * frame, the stored search and the data on disk agree again. */
   def bucketStatsVerified(spark: org.apache.spark.sql.SparkSession,
                           path: String): DataFrame = {
-    def manifestBytes: Option[Map[Long, Long]] =
-      if (!exists(spark, s"$path/$StatsName")) None
-      else Some(readStats(spark, path).map { case (b, _, nb) => b -> nb }.toMap)
-    val files = listData(spark, path)
-    if (!manifestBytes.contains(bucketBytes(files))) {
-      rebuildStats(spark, path, files)
-      readFiles(spark, path).foreach(m => recordFiles(spark, path, m.schema, files))
-      // Convergence check (round-17 ADVICE): a rebuild reconciles the
-      // manifest with the listing by construction ([[writeStats]] now
-      // carries listing-only buckets as zero-count rows), so a SECOND
-      // mismatch means something is mutating the index concurrently or
-      // the filesystem listing is unstable — fail loudly instead of
-      // silently re-triggering the full O(corpus) rescan on every call.
-      val after = bucketBytes(listData(spark, path))
-      if (!manifestBytes.contains(after)) throw new IllegalStateException(
-        s"bucketStatsVerified: manifest at $path/$StatsName still drifts " +
-          s"from the directory listing after an authoritative rebuild — " +
-          s"concurrent writer or unstable listing; listing=$after")
+    def drifts: Boolean = !readFiles(spark, path).exists(_.map(f => f.path -> f.size).toSet ==
+      listData(spark, path).map(d => d.rel -> d.status.getLen).toSet)
+    if (drifts) {
+      // a directory without a manifest has no recorded columns: read them from the data
+      commit(spark, path, spark.read.parquet(path).schema)
+      // Convergence check (round-17 ADVICE): a re-record names the
+      // listing by construction, so a SECOND mismatch means something is
+      // mutating the index concurrently or the filesystem listing is
+      // unstable — fail loudly instead of silently re-recording on
+      // every call.
+      if (drifts) throw new IllegalStateException(
+        s"bucketStatsVerified: manifest at $path/$FilesName still drifts " +
+          s"from the directory listing after it was re-recorded — " +
+          s"concurrent writer or unstable listing")
     }
     bucketStats(spark, path)
   }
@@ -370,54 +368,19 @@ object Similarity {
     bucketStatsVerified(spark, path).filter(col("n_vectors") > threshold)
       .orderBy(col("n_vectors").desc, col("bucket").asc)
 
-  private val StatsName = "_stats"
   private val FilesName = "_files"
 
-  /** Authoritative manifest rebuild from the index data itself — the
-    * recovery path for a missing or drifted `_stats`. Row counts come
-    * from the bucket files' parquet FOOTERS ([[footerCounts]]), so
-    * the rebuild is O(files) driver-side metadata reads — never a
-    * data scan, never a Spark job. */
-  private def rebuildStats(spark: org.apache.spark.sql.SparkSession, path: String,
-                           files: Seq[DataFile]): Unit =
-    writeStats(spark, path, footerCounts(spark, files), files)
-
-  private def writeStats(spark: org.apache.spark.sql.SparkSession, path: String,
-                         counts: Map[Long, Long], files: Seq[DataFile]): Unit = {
-    // The manifest is bucket-count bounded (≤ 2^planes rows), so the
-    // byte-listing merge happens DRIVER-SIDE — the guarded-collect
-    // class of k-means centroids.
-    val bytes = bucketBytes(files)
-    // Listing-only buckets (a bucket dir whose files hold zero data
-    // rows — e.g. a crashed write's leftovers) are carried as
-    // zero-count rows: byte totals then always reconcile with the
-    // listing, so [[bucketStatsVerified]]'s drift check CONVERGES
-    // after one rebuild instead of rescanning the index forever.
-    val rows = (counts.keySet ++ bytes.keySet).toSeq.sorted.map { b =>
-      (b, counts.getOrElse(b, 0L), bytes.getOrElse(b, 0L))
-    }
-    writeParquetDriver(spark, s"$path/$StatsName", "message stats { required int64 bucket; " +
-        "required int64 n_vectors; required int64 n_bytes; }") { f =>
-      rows.map { case (b, n, nb) =>
-        f.newGroup().append("bucket", b).append("n_vectors", n).append("n_bytes", nb)
-      }
-    }
-  }
-
-  /** (bucket, n_vectors, n_bytes) rows of an existing `_stats`
-    * manifest — the read twin of [[writeStats]], O(buckets) rows. */
-  private def readStats(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Seq[(Long, Long, Long)] =
-    readParquetDriver(spark, s"$path/$StatsName")(g =>
-      (g.getLong("bucket", 0), g.getLong("n_vectors", 0), g.getLong("n_bytes", 0)))
+  /** The LSH bucket directory a relative data-file path sits under, if
+    * any (a streaming layout's `ingest_batch=` level below it counts
+    * toward its bucket). */
+  private def bucketOf(rel: String): Option[Long] =
+    Some(rel.takeWhile(_ != '/')).filter(_.startsWith("bucket="))
+      .map(_.stripPrefix("bucket=").toLong)
 
   /** One data file of an index directory: its path relative to the
     * directory (`bucket=3/part-….parquet`) and its listing status. */
   private final case class DataFile(rel: String, status: org.apache.hadoop.fs.FileStatus) {
-    /** The LSH bucket directory it sits under, if any. */
-    def bucket: Option[Long] =
-      Some(rel.takeWhile(_ != '/')).filter(_.startsWith("bucket="))
-        .map(_.stripPrefix("bucket=").toLong)
+    def key: (String, Long, Long) = (rel, status.getLen, status.getModificationTime)
   }
 
   /** Every data file under an index directory, from one listing per
@@ -444,83 +407,76 @@ object Similarity {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** bucket → total data-file bytes of a listing. */
-  private def bucketBytes(files: Seq[DataFile]): Map[Long, Long] =
-    files.flatMap(f => f.bucket.map(_ -> f.status.getLen)).groupMapReduce(_._1)(_._2)(_ + _)
-
-  /** (bucket → exact row count) from one parquet-FOOTER read per data
-    * file (a parquet footer records its file's row total) — O(files)
-    * driver-side metadata reads, zero Spark jobs, zero data-page
-    * reads. Footer opens are parallelized over a bounded thread pool:
+  /** Each file's exact row count from its parquet FOOTER (a parquet
+    * footer records its file's row total) — O(files) driver-side
+    * metadata reads, zero Spark jobs, zero data-page reads. Footer
+    * opens run in parallel over a bounded pool ([[Stages.overlap]]):
     * each open is a few ms of positioned reads, and a freshly-written
     * index has one file per bucket, so serial opens would cost
     * O(buckets × ms) on the driver (measured 2.5× on the ann03d
-    * lifecycle before parallelizing). A streaming layout's files under
-    * `ingest_batch=` subdirectories count toward their bucket. */
-  private def footerCounts(spark: org.apache.spark.sql.SparkSession,
-                           files: Seq[DataFile]): Map[Long, Long] = {
+    * lifecycle before parallelizing). */
+  private def footerRows(spark: org.apache.spark.sql.SparkSession,
+                         files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def footerRows(st: org.apache.hadoop.fs.FileStatus): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromStatus(st, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }
-    val perBucket = files.flatMap(f => f.bucket.map(_ -> f.status))
-      .groupMap(_._1)(_._2).toSeq.map { case (b, sts) =>
-        s"footers bucket=$b" -> (() => b -> sts.map(footerRows).sum)
+    Stages.overlap(files.map { st =>
+      s"footer ${st.getPath}" -> { () =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
       }
-    Stages.overlap(perBucket: _*).toMap
+    }: _*)
   }
 
-  /** The file manifest of an index directory (`<dir>/_files`): the
-    * written columns, and per data file its path relative to the
-    * directory, its size and its modification time. */
-  private final case class IndexFiles(schema: StructType, files: Seq[(String, Long, Long)])
-
-  /** One index write's outcome: the directory's data files after it,
-    * and the relative paths its manifest named before it (None: the
-    * directory had no manifest). */
-  private final case class Written(files: Seq[DataFile], before: Option[Set[String]])
+  /** One row of an index directory's file manifest (`<dir>/_files`): a
+    * data file's path relative to the directory, its size, modification
+    * time and footer row count, and the written columns (a Spark schema
+    * as JSON, the same on every row). */
+  private final case class FileEntry(path: String, size: Long, mtime: Long, rows: Long,
+                                     schema: String) {
+    def key: (String, Long, Long) = (path, size, mtime)
+  }
 
   /** The end of every index write: list the directory's data files and
     * record them as its manifest, keeping the manifest's column schema
     * when there is one (an append), else `written`'s (the frame just
-    * written, partition columns included). Readers open the index from
-    * this manifest ([[openIndex]]), so its write is the commit point:
-    * files no manifest names are never read. */
+    * written, partition columns included; evaluated only then). A file
+    * the manifest already names with the same path, size and mtime
+    * keeps its recorded row count; only the others' footers are read
+    * ([[footerRows]]), so an append costs O(batch) footer reads.
+    * Readers open the index from this manifest ([[openIndex]]), so its
+    * write is the commit point: files it does not name are never read. */
   private def commit(spark: org.apache.spark.sql.SparkSession, root: String,
-                     written: StructType): Written = {
-    val before = readFiles(spark, root)
-    val files = listData(spark, root)
-    recordFiles(spark, root, before.fold(written)(_.schema), files)
-    Written(files, before.map(_.files.map(_._1).toSet))
-  }
-
-  private def recordFiles(spark: org.apache.spark.sql.SparkSession, root: String,
-                          schema: StructType, files: Seq[DataFile]): Unit = {
-    val json = schema.json
+                     written: => StructType): Unit = {
+    val before = readFiles(spark, root).getOrElse(Nil)
+    val known = before.map(f => f.key -> f.rows).toMap
+    val files = listData(spark, root).sortBy(_.rel)
+    val fresh = files.filterNot(f => known.contains(f.key))
+    val rows = known ++ fresh.map(_.key).zip(footerRows(spark, fresh.map(_.status)))
+    lazy val json = before.headOption.fold(written.json)(_.schema)
     writeParquetDriver(spark, s"$root/$FilesName", "message files { required binary path " +
-        "(STRING); required int64 size; required int64 mtime; required binary schema (STRING); }") {
-      f => files.sortBy(_.rel).map { d =>
+        "(STRING); required int64 size; required int64 mtime; required int64 rows; " +
+        "required binary schema (STRING); }") {
+      f => files.map { d =>
         f.newGroup().append("path", d.rel).append("size", d.status.getLen)
-          .append("mtime", d.status.getModificationTime).append("schema", json)
+          .append("mtime", d.status.getModificationTime).append("rows", rows(d.key))
+          .append("schema", json)
       }
     }
   }
 
   /** An index directory's file manifest, read on the driver; None when
-    * it has none (or it names no file). */
+    * it has none, or has one written before manifests recorded row
+    * counts (such a directory is read and repaired as if it had none). */
   private def readFiles(spark: org.apache.spark.sql.SparkSession,
-                        root: String): Option[IndexFiles] = {
+                        root: String): Option[Seq[FileEntry]] =
     if (!exists(spark, s"$root/$FilesName")) None
     else {
-      val rows = readParquetDriver(spark, s"$root/$FilesName")(g => (g.getString("path", 0),
-        g.getLong("size", 0), g.getLong("mtime", 0), g.getString("schema", 0)))
-      rows.headOption.map(h => IndexFiles(DataType.fromJson(h._4).asInstanceOf[StructType],
-        rows.map(r => (r._1, r._2, r._3))))
+      val rows = readParquetDriver(spark, s"$root/$FilesName")(g =>
+        Option.when(g.getType.containsField("rows"))(FileEntry(g.getString("path", 0),
+          g.getLong("size", 0), g.getLong("mtime", 0), g.getLong("rows", 0),
+          g.getString("schema", 0))))
+      Option.when(rows.forall(_.isDefined))(rows.flatten)
     }
-  }
 
   /** A stored index directory as a DataFrame — the frame
     * `spark.read.parquet(root)` gives. With a file manifest it is a
@@ -531,43 +487,27 @@ object Similarity {
     * read with `spark.read.parquet`. */
   private[graft] def openIndex(spark: org.apache.spark.sql.SparkSession,
                                root: String): DataFrame =
-    readFiles(spark, root).fold(spark.read.parquet(root))(m =>
-      ManifestFileIndex.open(spark, root, m.files, m.schema))
+    readFiles(spark, root).filter(_.nonEmpty).fold(spark.read.parquet(root))(m =>
+      ManifestFileIndex.open(spark, root, m.map(f => (f.path, f.size, f.mtime)),
+        DataType.fromJson(m.head.schema).asInstanceOf[StructType]))
 
   /** Append a batch to the stored bucket index with the SAME
     * hyperplanes: untouched buckets keep their exact files
     * (spec-pinned), and readers of other buckets are undisturbed.
     * Queries via [[bucketedTopKStored]] see old ∪ new once the file
     * manifest is written (ann03c proves parity with the all-at-once
-    * build against ann03's oracle). Single writer only (object doc);
-    * consumers of the stats ([[hotBuckets]]) self-heal through
-    * [[bucketStatsVerified]]. */
+    * build against ann03's oracle); [[bucketStats]] counts the batch
+    * from the same write, which reads only the batch files' footers.
+    * Single writer only (object doc); consumers of the stats
+    * ([[hotBuckets]]) self-heal through [[bucketStatsVerified]]. */
   def appendToStoredBuckets(newVectors: DataFrame, path: String,
-                            numPlanes: Int = 8, dim: Int = 64): Unit = {
-    val spark = newVectors.sparkSession
-    val written = lshLayout(numPlanes, dim).write(
+                            numPlanes: Int = 8, dim: Int = 64): Unit =
+    lshLayout(numPlanes, dim).write(
       newVectors.select(col("vec_id"), col("embedding")), path, "append")
-    // Stats maintenance is O(batch ∪ buckets), never O(corpus): the
-    // footers of the files the file manifest did not name before this
-    // write (the batch's) give its counts, which merge into the
-    // existing manifest driver-side — untouched buckets' rows carry
-    // over verbatim (spec-pinned). Deliberately NOT the footer pass
-    // the build/compact writers use: an append-heavy index accumulates
-    // files, so re-reading every footer per append is O(index files)
-    // where this merge stays O(batch). An index predating either
-    // manifest gets one authoritative footer rebuild.
-    written.before.filter(_ => exists(spark, s"$path/$StatsName")) match {
-      case Some(seen) =>
-        val batch = footerCounts(spark, written.files.filterNot(f => seen(f.rel)))
-        val old = readStats(spark, path).map { case (b, n, _) => b -> n }.toMap
-        writeStats(spark, path, (old.keySet ++ batch.keySet).map(b =>
-          b -> (old.getOrElse(b, 0L) + batch.getOrElse(b, 0L))).toMap, written.files)
-      case None => rebuildStats(spark, path, written.files)
-    }
-  }
 
   /** Every row of a small parquet directory this library wrote itself
-    * (the `_stats` and `_files` manifests, the graph index's `_seeds`),
+    * (the `_files` manifests, the model sidecars, the graph index's
+    * `_seeds`),
     * read with the parquet-hadoop Group reader on the driver: no Spark
     * job, no schema inference. `row` maps one record. */
   private def readParquetDriver[T](spark: org.apache.spark.sql.SparkSession,
@@ -639,14 +579,13 @@ object Similarity {
     * top-level directory, so query-side dynamic partition pruning is
     * unaffected; [[compactStoredBuckets]] folds the batch level away.
     *
-    * Each batch ends by re-recording the file manifest from a fresh
-    * listing ([[commit]]), which converges under replay the same way
-    * the directories do. The `_stats` manifest is deliberately NOT
-    * touched per micro-batch (a replayed batch would double-merge
-    * counts — the counts merge is not idempotent the way the
-    * dynamic-partition data write is); it refreshes authoritatively at
-    * [[compactStoredBuckets]] time, which the streaming maintenance
-    * protocol already schedules.
+    * Each batch ends by re-recording the file manifest, row counts
+    * included, from a fresh listing ([[commit]]). That is
+    * replay-idempotent the same way the directories are: a replay's
+    * listing no longer names the files it replaced, so their counts
+    * leave the manifest with them and the replay's own files are
+    * counted once, from their footers — [[bucketStats]] is current
+    * after every micro-batch.
     */
   def writeIndexBatch(vectors: DataFrame, path: String, batchId: Long,
                       numPlanes: Int = 8, dim: Int = 64): Unit = {
@@ -666,7 +605,9 @@ object Similarity {
     * bucket (per advisory-sized slice of a large bucket) into `dest`
     * (a NEW path — visibility flips belong to the caller's
     * catalog/manifest protocol, as in [[graft.sinks.Publish]];
-    * compacting in place would race live readers). Results are
+    * compacting in place would race live readers). `dest`'s manifest
+    * counts its files from their footers, O(files) parallel metadata
+    * reads, so [[bucketStats]] on it needs no data scan. Results are
     * layout-invariant: ann03d hash-matches the same oracle as
     * ann03/ann03b/ann03c. */
   def compactStoredBuckets(spark: org.apache.spark.sql.SparkSession,
@@ -675,10 +616,7 @@ object Similarity {
     val rows = openIndex(spark, src).select(col("vec_id"), col("embedding"), col("bucket"))
     clustered(rows, writeTasks(rows, numBuckets), "bucket")
       .mode("overwrite").parquet(dest)
-    // fresh manifest from the compacted footers — O(files) parallel
-    // metadata reads (was a count-only re-scan job of dest before
-    // round 19).
-    rebuildStats(spark, dest, commit(spark, dest, rows.schema).files)
+    commit(spark, dest, rows.schema)
   }
 
   /** [[bucketedTopK]] against a STORED bucket-partitioned corpus

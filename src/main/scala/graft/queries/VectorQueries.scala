@@ -601,14 +601,15 @@ SELECT vec_id, CAST(sum(bval) AS BIGINT) AS bucket FROM bits GROUP BY vec_id""")
       },
       Some(ann03Oracle)),
 
-    // The stored index's STATS MANIFEST as the source of truth: build +
-    // append maintain `_stats` (bucket, n_vectors, n_bytes) at write
-    // time — O(batch ∪ buckets) merges, never an index rescan — so hot
-    // LSH buckets are a one-row metadata read BEFORE queries discover
-    // them the hard way. This query reads the manifest (not the data,
-    // not a file listing) after a build+append lifecycle; the oracle
+    // The stored index's FILE MANIFEST as the source of truth: build +
+    // append record each data file's footer row count in `_files` at
+    // write time — an append reads only its own files' footers, never
+    // an index rescan — and bucketStats sums it per bucket, so hot LSH
+    // buckets are a small metadata read BEFORE queries discover them
+    // the hard way. This query reads the manifest (not the data, not a
+    // file listing) after a build+append lifecycle; the oracle
     // recomputes every bucket's cardinality from the embeddings table,
-    // so a stale or mis-merged manifest fails the hash.
+    // so a stale or mis-counted manifest fails the hash.
     Q("ann03f_bucket_stats",
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -630,9 +631,9 @@ SELECT bucket, CAST(count(*) AS BIGINT) AS n_vectors FROM bk GROUP BY bucket""")
 
     // The hotBuckets REPORT as a first-class query: the capacity
     // planner's view over ann03f's manifest — buckets above 1.5× the
-    // MEAN bucket load, largest first — answered from the
-    // bucket-count-sized `_stats` read alone (no data scan, no file
-    // listing). The scale-free threshold keeps real buckets on BOTH
+    // MEAN bucket load, largest first — answered from the `_files`
+    // manifest plus hotBuckets' drift check against a listing (no data
+    // scan). The scale-free threshold keeps real buckets on BOTH
     // sides of the cut at every gate SF, and `cnt > 1.5·total/nb` is
     // evaluated as the exact integer predicate `2·cnt·nb > 3·total`
     // (threshold = (3·total) div (2·nb) — equivalent for integer cnt),

@@ -327,7 +327,7 @@ class SimilaritySpec extends SparkSpec {
     // legacy index without a manifest: first append rebuilds it authoritatively
     val legacy = java.nio.file.Files.createTempDirectory("graft_stats_legacy").toString
     Similarity.writeBucketedCorpus(emb.filter($"vec_id" < 200), legacy)
-    val fs = new java.io.File(s"$legacy/_stats")
+    val fs = new java.io.File(s"$legacy/_files")
     def del(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(del); f.delete(): Unit
     }
@@ -351,7 +351,7 @@ class SimilaritySpec extends SparkSpec {
     // clean manifest: the verified read returns it UNCHANGED (no rebuild —
     // the _stats files' byte content is identical before and after)
     def statsBytes(): Seq[(String, Long)] =
-      new java.io.File(s"$path/_stats").listFiles().toSeq
+      new java.io.File(s"$path/_files").listFiles().toSeq
         .map(f => f.getName -> f.length()).sortBy(_._1)
     val before = statsBytes()
     val clean = Similarity.bucketStatsVerified(spark, path)
