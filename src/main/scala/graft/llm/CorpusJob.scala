@@ -170,9 +170,11 @@ object CorpusJob {
           "domain_ledger" -> ledger),
         outRoot, version,
         partitioning = Map("corpus_shards" -> Seq("shard")))
-      Result(Some(s"v-$version"), Map(
-        "docs_in" -> docs.count(),
-        "published" -> assigned.count()))
+      // two jobs per count, overlapped like TurnosJob's
+      val Seq(docsIn, published) = Stages.overlap(
+        "llm count docs_in" -> (() => docs.count()),
+        "llm count published" -> (() => assigned.count()))
+      Result(Some(s"v-$version"), Map("docs_in" -> docsIn, "published" -> published))
     }
   }
 }

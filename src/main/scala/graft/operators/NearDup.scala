@@ -2,6 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, RDDScanExec, SparkPlan, UnaryExecNode, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.Stages
 import graft.functions.TextAnalysis
@@ -59,10 +66,50 @@ object NearDup {
     * operators paid an unconditional full token-stream window shuffle
     * that incidentally provided this parallelism; the projection
     * rewrites removed that shuffle, so the floor keeps small-input
-    * parallelism without reintroducing it.) */
+    * parallelism without reintroducing it.)
+    *
+    * The partition count is read off the planned (pre-adaptive)
+    * physical plan ([[plannedPartitions]]), so deciding runs no Spark
+    * job: counting through `df.rdd` runs every adaptive query stage
+    * under the frame and throws the results away for the next action to
+    * recompute. Fallback: where the plan leaves the count to adaptive
+    * execution (an exchange without an explicit count, a shuffled join:
+    * 6 of the 120 calls the sf0.01 registry makes) or has a leaf other
+    * than a file scan or a staged frame, the count still comes from
+    * `df.rdd`. */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    val planned = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => plannedPartitions(a.initialPlan)
+      case p => plannedPartitions(p)
+    }
+    if (planned.getOrElse(df.rdd.getNumPartitions) >= target) df else df.repartition(target)
+  }
+
+  /** The partitions a physical plan produces, where the plan alone fixes
+    * them: an explicit-count repartition (which adaptive execution never
+    * coalesces) gives its count; a broadcast hash join its streamed
+    * side's; a narrow node its child's; a union that does not keep its
+    * children's partitioning the sum of their counts; a file scan its
+    * splits and a staged frame its RDD's
+    * partitions, both known on the driver. None otherwise. */
+  private def plannedPartitions(plan: SparkPlan): Option[Int] = plan match {
+    case s: ShuffleExchangeExec =>
+      // (`numPartitions` would build the shuffle, executing the child)
+      Option.when(s.shuffleOrigin == REPARTITION_BY_NUM)(s.outputPartitioning.numPartitions)
+    case j: BroadcastHashJoinExec =>
+      plannedPartitions(if (j.buildSide == BuildRight) j.left else j.right)
+    case u: UnionExec if u.outputPartitioning.isInstanceOf[UnknownPartitioning] =>
+      u.children.map(plannedPartitions)
+        .reduceOption((a, b) => a.zip(b).map { case (x, y) => x + y }).flatten
+    // a dynamic partition filter would run its subquery to list the splits
+    case s: FileSourceScanExec
+      if !s.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) =>
+      Some(s.inputRDD.getNumPartitions)
+    case r: RDDScanExec => Some(r.rdd.getNumPartitions)
+    case _: Exchange | _: CoalesceExec => None
+    case n: UnaryExecNode => plannedPartitions(n.child)
+    case _ => None
   }
 
   /** Exact dedup by normalized-content fingerprint: canonical doc =

@@ -34,7 +34,13 @@ object Packing {
     * `name` as the INCLUSIVE running total (callers wanting the
     * exclusive prefix subtract `value`). */
   def runningTotal(df: DataFrame, order: Seq[Column], value: Column,
-                   name: String): DataFrame = {
+                   name: String): DataFrame =
+    runningTotalAndSum(df, order, value, name)._1
+
+  /** [[runningTotal]] and the grand total of `value`, summed from the
+    * per-partition totals it collects anyway. */
+  private def runningTotalAndSum(df: DataFrame, order: Seq[Column], value: Column,
+                                 name: String): (DataFrame, Long) = {
     val spark = df.sparkSession
     val prepared = df.withColumn("__rt_v", value.cast(LongType))
       .repartitionByRange(order: _*).sortWithinPartitions(order: _*)
@@ -56,7 +62,7 @@ object Packing {
       var acc = bc.value.getOrElse(pid, 0L)
       it.map { r => acc += r.getLong(vIdx); Row.fromSeq(r.toSeq :+ acc) }
     }
-    spark.createDataFrame(out, schema).drop("__rt_v")
+    (spark.createDataFrame(out, schema).drop("__rt_v"), sums.map(_._2).sum)
   }
 
   /** Deterministic pseudo-random shard assignment — the LAST mile of a
@@ -73,7 +79,12 @@ object Packing {
     * (prefix·N) div total`, exact integer arithmetic both engines
     * reproduce bit-for-bit (prefix < total ≤ ~2.5e13 tokens at 100 TB
     * and N ≤ ~10⁵ keep the product far under 2⁶³). Zero-token corpora
-    * all land in shard 0. Adds `shard`; keeps every input column. */
+    * all land in shard 0. Adds `shard`; keeps every input column.
+    *
+    * `total` is the sum of the per-partition totals [[runningTotal]]
+    * collects, so the input is computed once: a separate aggregate
+    * would re-run the whole unstaged chain under it (`CorpusJob`'s
+    * token-budget mix: 7 jobs). */
   def shardAssignments(df: DataFrame, idCol: String, tokens: Column,
                        numShards: Int, seed: String): DataFrame = {
     require(numShards >= 1, s"numShards must be >= 1: $numShards")
@@ -81,9 +92,7 @@ object Packing {
       .withColumn("__sh_t", tokens.cast(LongType))
       .withColumn("__sh_rk",
         md5(concat(lit(seed + ":"), col(idCol).cast("string"))))
-    val total = Option(
-      keyed.agg(sum(col("__sh_t"))).first().get(0)).fold(0L)(_.asInstanceOf[Long])
-    val cum = runningTotal(keyed, Seq(col("__sh_rk"), col(idCol)),
+    val (cum, total) = runningTotalAndSum(keyed, Seq(col("__sh_rk"), col(idCol)),
       col("__sh_t"), "__sh_cum")
     val assigned =
       if (total <= 0L) cum.withColumn("shard", lit(0))

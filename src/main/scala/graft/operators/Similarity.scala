@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 import graft.Stages
+import graft.sinks.Publish.writeTasks
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ArrayType(FloatType)): brute-force cosine top-k as the exact
@@ -161,7 +161,7 @@ object Similarity {
       * then the file manifest ([[commit]]). */
     def write(vectors: DataFrame, path: String, mode: String): Unit = {
       val rows = assign(vectors)
-      clustered(rows, writeTasks(vectors, dirs), key).mode(mode).parquet(path)
+      clustered(rows, writeTasks(vectors), dirs, key).mode(mode).parquet(path)
       commit(vectors.sparkSession, path, rows.schema)
     }
   }
@@ -170,10 +170,11 @@ object Similarity {
     * repartitioned by the first partition column before `partitionBy`.
     * Without it every task writes a file into every directory (tasks ×
     * directories small files); with it each directory's rows land in
-    * one task, so one file per directory per write. `sizing` = (tasks,
-    * salts) from [[writeTasks]] pins the partition count; salts > 1 add
-    * `vec_id`'s hash mod salts to the key, so a directory's rows spread
-    * over up to `salts` tasks and files.
+    * one task, so one file per directory per write. `tasks` (from
+    * [[writeTasks]]) pins the partition count. Past one task per
+    * directory, salts = ⌈tasks / `dirs`⌉ > 1 add `vec_id`'s hash mod
+    * salts to the key, so a directory's rows spread over up to `salts`
+    * tasks and advisory-sized files.
     *
     * Why the count is derived from the data: it used to be one task
     * per directory, 2^planes — 256 tasks for a 500-vector sf0.01 index,
@@ -191,32 +192,11 @@ object Similarity {
     * append of 100 vectors to three indexes went from 71 tasks and
     * 2.58 s to 15 tasks and 1.79 s, and the four-index build from 194
     * tasks to 80. */
-  private def clustered(df: DataFrame, sizing: (Int, Int),
+  private def clustered(df: DataFrame, tasks: Int, dirs: Int,
                         keys: String*): DataFrameWriter[Row] = {
-    val (tasks, salts) = sizing
+    val salts = (tasks + dirs - 1) / dirs
     val salt = if (salts > 1) Seq(pmod(xxhash64(col("vec_id")), lit(salts))) else Nil
     df.repartition(tasks, col(keys.head) +: salt: _*).write.partitionBy(keys: _*)
-  }
-
-  /** (tasks, salts) of a [[clustered]] write of `input`'s rows into
-    * `dirs` partition directories: tasks = max(defaultParallelism,
-    * ⌈input bytes / AQE's advisory partition size⌉), salts = ⌈tasks /
-    * dirs⌉. Input bytes are the optimizer's size of each source the
-    * input reads (files, local rows), summed — a join's estimate would
-    * multiply; a source of unknown size counts as nothing. Up to one
-    * task per directory, hashing the directory key leaves one file per
-    * directory; past it, each directory splits into advisory-sized
-    * files. */
-  private def writeTasks(input: DataFrame, dirs: Int): (Int, Int) = {
-    val spark = input.sparkSession
-    val conf = spark.sessionState.conf
-    val unknown = BigInt(conf.defaultSizeInBytes)
-    val bytes = input.queryExecution.optimizedPlan.collectLeaves()
-      .map(_.stats.sizeInBytes).filter(_ < unknown).sum
-    val advisory = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val tasks = math.max(spark.sparkContext.defaultParallelism,
-      ((bytes + advisory - 1) / advisory).min(Int.MaxValue).toInt)
-    (tasks, (tasks + dirs - 1) / dirs)
   }
 
   /** The bucketed family: the LSH bucket is a pure projection of the
@@ -592,7 +572,7 @@ object Similarity {
     val lsh = lshLayout(numPlanes, dim)
     val input = vectors.select(col("vec_id"), col("embedding"))
     val rows = lsh.assign(input).withColumn("ingest_batch", lit(batchId))
-    clustered(rows, writeTasks(input, lsh.dirs), "bucket", "ingest_batch")
+    clustered(rows, writeTasks(input), lsh.dirs, "bucket", "ingest_batch")
       .mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
     commit(vectors.sparkSession, path, rows.schema)
   }
@@ -614,7 +594,7 @@ object Similarity {
                            src: String, dest: String,
                            numBuckets: Int = 256): Unit = {
     val rows = openIndex(spark, src).select(col("vec_id"), col("embedding"), col("bucket"))
-    clustered(rows, writeTasks(rows, numBuckets), "bucket")
+    clustered(rows, writeTasks(rows), numBuckets, "bucket")
       .mode("overwrite").parquet(dest)
     commit(spark, dest, rows.schema)
   }
@@ -1416,7 +1396,7 @@ object Similarity {
     val edges = knnGraphEdges(corpus, k, numPlanes, dim,
       maxBucketSize.map(_ => kept.select(col("__bk"))))
     val rows = edges.withColumnRenamed("__bk", "bucket")
-    clustered(rows, writeTasks(corpus, 1 << numPlanes), "bucket")
+    clustered(rows, writeTasks(corpus), 1 << numPlanes, "bucket")
       .mode("overwrite").parquet(path)
     kept.select(col("vec_id"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/_seeds")

@@ -572,4 +572,29 @@ class NearDupSpec extends SparkSpec {
     assert(dup >= 30, s"expected most of the 60 shifted tokens to dedup, got $dup")
     assert(d < n)
   }
+
+  test("fanOut over a semi-join on a fanned-out frame starts no job and keeps the frame") {
+    val cores = spark.sparkContext.defaultParallelism
+    val scan = graft.Tables.documents(spark, sf0001)
+    val fanned = NearDup.fanOut(scan)
+    assert(fanned ne scan, "precondition: the one-file scan fans out")
+    val semi = fanned.join(scan.filter($"doc_id" < 50).select("doc_id"), Seq("doc_id"), "left_semi")
+    var out = semi
+    val jobs = jobsOf { out = NearDup.fanOut(semi) }
+    assert(jobs.isEmpty, s"deciding started ${jobs.size} jobs")
+    assert(out eq semi, s"a frame over a $cores-way repartition must be kept")
+  }
+
+  test("fanOut spreads a one-file scan and a one-partition staged frame without a job") {
+    val cores = spark.sparkContext.defaultParallelism
+    val scan = graft.Tables.documents(spark, sf0001).select("doc_id", "text")
+    val staged = graft.Stages.stage(scan.repartition(1))
+    Seq("one-file scan" -> scan, "one-partition staged frame" -> staged).foreach { case (what, df) =>
+      var out = df
+      val jobs = jobsOf { out = NearDup.fanOut(df) }
+      assert(jobs.isEmpty, s"deciding on a $what started ${jobs.size} jobs")
+      assert(out.rdd.getNumPartitions == cores, s"a $what must fan out to $cores partitions")
+    }
+    graft.Stages.release(staged)
+  }
 }

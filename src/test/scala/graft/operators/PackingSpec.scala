@@ -149,4 +149,28 @@ class PackingSpec extends SparkSpec {
       .select($"shard").as[Int].collect()
     assert(a.forall(_ == 0))
   }
+
+  test("shardAssignments equals the token-interval formula over a reference prefix sum") {
+    val n = 8
+    val got = Packing.shardAssignments(fixture, "id", col("n"), n, "seedA")
+      .select($"id", $"shard").as[(Long, Int)].collect().toMap
+    // reference: global window prefix in (md5(seed:id), id) order, total by aggregate
+    val keyed = fixture.withColumn("rk", md5(concat(lit("seedA:"), $"id".cast("string"))))
+    val total = keyed.agg(sum($"n")).as[Long].first()
+    val want = keyed
+      .withColumn("cum", sum($"n").over(Window.orderBy($"rk", $"id")).cast("long"))
+      .select($"id", least(lit(n - 1L), expr(s"(cum - n) * ${n}L div ${total}L")).as("s"))
+      .as[(Long, Long)].collect().map { case (id, sh) => id -> sh.toInt }.toMap
+    assert(got == want)
+  }
+
+  test("shardAssignments runs no job besides runningTotal's") {
+    // the same input and order shape: runningTotal's sample, shuffle and
+    // per-partition totals jobs are all shardAssignments may run
+    val order = Seq(md5(concat(lit("s:"), $"id".cast("string"))), $"id")
+    val alone = jobsOf(Packing.runningTotal(fixture, order, $"n", "cum"))
+    val assigned = jobsOf(Packing.shardAssignments(fixture, "id", $"n", 4, "s"))
+    assert(assigned.size == alone.size,
+      s"shardAssignments ran ${assigned.size} jobs, runningTotal alone ${alone.size}")
+  }
 }

@@ -349,7 +349,7 @@ class SimilaritySpec extends SparkSpec {
       emb.filter(pred).select(Similarity.lshBucket($"embedding", 8, 64).as("b"))
         .groupBy($"b").count().as[(Long, Long)].collect().toMap
     // clean manifest: the verified read returns it UNCHANGED (no rebuild —
-    // the _stats files' byte content is identical before and after)
+    // the _files manifest's byte content is identical before and after)
     def statsBytes(): Seq[(String, Long)] =
       new java.io.File(s"$path/_files").listFiles().toSeq
         .map(f => f.getName -> f.length()).sortBy(_._1)

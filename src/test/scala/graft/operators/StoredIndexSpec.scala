@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -14,45 +12,6 @@ class StoredIndexSpec extends SparkSpec {
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toFile.getAbsolutePath
-
-  /** The final-stage task count of every Spark job `body` starts. A
-    * listener keeps the jobs of this thread's job group; a marker job
-    * before and after `body` fences its events, so all of them have
-    * arrived when the count is read. */
-  private def jobsOf(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    val group = s"stored-index-spec-${java.util.UUID.randomUUID}"
-    val events = new LinkedBlockingQueue[(String, Int)]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          events.put((String.valueOf(e.properties.getProperty("spark.job.description")),
-            e.stageInfos.maxBy(_.stageId).numTasks))
-    }
-    def fence(): Seq[Int] = {
-      val marker = s"fence-${java.util.UUID.randomUUID}"
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val seen = Seq.newBuilder[Int]
-      var e = events.poll(60, TimeUnit.SECONDS)
-      while (e != null && e._1 != marker) {
-        seen += e._2
-        e = events.poll(60, TimeUnit.SECONDS)
-      }
-      assert(e != null, "the listener never saw the fence job")
-      seen.result()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "")
-    try {
-      fence()
-      body
-      fence()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** Data files per bucket directory of an index. */
   private def filesPerBucket(root: String): Map[String, Int] =
@@ -125,8 +84,8 @@ class StoredIndexSpec extends SparkSpec {
       .map(r => r._1 -> r._2).toMap
     assert(rows(Similarity.bucketedTopKStored(spark, path, q, 5)) == clean,
       "the stored search read a file its manifest does not name")
-    // the drift check still sees the file: it rebuilds `_stats` from the
-    // listing and adopts the file into the file manifest
+    // the drift check still sees the file: it re-records `_files` from
+    // the listing, which adopts the file into the file manifest
     val repaired = Similarity.bucketStatsVerified(spark, path).as[(Long, Long, Long)]
       .collect().map(r => r._1 -> r._2).toMap
     assert(repaired == stale.updated(bucket, stale(bucket) + 1),

@@ -264,4 +264,24 @@ class PublishSpec extends SparkSpec {
     assert(diff == Map(3L -> "updated", 4L -> "updated",
       5L -> "deleted", 6L -> "inserted"))
   }
+
+  test("a month-partitioned publish of a small frame writes in defaultParallelism tasks, one file per month") {
+    val cores = spark.sparkContext.defaultParallelism
+    val root = freshRoot()
+    // one input partition and no exchange: every task above one is the write's
+    val fact = spark.range(0, 240, 1, 1).select($"id",
+      format_string("2026-%02d", ($"id" % 12 + 1).cast("int")).as("month"),
+      ($"id" * 1.5).as("amount"))
+    val jobs = jobsOf(Publish.publishTables(spark, Map("fact" -> fact), root, "001",
+      partitioning = Map("fact" -> Seq("month"))))
+    assert(jobs.max >= cores, s"final-stage tasks per job: $jobs")
+    val v = Publish.currentVersion(spark, root).get
+    val months = new java.io.File(s"$root/$v/fact").listFiles().filter(_.getName.startsWith("month="))
+    assert(months.length == 12)
+    months.foreach { d =>
+      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files == 1, s"${d.getName} holds $files data files")
+    }
+    assert(Publish.readTable(spark, root, "fact").count() == 240)
+  }
 }
