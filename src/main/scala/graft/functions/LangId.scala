@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** TRAINED language identification — the operator that closes the
   * loop the fixtures leave open: `documents.lang` is consumed by the
@@ -11,9 +14,9 @@ import org.apache.spark.sql.functions._
   * where word lists fail), trained distributed with the repo's
   * determinism discipline:
   *
-  *  - "training" is COUNTING (one hash aggregation per table — no
-  *    iteration, no learning rate): per-(lang, dim) gram counts with
-  *    Laplace-1 smoothing, per-lang doc counts for the prior;
+  *  - "training" is COUNTING (one hash aggregation, no iteration, no
+  *    learning rate): per-(lang, dim) bigram counts with Laplace-1
+  *    smoothing, per-lang doc counts for the prior;
   *  - every model parameter is an exact-integer MICRO-NAT
   *    (`round(ln(p)·1e6)` as BIGINT), so scoring is pure integer
   *    arithmetic — `score = prior6 + Σ count·loglik6` — with NO
@@ -23,10 +26,15 @@ import org.apache.spark.sql.functions._
   *    the whole train→score→predict pipeline hash-checks against a
   *    DuckDB oracle that reproduces the training itself.
   *
-  * Scale shape: gram explosion is map-side (O(chars) rows keyed by
-  * doc), the model is (langs × dim) rows — broadcast-sized at any
-  * corpus scale — and every shuffle is keyed by doc_id or the
-  * (lang, dim) pair. No driver-side state at all. */
+  * Scale shape: training is one aggregation whose output is bounded by
+  * the model, (langs + 1) × (dim + 1) rows, collected to the driver;
+  * the model (langs × dim longs, at most [[MaxLabels]] labels) is then
+  * driver state and rides into every task as a literal. Scoring is one
+  * per-row expression over that literal
+  * ([[graft.plans.NaiveBayesPredict]], following *ML Inference Pipeline
+  * Execution Using Pure SQL Based on Operator Fusion*, ICDE 2025): the
+  * bigrams are hashed and scored inside the row, so classifying adds
+  * no explode, no join, no shuffle and no window to its input's plan. */
 object LangId {
 
   /** Deterministic multilingual LEXIFIER for fixture synthesis: the
@@ -91,102 +99,113 @@ object LangId {
       s"x -> CASE $langExpr || ':' || x $cases ELSE x END), 'string_agg', ' '), '')"
   }
 
-  /** Hashed char-bigram rows (id, dim_idx, c): text padded with one
-    * space each side (word-boundary grams carry signal), bigram g at
-    * every char offset, dim = md5(g) first-8-hex mod `dim`. */
-  def gramCounts(docs: DataFrame, idCol: String, textCol: String,
-                 dim: Int): DataFrame = {
-    val padded = concat(lit(" "), col(textCol), lit(" "))
-    // Bigrams via two aligned code-point slices zipped — O(len) per
-    // doc. The previous `transform(sequence(1, len-1), i =>
-    // padded.substr(i, 2))` form re-evaluated `padded` (a concat
-    // allocating len+2 chars) inside the lambda for EVERY character
-    // position — O(len²) bytes copied per doc, the dominant cost of
-    // the tx44 family at bench scale. regexp_extract_all with (?s).
-    // splits into CODE POINTS, matching substr()'s code-point
-    // semantics exactly.
-    val chars = regexp_extract_all(padded, lit("(?s)."), lit(0))
-    val n = greatest(size(chars) - 1, lit(0))
-    val grams = transform(
-      arrays_zip(slice(chars, lit(1), n).as("a"), slice(chars, lit(2), n).as("b")),
-      x => concat(x.getField("a"), x.getField("b")))
-    graft.operators.NearDup.fanOut(docs)
-      .select(col(idCol), explode(grams).as("g"))
-      .select(col(idCol),
-        (conv(substring(md5(col("g")), 1, 8), 16, 10).cast("long") % dim)
-          .as("dim_idx"))
-      .groupBy(col(idCol), col("dim_idx"))
-      .agg(count(lit(1)).as("c"))
+  /** A trained model on the driver: per label (ascending) its prior
+    * and one log-likelihood per hashed-bigram dim, all micro-nats. */
+  final case class Model(dim: Int, labels: Seq[LabelParams]) {
+    require(labels.forall(_.loglik6.length == dim),
+      s"every label needs $dim log-likelihoods")
+  }
+  final case class LabelParams(label: String, prior6: Long, loglik6: Seq[Long])
+
+  /** Most labels a model may carry. A model holds labels × `dim` longs
+    * on the driver (and in every classifying task), so at the default
+    * `dim` of 64 the cap is 1000 · 64 · 8 B ≈ 0.5 MB; the collects that
+    * build a model stop past it instead of filling the driver. */
+  val MaxLabels: Int = 1000
+
+  /** NB training as ONE bounded aggregation collected to the driver:
+    * per (label, dim) the bigram count, and per label the doc count
+    * (a dim −1 row of one per doc, so docs whose text is null count
+    * too), at most (labels + 1) × (dim + 1) rows. The parameters are
+    * then built on the driver with Spark's arithmetic (natural log,
+    * `round(·, 0)` HALF_UP):
+    *  - `loglik6` = round(ln((cnt+1)/(tot+dim))·1e6), tot = the
+    *    label's bigrams, unseen dims at the smoothing floor;
+    *  - `prior6` = round(ln(nDocs_l/N)·1e6), N = every training doc,
+    *    null labels included.
+    * A null label, or a label whose docs have no bigrams (all text
+    * null), carries no parameters. */
+  def train(labeled: DataFrame, textCol: String, labelCol: String,
+            dim: Int): Model = {
+    require(dim > 0, s"dim must be positive, got $dim")
+    val doc = array(struct(lit(-1L).as("dim_idx"), lit(1L).as("c")))
+    val rows = graft.operators.NearDup.fanOut(labeled)
+      .select(col(labelCol).cast("string").as("label"), explode(coalesce(
+        concat(call_function("graft_hashed_bigrams", col(textCol), lit(dim)), doc),
+        doc)).as("g"))
+      .groupBy(col("label"), col("g.dim_idx").as("dim_idx"))
+      .agg(sum(col("g.c")).as("n"))
+    val bound = (MaxLabels + 1) * (dim + 1)
+    val got = rows.limit(bound + 1).collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2)))
+    if (got.length > bound) throw new IllegalArgumentException(
+      s"NB training carries more than $MaxLabels labels " +
+        s"(${got.map(_._1).distinct.length} in the first $bound rows)")
+    val n = got.collect { case (_, -1L, c) => c }.sum
+    Model(dim, got.toSeq.collect { case (Some(l), _, _) => l }.distinct.sorted.flatMap { l =>
+      val mine = got.filter(_._1.contains(l))
+      val cnt = mine.collect { case (_, j, c) if j >= 0 => j.toInt -> c }.toMap
+      Option.when(cnt.nonEmpty) {
+        val tot = cnt.values.sum
+        val nd = mine.collectFirst { case (_, -1L, c) => c }.getOrElse(0L)
+        LabelParams(l, micro(nd.toDouble / n.toDouble),
+          (0 until dim).map(j => micro((cnt.getOrElse(j, 0L) + 1).toDouble /
+            (tot + dim).toDouble)))
+      }
+    })
   }
 
-  /** NB parameters from a labeled training frame: one row per
-    * (label, dim_idx) with `loglik6` = round(ln((cnt+1)/(tot+dim))·1e6)
-    * and the label's `prior6` = round(ln(nDocs_l/N)·1e6). Every label
-    * carries ALL `dim` rows (unseen dims get the smoothing floor). */
+  /** round(ln(p)·1e6) as a long: Spark's `log` (StrictMath) and
+    * `round(·, 0)` on a double (HALF_UP of its decimal form). */
+  private def micro(p: Double): Long =
+    java.math.BigDecimal.valueOf(StrictMath.log(p) * 1e6)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValue
+
+  /** The model as the (label, dim_idx, loglik6, prior6) frame, one row
+    * per (label, dim): a local relation, so reading it runs no job. */
+  private def toFrame(spark: SparkSession, m: Model): DataFrame =
+    spark.createDataFrame(
+      m.labels.flatMap(p => p.loglik6.zipWithIndex.map { case (ll, j) =>
+        Row(p.label, j.toLong, ll, p.prior6)
+      }).asJava,
+      StructType(Seq(StructField("label", StringType),
+        StructField("dim_idx", LongType, nullable = false),
+        StructField("loglik6", LongType, nullable = false),
+        StructField("prior6", LongType, nullable = false))))
+
+  /** A (label, dim_idx, loglik6, prior6) frame back as a [[Model]]:
+    * collected with a bound of [[MaxLabels]] × `dim` rows; every label
+    * must carry all `dim` dims. */
+  private def fromFrame(model: DataFrame, dim: Int): Model = {
+    val bound = MaxLabels * dim
+    val got = model.select(col("label").cast("string"), col("dim_idx").cast("long"),
+      col("loglik6").cast("long"), col("prior6").cast("long"))
+      .limit(bound + 1).collect()
+    if (got.length > bound) throw new IllegalArgumentException(
+      s"NB model frame carries more than $MaxLabels labels × $dim dims " +
+        s"(${got.map(_.getString(0)).distinct.length} labels in the first $bound rows)")
+    Model(dim, got.groupBy(_.getString(0)).toSeq.sortBy(_._1).map { case (l, rs) =>
+      val ll = rs.map(r => r.getLong(1).toInt -> r.getLong(2)).toMap
+      require(l != null && ll.size == dim && ll.keySet == (0 until dim).toSet,
+        s"NB model label $l must carry dims 0 until $dim exactly once")
+      LabelParams(l, rs.head.getLong(3), (0 until dim).map(ll))
+    })
+  }
+
+  /** Train on a labeled frame: the (label, dim_idx, loglik6, prior6)
+    * parameters of [[train]], one row per (label, dim). `idCol` is not
+    * read (the aggregation needs no document key). */
   def trainNaiveBayes(train: DataFrame, idCol: String, textCol: String,
                       labelCol: String, dim: Int): DataFrame =
-    trainNaiveBayesFromGrams(gramCounts(train, idCol, textCol, dim),
-      train, idCol, labelCol, dim)
-
-  /** [[trainNaiveBayes]] over PRECOMPUTED gram counts
-    * (`gramCounts(train, idCol, textCol, dim)` — or a staged all-docs
-    * gram frame filtered to the training split, which is the same
-    * rows). Lets a query that both trains and classifies stage the
-    * gram explosion ONCE instead of running the O(chars) explode+md5
-    * pass twice (the round-18 tx44-family optimization). */
-  def trainNaiveBayesFromGrams(trainGrams: DataFrame, train: DataFrame,
-                               idCol: String, labelCol: String,
-                               dim: Int): DataFrame = {
-    val grams = trainGrams
-      .join(train.select(col(idCol), col(labelCol).as("label")), Seq(idCol))
-    val cnt = grams.groupBy(col("label"), col("dim_idx"))
-      .agg(sum(col("c")).as("cnt"))
-    val tot = cnt.groupBy(col("label")).agg(sum(col("cnt")).as("tot"))
-    val nd = train.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("nd"))
-    val n = train.select(count(lit(1)).as("n"))
-    val dims = nd.select(col("label"))
-      .crossJoin(dimRange(nd, dim))
-    dims.join(cnt, Seq("label", "dim_idx"), "left")
-      .join(tot, Seq("label"))
-      .join(nd, Seq("label")).crossJoin(n)
-      .select(col("label"), col("dim_idx"),
-        round(log((coalesce(col("cnt"), lit(0L)) + 1).cast("double") /
-          (col("tot") + dim).cast("double")) * 1e6, 0).cast("long")
-          .as("loglik6"),
-        round(log(col("nd").cast("double") / col("n").cast("double")) * 1e6, 0)
-          .cast("long").as("prior6"))
-  }
-
-  private def dimRange(any: DataFrame, dim: Int): DataFrame =
-    any.sparkSession.range(dim).select(col("id").as("dim_idx"))
+    toFrame(train.sparkSession, LangId.train(train, textCol, labelCol, dim))
 
   /** Score + predict: per doc, `argmax_label prior6 + Σ c·loglik6`
-    * (exact integers; tie → MIN label). The model frame is
-    * (labels × dim) rows — the join broadcasts at any corpus scale.
-    * The argmax is ONE doc-keyed window over the (docs × labels)
-    * score frame (row_number on score DESC, label ASC — the pinned
-    * tiebreak), not a max+self-join: the join form evaluates the
-    * whole explode→join→agg score subtree twice (measured 2× on the
-    * bench), while the window costs one doc-keyed shuffle of 5·n
-    * rows. Partitioned by the doc id, so it scales — never a global
-    * window. */
+    * (exact integers; tie → MIN label) over a model frame, collected
+    * to the driver once ([[fromFrame]]). Returns (id, lang_pred); a doc
+    * with null text gets no row. */
   def classify(docs: DataFrame, model: DataFrame, idCol: String,
                textCol: String, dim: Int): DataFrame =
-    classifyFromGrams(gramCounts(docs, idCol, textCol, dim), model, idCol)
-
-  /** [[classify]] over precomputed gram counts (see
-    * [[trainNaiveBayesFromGrams]]). */
-  def classifyFromGrams(grams: DataFrame, model: DataFrame,
-                        idCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col("score").desc, col("label").asc)
-    scoreFrame(grams, model, idCol)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col("label").as("lang_pred"))
-  }
+    classifyWith(docs, fromFrame(model, dim), idCol, textCol, abstain = false)
 
   /** Abstention margin in micro-nats (2 nats): a prediction whose
     * integer score beats the runner-up by less than this routes to
@@ -198,44 +217,28 @@ object LangId {
   /** [[classify]] with abstention: top-1 must beat top-2 by
     * [[AbstainMargin6]] micro-nats or the doc predicts 'und'
     * (round-17 verdict item 6 — the closed-set classifier gains a
-    * low-confidence route). The window carries ONLY row_number (a
-    * lead() in the same window would block Spark's
-    * InferWindowGroupLimit — the PlanSpec sweep), so the top-2 cut
-    * runs as a per-partition bounded heap; the margin rule is then one
-    * doc-keyed pivot agg over ≤ 2 rows per doc. A single-candidate doc
-    * is confident by construction (coalesce pins the margin). */
+    * low-confidence route). A one-label model is always confident. */
   def classifyAbstain(docs: DataFrame, model: DataFrame, idCol: String,
                       textCol: String, dim: Int): DataFrame =
-    classifyAbstainFromGrams(gramCounts(docs, idCol, textCol, dim),
-      model, idCol)
+    classifyWith(docs, fromFrame(model, dim), idCol, textCol, abstain = true)
 
-  /** [[classifyAbstain]] over precomputed gram counts (see
-    * [[trainNaiveBayesFromGrams]]). */
-  def classifyAbstainFromGrams(grams: DataFrame, model: DataFrame,
-                               idCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol))
-      .orderBy(col("score").desc, col("label").asc)
-    scoreFrame(grams, model, idCol)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= 2)
-      .groupBy(col(idCol))
-      .agg(max(when(col("__rn") === 1, col("label"))).as("__l1"),
-        max(when(col("__rn") === 1, col("score"))).as("__s1"),
-        max(when(col("__rn") === 2, col("score"))).as("__s2"))
-      .select(col(idCol),
-        when(col("__s1") - coalesce(col("__s2"),
-          col("__s1") - AbstainMargin6) >= AbstainMargin6, col("__l1"))
-          .otherwise(lit("und")).as("lang_pred"))
-  }
+  private def classifyWith(docs: DataFrame, m: Model, idCol: String,
+                           textCol: String, abstain: Boolean): DataFrame =
+    withPrediction(graft.operators.NearDup.fanOut(docs), m, textCol, abstain)
+      .select(col(idCol), col("lang_pred"))
 
-  /** Per-(doc, label) integer scores — the shared subtree of
-    * [[classify]] / [[classifyAbstain]], over a gram-count frame. */
-  private def scoreFrame(grams: DataFrame, model: DataFrame,
-                         idCol: String): DataFrame =
-    grams
-      .join(broadcast(model), Seq("dim_idx"))
-      .groupBy(col(idCol), col("label"))
-      .agg((first(col("prior6")) + sum(col("c") * col("loglik6")))
-        .as("score"))
+  /** `docs` plus the label `m` predicts from `textCol`, as `lang_pred`:
+    * the max-score label, ties to the MIN label; with `abstain`, 'und'
+    * unless it beats the runner-up by [[AbstainMargin6]]. One per-row
+    * expression over the literal model ([[graft.plans.NaiveBayesPredict]]):
+    * no explode, join, shuffle or window. A doc with null text gets no
+    * prediction and no row (nor does any doc under a model without
+    * labels). Filtered on the text, not on `lang_pred`: a filter on the
+    * prediction is pushed below the projection and scores twice. */
+  def withPrediction(docs: DataFrame, m: Model, textCol: String,
+                     abstain: Boolean = false): DataFrame =
+    docs.filter(col(textCol).isNotNull && lit(m.labels.nonEmpty))
+      .withColumn("lang_pred", call_function(
+        if (abstain) "graft_nb_predict_abstain" else "graft_nb_predict",
+        col(textCol), typedlit(m.labels)))
 }

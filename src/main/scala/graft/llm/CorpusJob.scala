@@ -17,8 +17,9 @@ import graft.sinks.Publish
   *   2. URL canonicalization → registered-domain provenance key
   *      ([[Url.registeredDomain]], tx45);
   *   3. trained language ID with 'und' abstention routing
-  *      ([[LangId.classifyAbstain]], tx44/tx44c) — low-confidence docs
-  *      leave the corpus instead of mis-keying it;
+  *      ([[LangId.train]] on the driver, [[LangId.withPrediction]] as one
+  *      per-row expression over the literal model; tx44/tx44c) —
+  *      low-confidence docs leave the corpus instead of mis-keying it;
   *   4. quality gate (tx06's thresholds) → exact-shrink + MinHash-LSH
   *      connected-components dedup keeping canonical representatives
   *      ([[NearDup.canonicalize]], dd10) → cross-doc duplicated-span
@@ -32,21 +33,22 @@ import graft.sinks.Publish
   *      and an all-or-nothing publish ([[Publish.publishTables]]).
   *
   * Stage sharing is the TurnosJob doctrine: every frame with multiple
-  * consumers (the lexified corpus, the gram counts, the dedup
-  * survivors, the final assignments) is staged exactly once
-  * ([[graft.Stages.stage]]) — without it each downstream stage re-runs
+  * consumers (the lexified corpus, the classified and quality-gated
+  * docs, the dedup survivors, the final assignments) is staged exactly
+  * once ([[graft.Stages.stage]]) — without it each downstream stage re-runs
   * the whole extract→train→dedup tree, turning the job into
   * sum-of-standalone-queries (the wideExtract lesson, measured ~2× per
   * re-read). [[run]]'s scope releases every one of them, the
   * operators' internal stages included, once the publish settles.
   *
   * Scale shape: every stage is the oracle-proven scale-safe form —
-  * codegen expression chains for extract/URL (no UDFs), the broadcast
-  * langs×dim model, banded LSH (never all-pairs), star-contracted CC,
-  * one range shuffle for the shard prefix (never a global window).
-  * The oracle-checked composition query (tx46_corpus_e2e) hashes the
-  * per-shard manifest of the SAME chain, so membership drift anywhere
-  * in the six stages is a correctness failure, not a silent skew.
+  * codegen expression chains for extract/URL (no UDFs), a langs×dim
+  * literal model scored per row, banded LSH (never all-pairs),
+  * star-contracted CC, one range shuffle for the shard prefix (never a
+  * global window). The oracle-checked composition query
+  * (tx46_corpus_e2e) hashes the per-shard manifest of the SAME chain,
+  * so membership drift anywhere in the six stages is a correctness
+  * failure, not a silent skew.
   *
   * The fixture carries plain text and no URLs, so the QUERY layer
   * synthesizes the hostile HTML page and the URL per doc (the tx43 /
@@ -82,35 +84,28 @@ object CorpusJob {
     // training, classification, the quality gate, and dedup.
     val lex = Stages.stage(extracted.select(col("doc_id"), col("lang"),
       col("domain"), LangId.lexify(col("text"), col("lang")).as("text")))
-    // 3: train on the deterministic 80% split, classify with
-    // abstention, route 'und' out of the corpus. The gram counts are
-    // staged ONCE and shared by training (filtered to the split —
-    // identical rows to gramCounts(train)) and classification, so the
-    // O(chars) explode+md5 pass runs once (round-18 optimization).
+    // 3: train on the deterministic 80% split (one bounded aggregation
+    // collected to the driver) and classify with abstention as one
+    // per-row expression over the literal model; a doc with null text
+    // gets no prediction and leaves the corpus.
     val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-    val gc = Stages.stage(LangId.gramCounts(lex, "doc_id", "text", Dim))
-    val train = lex.filter(split === "train")
-    // model NOT staged (round 19): it has exactly one consumer — the
-    // classify broadcast below — so the eager checkpoint only added a
-    // barrier job; unstaged, the (langs × dim)-row training subtree
-    // builds once inside the broadcast exchange.
-    val model = LangId.trainNaiveBayesFromGrams(
-      gc.filter(split === "train"), train, "doc_id", "lang", Dim)
-    val routed = lex
-      .join(LangId.classifyAbstainFromGrams(gc, model, "doc_id"),
-        Seq("doc_id"))
-      .filter(col("lang_pred") =!= "und")
+    val model = LangId.train(lex.filter(split === "train"), "text", "lang", Dim)
+    val classified = LangId.withPrediction(lex, model, "text", abstain = true)
     // 4a: quality gate (tx06's thresholds).
-    val metrics = routed.select(
+    val metrics = classified.select(
       (Seq(col("doc_id"), col("lang"), col("lang_pred"), col("domain"),
         col("text")) ++ TextAnalysis.qualityMetrics(col("text"))): _*)
     // staged: feeds canonicalize (which reads it ~4 times), the
     // survivor semi-join, and the strip below — unstaged each re-ran
-    // the classify-join + metrics chain (round 18).
+    // the classify + metrics chain (round 18). 'und' is routed out of
+    // the corpus over the staged rows: a filter on lang_pred ahead of
+    // the stage would be pushed below the scoring projection and score
+    // every doc twice.
     val kept = Stages.stage(metrics.filter(
       col("n_tokens").between(20, 2000) && col("ttr") >= 0.3 &&
         col("mean_token_len").between(2.0, 12.0))
       .select("doc_id", "lang", "lang_pred", "domain", "text"))
+      .filter(col("lang_pred") =!= "und")
     // 4b: exact shrink + LSH CC; keep each component's canonical rep.
     val labels = NearDup.canonicalize(kept, "doc_id", "text")
     val survivors = Stages.stage(kept.join(

@@ -73,10 +73,13 @@ object NearDup {
     * job: counting through `df.rdd` runs every adaptive query stage
     * under the frame and throws the results away for the next action to
     * recompute. Fallback: where the plan leaves the count to adaptive
-    * execution (an exchange without an explicit count, a shuffled join:
-    * 6 of the 120 calls the sf0.01 registry makes) or has a leaf other
-    * than a file scan or a staged frame, the count still comes from
-    * `df.rdd`. */
+    * execution (an exchange without an explicit count, a shuffled join)
+    * or has a leaf other than a file scan or a staged frame, the count
+    * still comes from `df.rdd`. No call of the sf0.01 registry (120
+    * calls) falls back: the one input that did, [[pairOverlapCounts]]'
+    * candidate docs (docs ⋈ candidate ids, a left-semi sort-merge
+    * join), is staged before its fan-out, as it is read once anyway, so
+    * the count comes off the stored RDD. */
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     val planned = df.queryExecution.executedPlan match {
@@ -467,8 +470,12 @@ object NearDup {
     val shd = shinglesOpt match {
       case Some(sh) => Stages.stage(sh.join(ids, Seq(idCol), "left_semi")
         .select(col(idCol).as("jid"), col("shingle")))
+      // the candidate docs are staged too: read once either way, and
+      // staged, shingleRows' fanOut reads their partition count off the
+      // stored RDD instead of running the semi-join (a sort-merge join,
+      // whose width adaptive execution decides) just to count it
       case None => Stages.stage(
-        shingleRows(docs.join(ids, Seq(idCol), "left_semi"),
+        shingleRows(Stages.stage(docs.join(ids, Seq(idCol), "left_semi")),
           idCol, textCol, shingleSize)
           .select(col(idCol).as("jid"), col("shingle")).distinct())
     }

@@ -121,5 +121,19 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[NearestModelEntry].getName, "graft_nearest_l2"),
       (children: Seq[Expression]) =>
         NearestModelEntry(children.head, children(1), l2 = true)))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_hashed_bigrams"),
+      new ExpressionInfo(classOf[HashedBigramCounts].getName, "graft_hashed_bigrams"),
+      (children: Seq[Expression]) => HashedBigramCounts(children.head, children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_nb_predict"),
+      new ExpressionInfo(classOf[NaiveBayesPredict].getName, "graft_nb_predict"),
+      (children: Seq[Expression]) =>
+        NaiveBayesPredict(children.head, children(1), abstain = false)))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_nb_predict_abstain"),
+      new ExpressionInfo(classOf[NaiveBayesPredict].getName, "graft_nb_predict_abstain"),
+      (children: Seq[Expression]) =>
+        NaiveBayesPredict(children.head, children(1), abstain = true)))
   }
 }

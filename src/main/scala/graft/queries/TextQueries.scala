@@ -2228,26 +2228,14 @@ SELECT doc_id, CAST(i - 1 AS INTEGER) AS block_idx, blocks[i] AS block_text FROM
     Q("tx44_langid",
       (s, d) => {
         import graft.functions.{LangId, TextAnalysis}
-        // lexified corpus staged ONCE: train-side gram counts,
-        // classify-side gram counts, and the final truth join all
-        // read the checkpoint instead of re-running tokenize+lexify
-        // per subtree (the wideExtractStaged lesson, measured ~2×).
+        // lexified corpus staged ONCE: training and classification
+        // both read it instead of re-running tokenize+lexify.
         val docs = Stages.stage(NearDup.fanOut(Tables.documents(s, d))
           .select(col("doc_id"), col("lang"),
             LangId.lexify(col("text"), col("lang")).as("st")))
-        // gram counts staged ONCE and shared by training (filtered to
-        // the split — same rows as gramCounts(train)) and
-        // classification: the O(chars) explode+md5 pass runs once per
-        // query instead of twice (round-18 optimization).
         val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-        val gc = Stages.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
-        val train = docs.filter(split === "train")
-        // model unstaged (round 19): single consumer — the classify
-        // broadcast — so the eager checkpoint only added a barrier job.
-        val model = LangId.trainNaiveBayesFromGrams(
-          gc.filter(split === "train"), train, "doc_id", "lang", 64)
-        docs.select(col("doc_id"), col("lang"))
-          .join(LangId.classifyFromGrams(gc, model, "doc_id"), Seq("doc_id"))
+        val model = LangId.train(docs.filter(split === "train"), "st", "lang", 64)
+        LangId.withPrediction(docs, model, "st").select("doc_id", "lang", "lang_pred")
       },
       Some(s"""WITH $tx44Ctes
 SELECT d.doc_id, d.lang, p.lang_pred FROM documents d JOIN pred p USING (doc_id)""")),
@@ -2263,18 +2251,10 @@ SELECT d.doc_id, d.lang, p.lang_pred FROM documents d JOIN pred p USING (doc_id)
           .select(col("doc_id"), col("lang"),
             LangId.lexify(col("text"), col("lang")).as("st")))
         val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-        val gc = Stages.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
-        val train = docs.filter(split === "train")
-        // model unstaged (round 19): single consumer — the classify
-        // broadcast — so the eager checkpoint only added a barrier job.
-        val model = LangId.trainNaiveBayesFromGrams(
-          gc.filter(split === "train"), train, "doc_id", "lang", 64)
-        // classification restricted to the test split — the inner join
-        // below discards every other doc's prediction anyway, so
-        // scoring them is pure waste (identical result rows).
-        docs.filter(split === "test").select(col("doc_id"), col("lang"))
-          .join(LangId.classifyFromGrams(gc.filter(split === "test"),
-            model, "doc_id"), Seq("doc_id"))
+        val model = LangId.train(docs.filter(split === "train"), "st", "lang", 64)
+        // only the test split is classified: the measurement reads no
+        // other doc's prediction
+        LangId.withPrediction(docs.filter(split === "test"), model, "st")
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(when(col("lang_pred") === col("lang"), 1L).otherwise(0L))
@@ -2301,16 +2281,8 @@ GROUP BY d.lang""")),
           .select(col("doc_id"), col("lang"),
             LangId.lexify(col("text"), col("lang")).as("st")))
         val split = TextAnalysis.deterministicSplit(col("doc_id"), 80, 10)
-        val gc = Stages.stage(LangId.gramCounts(docs, "doc_id", "st", 64))
-        val train = docs.filter(split === "train")
-        // model unstaged (round 19): single consumer — the classify
-        // broadcast — so the eager checkpoint only added a barrier job.
-        val model = LangId.trainNaiveBayesFromGrams(
-          gc.filter(split === "train"), train, "doc_id", "lang", 64)
-        docs.filter(split === "test").select(col("doc_id"), col("lang"))
-          .join(LangId.classifyAbstainFromGrams(
-            gc.filter(split === "test"), model, "doc_id"),
-            Seq("doc_id"))
+        val model = LangId.train(docs.filter(split === "train"), "st", "lang", 64)
+        LangId.withPrediction(docs.filter(split === "test"), model, "st", abstain = true)
           .groupBy(col("lang"), col("lang_pred"))
           .agg(count(lit(1)).as("n_docs"))
       },

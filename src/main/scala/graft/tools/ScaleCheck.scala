@@ -34,7 +34,8 @@ import graft.{Sessions, SparkEntry, Tables}
   *    would — the e2e pipeline's exact-shrink phase must collapse the
   *    replicas BEFORE the quadratic-in-bucket LSH phase sees them.
   *
-  * Usage: `runMain graft.tools.ScaleCheck [baseDir] [R] [workDir]`.
+  * Usage: `runMain graft.tools.ScaleCheck [baseDir] [R] [workDir]`, on
+  * `local[$SPARK_GRAFT_CPUS]` (default 32) like [[graft.Bench]].
   * The scaled copy is cached in workDir across runs (delete to force a
   * re-materialise).
   */
@@ -273,7 +274,8 @@ object ScaleCheck {
     // (partial re-runs merge by hand; the full run rewrites
     // SCALECHECK.json).
     val chosen = if (pos.length > 3) allQueries.filter(pos.drop(3).contains) else allQueries
-    val spark = Sessions.builder("local[32]", "32").getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     materialise(spark, baseDir, r, workDir)

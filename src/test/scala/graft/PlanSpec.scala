@@ -375,12 +375,6 @@ class PlanSpec extends SparkSpec {
       "tx24_hybrid_rrf", "tx25_hybrid_multiquery",
       // BM25 with derived query terms: same stats-row crossJoin
       "tx26_bm25_derived_query",
-      // trained langid (round 19: the NB model frame is no longer
-      // staged — single consumer — so its training subtree is visible
-      // in-plan): the subtree crosses the ONE-ROW corpus doc count
-      // into the (langs × dim) parameter grid — the tx23 scalar-fanout
-      // class, bounded by the label set, never corpus × corpus
-      "tx44_langid", "tx44b_langid_accuracy", "tx44c_langid_confusion",
       // MaxSim rerank's first stage is bm25PerQuery — the same ONE-ROW
       // (N, avgdl) stats crossJoin; the rerank itself is equi-joined
       // through the broadcast candidate list
