@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
 import scala.jdk.CollectionConverters._
 import graft.Stages
 import graft.sinks.Publish.writeTasks
+import NearDup.fanOut
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ArrayType(FloatType)): brute-force cosine top-k as the exact
@@ -15,8 +16,8 @@ import graft.sinks.Publish.writeTasks
   * compression and kNN-graph beam search — that restrict or compress
   * the candidates so a query costs O(q · candidates), not O(n · q).
   *
-  * All arithmetic is double-precision column expressions (zip_with +
-  * aggregate) inside codegen; similarities are rounded to 6 decimals and
+  * All arithmetic is double-precision column expressions inside
+  * codegen ([[dot]]); similarities are rounded to 6 decimals and
   * ranked by one helper, [[topK]] (score descending, vec_id ascending),
   * so results are deterministic across engines and summation orders.
   *
@@ -32,8 +33,8 @@ import graft.sinks.Publish.writeTasks
   *    (append): only the touched partition directories gain files, so
   *    maintenance costs O(batch), never O(corpus);
   *  - in-flight search = assign the corpus, then score it against the
-  *    broadcast query probes ([[probeTopK]], or [[ivfPqScore]] for
-  *    codes);
+  *    broadcast query probes ([[probeTopK]]; IVF-PQ code rows are
+  *    decoded first, [[pqDecoded]]);
   *  - stored search = open the index directory from its file manifest
   *    ([[openIndex]]), then the same scorer. The probe join on the
   *    partition column lets Spark's dynamic partition pruning read
@@ -88,12 +89,6 @@ object Similarity {
       lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Scale-adaptive parallelism floor for CPU-heavy vector scoring
-    * over a corpus whose scan plans fewer partitions than the session
-    * parallelism (one small unsplittable file — the fixture shape).
-    * No-op at production scan widths; see [[NearDup.fanOut]]. */
-  private def fanOut(df: DataFrame): DataFrame = NearDup.fanOut(df)
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
@@ -205,15 +200,15 @@ object Similarity {
     Layout("bucket", 1 << numPlanes,
       _.withColumn("bucket", lshBucket(col("embedding"), numPlanes, dim)))
 
-  /** The cosine scorer of the bucketed and IVF families, in-flight and
-    * stored alike: index rows (vec_id, embedding, `key`) ⋈ broadcast
+  /** The cosine scorer (named `score`) of every probed family, in-flight
+    * and stored alike: index rows (vec_id, embedding, `key`) ⋈ broadcast
     * probes (query_id, q_emb, `key`). A vector lives under exactly one
     * key, so a multi-probe query never scores it twice. */
   private def probeTopK(index: DataFrame, probes: DataFrame, key: String,
-                        k: Int): DataFrame =
+                        k: Int, score: String = "cos_sim"): DataFrame =
     topK(index.join(broadcast(probes), Seq(key))
       .select(col("query_id"), col("vec_id"),
-        round(cosine(col("q_emb"), col("embedding")), 6).as("cos_sim")), "cos_sim", k)
+        round(cosine(col("q_emb"), col("embedding")), 6).as(score)), score, k)
 
   /** The bucketed family's probes: each query once per
     * [[lshProbeBuckets]] bucket, typed `keyType` — a stored index's
@@ -742,7 +737,10 @@ object Similarity {
         .select(col("vec_id").cast("long").as("centroid_id"),
           transform(col("embedding"), x => round(x.cast("double"), 6)).as("c_emb"))
         .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
+        .map { r =>
+          require(!r.anyNull, s"k-means init rows (vec_id, embedding) must be null-free, got: $r")
+          (r.getLong(0), toDoubles(r.getSeq[Any](1)))
+        }
         .sortBy(_._1).toSeq
     for (_ <- 0 until iters if model.nonEmpty) {
       val means = corpus
@@ -879,11 +877,16 @@ object Similarity {
   }
 
   /** Per-subspace codebook entries collected driver-side (m·K-sized —
-    * the broadcast bound), sorted by centroid id. */
+    * the broadcast bound), sorted by centroid id. A null row fails by
+    * name, as in [[modelRows]]. */
   private def codebookRows(cb: DataFrame): Map[Int, Seq[(Long, Seq[Double])]] =
     cb.select(col("sub").cast("int"), col("centroid_id").cast("long"),
         col("c_emb")).collect()
-      .map(r => (r.getInt(0), (r.getLong(1), toDoubles(r.getSeq[Any](2)))))
+      .map { r =>
+        require(!r.anyNull,
+          s"PQ codebook table (sub, centroid_id, c_emb) must be null-free, got: $r")
+        (r.getInt(0), (r.getLong(1), toDoubles(r.getSeq[Any](2))))
+      }
       .groupBy(_._1)
       .map { case (s, rs) => s -> rs.map(_._2).sortBy(_._1).toSeq }
 
@@ -907,35 +910,33 @@ object Similarity {
       posexplode(array(codes: _*)).as(Seq("sub", "centroid_id")))
   }
 
-  /** One fused L2 assignment pass: each vector's subspace s takes the
-    * codebook entry minimizing round(‖v‖² − 2·v·c + ‖c‖², 6) — the
-    * three-dot form, mirrored term-for-term by the oracle so the
-    * rounded value is bit-stable across engines (a fused
-    * Σ(v−c)² associates differently in float). The argmin is the
-    * native [[graft.plans.NearestModelEntry]] in L2 mode — exactly the
-    * old min_by (d2, centroid_id) sort-struct ordering, one compiled
-    * loop per (row, subspace) over the codebook literal.
-    * Pure projection + posexplode — no K-way fan-out, no reassembly
-    * exchange. Output: every non-embedding input column, then
-    * (sub, centroid_id, sub_emb) — for the plain (vec_id, embedding)
-    * input that is (vec_id, sub, centroid_id, sub_emb). */
+  /** The m PQ codes of a row's `embedding`, in subspace order: subspace
+    * s takes the codebook entry minimizing round(‖v‖² − 2·v·c + ‖c‖², 6)
+    * — the three-dot form, mirrored term-for-term by the oracle so the
+    * rounded value is bit-stable across engines (a fused Σ(v−c)²
+    * associates differently in float). The argmin is the native
+    * [[graft.plans.NearestModelEntry]] in L2 mode — exactly the old
+    * min_by (d2, centroid_id) sort-struct ordering, one compiled loop
+    * per (row, subspace) over the codebook literal. */
+  private def pqCodes(cb: Map[Int, Seq[(Long, Seq[Double])]], m: Int,
+                      subDim: Int): Seq[Column] = {
+    requireCodebook(cb, m)
+    (0 until m).map(s => call_function("graft_nearest_l2",
+      slice(col("embedding"), s * subDim + 1, subDim), typedlit(cb(s))))
+  }
+
+  /** [[pqCodes]] in long form, each code next to its subspace slice:
+    * (vec_id, sub, centroid_id, sub_emb). Pure projection + posexplode —
+    * no K-way fan-out, no reassembly exchange. */
   private def pqAssignL2(vectors: DataFrame,
                          cb: Map[Int, Seq[(Long, Seq[Double])]],
-                         m: Int, subDim: Int): DataFrame = {
-    requireCodebook(cb, m)
-    val perSub = (0 until m).map { s =>
-      val sube = slice(col("embedding"), s * subDim + 1, subDim)
-      struct(call_function("graft_nearest_l2", sube, typedlit(cb(s)))
-          .as("centroid_id"),
-        sube.as("sub_emb"))
-    }
-    val keep = vectors.columns.filterNot(_ == "embedding").map(col).toSeq
-    vectors.select(keep :+
-        posexplode(array(perSub: _*)).as(Seq("sub", "__sv")): _*)
-      .select(keep ++ Seq(col("sub"),
-        col("__sv.centroid_id").as("centroid_id"),
-        col("__sv.sub_emb").as("sub_emb")): _*)
-  }
+                         m: Int, subDim: Int): DataFrame =
+    vectors.select(col("vec_id"), posexplode(array(pqCodes(cb, m, subDim).zipWithIndex.map {
+        case (code, s) => struct(code.as("centroid_id"),
+          slice(col("embedding"), s * subDim + 1, subDim).as("sub_emb"))
+      }: _*)).as(Seq("sub", "sv")))
+      .select(col("vec_id"), col("sub"), col("sv.centroid_id").as("centroid_id"),
+        col("sv.sub_emb").as("sub_emb"))
 
   /** K-MEANS-TRAINED PQ codebooks: per-subspace Lloyd's with L2
     * assignment — the textbook PQ objective (minimize quantization
@@ -986,7 +987,10 @@ object Similarity {
         }
       }
     }
-    codebookFrame(spark, model)
+    import spark.implicits._
+    model.toSeq.sortBy(_._1)
+      .flatMap { case (s, entries) => entries.map { case (cid, ce) => (s, cid, ce) } }
+      .toDF("sub", "centroid_id", "c_emb")
   }
 
   /** PQ ANN top-k by asymmetric distance computation (ADC): queries
@@ -1020,7 +1024,7 @@ object Similarity {
     * (pq_trained ≥ the IVF paths). 16 subspaces × 6-bit codes = 96
     * bits/vector — still a 21× compression of the 64-dim float32
     * corpus, and the ADC scan cost is unchanged (m small codes per
-    * vector; broadcast LUTs). */
+    * vector, scored by [[pqAdc]]). */
   def pqTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 16,
                     subDim: Int = 4, codebookSize: Int = 64,
                     iters: Int = 2,
@@ -1051,10 +1055,10 @@ object Similarity {
     *
     * At 100 TB the stored form writes the byte codes plus the 2·dim
     * range table: the ADC scan reads ¼ the bytes of the raw corpus
-    * and the range table broadcasts everywhere. The encode pipeline
-    * here is one corpus explode + dim-key broadcast join + one vec_id
-    * reassembly shuffle — index-build cost, O(corpus), no all-pairs
-    * anywhere. Output: (query_id, vec_id, sq_sim, rk). */
+    * and the range table broadcasts everywhere. Ranges are one corpus
+    * explode + a dim-sized agg, encoding one projection over them as a
+    * literal — index-build cost, O(corpus), no all-pairs anywhere.
+    * Output: (query_id, vec_id, sq_sim, rk). */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val cf = fanOut(corpus)
     // Per-dimension ranges: exact min/max (order-independent), one
@@ -1095,15 +1099,16 @@ object Similarity {
     * here without residual encoding so the whole chain stays
     * oracle-checkable): a coarse k-means quantizer restricts each
     * query's candidates to its `nprobe` nearest inverted lists, and
-    * trained PQ codes — not full vectors — score those candidates via
-    * broadcast lookup tables. Per-query cost: m·K LUT dots + the
-    * probed lists' code rows (m small ints each); the full-precision
-    * corpus is read only at index-build time. Recall compounds the
-    * list-restriction loss (ann04/05's lever) with quantization loss
-    * (ann06's lever) — both knobs measured in ann07's ladder;
-    * SimilaritySpec pins `nprobe = numCentroids` ≡ the global trained
-    * PQ ranking (no restriction ⇒ identical scores). A given codebook
-    * (`cbOpt`) fixes the shape (m, subDim) itself, as a stored
+    * trained PQ codes — not full vectors — score those candidates: ADC
+    * is the query's cosine with the decoded codes ([[pqDecoded]]), so
+    * IVF's probe join and scorer ([[probeTopK]]) rank them as `pq_sim`.
+    * Per-query cost: the probed lists' code rows (m small ints each);
+    * the full-precision corpus is read only at index-build time.
+    * Recall compounds the list-restriction loss (ann04/05's lever) with
+    * quantization loss (ann06's lever) — both knobs measured in ann07's
+    * ladder; SimilaritySpec pins `nprobe = numCentroids` ≡ the global
+    * trained PQ ranking (no restriction ⇒ identical scores). A given
+    * codebook (`cbOpt`) fixes the shape (m, subDim) itself, as a stored
     * `_codebook` does for [[ivfPqTopKStored]]; `m` and `subDim` then
     * shape nothing, they only shape a codebook trained here. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
@@ -1127,63 +1132,48 @@ object Similarity {
     // stored index's scorer.
     val centRows = modelRows(cents, "centroid_id", "c_emb")
     val cbRows = codebookRows(cb)
-    val (cbM, cbSubDim) = if (cbOpt.isDefined) pqShape(cbRows) else (m, subDim)
-    val codes = ivfPqLayout(centRows, cbRows, cbM, cbSubDim)
+    val codes = ivfPqLayout(centRows, cbRows)
       .assign(fanOut(corpus.select(col("vec_id"), col("embedding"))))
-    ivfPqScore(codes, ivfProbes(queries, centRows, nprobe, "list_id"), cb, queries, k,
-      cbM, cbSubDim)
+    probeTopK(pqDecoded(codes, centRows, cbRows),
+      ivfProbes(queries, centRows, nprobe, "list_id"), "list_id", k, "pq_sim")
   }
 
   /** The IVF-PQ family: one fused projection gives each vector its
-    * coarse list (`list_id`, the partition column) and its m PQ codes —
-    * rows (vec_id, list_id, sub, code); sidecars `_centroids` and
-    * `_codebook`. */
+    * coarse list (`list_id`, the partition column) and its [[pqCodes]]
+    * at the codebook's shape — rows (vec_id, list_id, codes: array<int>);
+    * sidecars `_centroids` and `_codebook`. */
   private def ivfPqLayout(centModel: Seq[(Long, Seq[Double])],
-                          cb: Map[Int, Seq[(Long, Seq[Double])]],
-                          m: Int, subDim: Int): Layout =
+                          cb: Map[Int, Seq[(Long, Seq[Double])]]): Layout = {
+    val (m, subDim) = pqShape(cb)
     Layout("list_id", math.max(1, centModel.size), v =>
-      pqAssignL2(v.select(col("vec_id"), col("embedding"))
-          .withColumn("list_id", nearestCentroid(centModel, col("embedding"))), cb, m, subDim)
-        .select(col("vec_id"), col("list_id"), col("sub"), col("centroid_id").as("code")))
-
-  /** The IVF-PQ scorer (asymmetric distance computation), in-flight and
-    * stored alike. ONE scan of the code rows ⋈ broadcast probes on
-    * `list_id` fans each candidate out to its probing queries; then
-    * pq_sim = Σ_s lut(q, s, code) / (‖q‖ · √Σ_s ‖codeword‖²), with one
-    * (q_sub · codeword) LUT per query from the codebook `cb` (sub,
-    * centroid_id, c_emb). A corpus vector lives in one list, so
-    * multi-probe never duplicates a candidate pair. */
-  private def ivfPqScore(codes: DataFrame, probes: DataFrame, cb: DataFrame,
-                         queries: DataFrame, k: Int, m: Int, subDim: Int): DataFrame = {
-    val qs = queries.select(col("vec_id").as("query_id"), col("embedding"))
-    val cbn = cb.select(col("sub"), col("centroid_id").as("code"),
-      dot(col("c_emb"), col("c_emb")).as("__n2"))
-    val cand = codes.join(broadcast(probes), Seq("list_id"))
-    // reconstructed norms per CANDIDATE vector only (query-independent —
-    // dedup the multi-query fan-out first; candidate-sized shuffle)
-    val rec = cand.select(col("vec_id"), col("sub"), col("code")).distinct()
-      .join(broadcast(cbn), Seq("sub", "code"))
-      .groupBy(col("vec_id")).agg(sum(col("__n2")).as("__rn2"))
-    val lut = subspaces(qs, "query_id", m, subDim)
-      .join(broadcast(cb), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("centroid_id").as("code"),
-        dot(col("sub_emb"), col("c_emb")).as("__dp"))
-    val qn = qs.select(col("query_id"), norm(col("embedding")).as("__qn"))
-    val sc = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .groupBy(col("vec_id"), col("query_id")).agg(sum(col("__dp")).as("__adp"))
-    topK(sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim")), "pq_sim", k)
+      v.select(col("vec_id"), nearestCentroid(centModel, col("embedding")).as("list_id"),
+        array(pqCodes(cb, m, subDim).map(_.cast("int")): _*).as("codes")))
   }
 
-  /** Materialize the DEPLOYABLE IVF-PQ index: PQ code rows partitioned
-    * by coarse list (`path/lists/list_id=N/…`), trained centroids and
-    * codebook alongside (`_centroids`, `_codebook`) so queries never
-    * retrain — and never touch the full-precision corpus at all. The
-    * stored bytes are m small ints per vector: at 100 TB of vectors
-    * the index is ~m/(4·dim) of the corpus (~6% at m=16, dim=64
-    * float). The codebook fixes the index's shape (m, subDim): appends
-    * and queries read it from there. */
+  /** IVF-PQ code rows as [[probeTopK]]'s index rows (vec_id, list_id,
+    * embedding): subspace s's codeword for `codes[s]`, in subspace
+    * order, from the codebook as ONE literal (an id → codeword map per
+    * subspace). Its cosine with a query q is ADC, Σ_s q_s·cw_s /
+    * (‖q‖·√Σ_s‖cw_s‖²). Zeros pad a codebook shorter than the
+    * centroids (m·subDim < dim); they add nothing to either sum. */
+  private def pqDecoded(codes: DataFrame, cents: Seq[(Long, Seq[Double])],
+                        cb: Map[Int, Seq[(Long, Seq[Double])]]): DataFrame = {
+    val (m, subDim) = pqShape(cb)
+    val book = typedlit((0 until m).map(s => cb(s).toMap))
+    val words = (0 until m).map(s => element_at(book(s), col("codes")(s).cast("long")))
+    val pad = cents.headOption.fold(0)(_._2.size) - m * subDim
+    codes.select(col("vec_id"), col("list_id"),
+      concat(words ++ Option.when(pad > 0)(array_repeat(lit(0.0), pad)): _*).as("embedding"))
+  }
+
+  /** Materialize the DEPLOYABLE IVF-PQ index: one code row per vector
+    * (vec_id, codes) partitioned by coarse list (`path/lists/list_id=N/…`),
+    * trained centroids and codebook alongside (`_centroids`,
+    * `_codebook`) so queries never retrain — and never touch the
+    * full-precision corpus at all. The stored bytes are m small ints per
+    * vector: at 100 TB of vectors the index is ~m/(4·dim) of the corpus
+    * (~6% at m=16, dim=64 float). The codebook fixes the index's shape
+    * (m, subDim): appends and queries read it from there. */
   def writeIvfPqCorpus(corpus: DataFrame, path: String,
                        numCentroids: Int = 16, kmIters: Int = 2,
                        m: Int = 16, subDim: Int = 4,
@@ -1192,32 +1182,46 @@ object Similarity {
     val cb = pqCodebookTrained(corpus, m, subDim, codebookSize, pqIters)
     cents.write.mode("overwrite").parquet(s"$path/_centroids")
     cb.write.mode("overwrite").parquet(s"$path/_codebook")
-    ivfPqLayout(modelRows(cents, "centroid_id", "c_emb"), codebookRows(cb), m, subDim)
+    ivfPqLayout(modelRows(cents, "centroid_id", "c_emb"), codebookRows(cb))
       .write(fanOut(corpus.select(col("vec_id"), col("embedding"))), s"$path/lists", "overwrite")
   }
 
   /** Append a batch to the stored IVF-PQ index, coarse-assigned with its
     * frozen `_centroids` and encoded with its frozen `_codebook`, at the
-    * codebook's own shape. */
+    * codebook's own shape. An index in the old long form is refused
+    * before anything is written ([[ivfPqLists]]). */
   def appendToIvfPqCorpus(spark: org.apache.spark.sql.SparkSession,
                           newVectors: DataFrame, path: String): Unit = {
-    val cb = storedCodebook(spark, path)
-    val (m, subDim) = pqShape(cb)
-    ivfPqLayout(storedCentroids(spark, path), cb, m, subDim)
+    if (exists(spark, s"$path/lists")) ivfPqLists(spark, path)
+    ivfPqLayout(storedCentroids(spark, path), storedCodebook(spark, path))
       .write(newVectors, s"$path/lists", "append")
   }
 
   /** Query the stored IVF-PQ index: the probe join DPP-prunes the code
     * scan to the probed lists' directories (the ann04b treatment; ann10b
-    * re-checks the in-flight oracle), and [[ivfPqScore]] scores the
-    * pruned code rows with the stored codebook at its own shape. */
+    * re-checks the in-flight oracle), and the pruned code rows are
+    * decoded with the stored codebook ([[pqDecoded]]) and scored like
+    * the stored IVF lists ([[probeTopK]]). */
   def ivfPqTopKStored(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val cb = storedCodebook(spark, path)
-    val (m, subDim) = pqShape(cb)
-    val codes = openIndex(spark, s"$path/lists")
-    ivfPqScore(codes, ivfProbes(queries, storedCentroids(spark, path), nprobe, "list_id",
-      codes.schema("list_id").dataType), codebookFrame(spark, cb), queries, k, m, subDim)
+    val codes = ivfPqLists(spark, path)
+    val cents = storedCentroids(spark, path)
+    probeTopK(pqDecoded(codes, cents, storedCodebook(spark, path)),
+      ivfProbes(queries, cents, nprobe, "list_id", codes.schema("list_id").dataType),
+      "list_id", k, "pq_sim")
+  }
+
+  /** A stored IVF-PQ index's code rows ([[openIndex]]); lists in the old
+    * long form, one (sub, code) row per vector and subspace, fail by
+    * name instead of being read wrongly or appended to. */
+  private def ivfPqLists(spark: org.apache.spark.sql.SparkSession,
+                         path: String): DataFrame = {
+    val lists = openIndex(spark, s"$path/lists")
+    val cols = lists.schema.fieldNames.toSet
+    require(cols("codes") || !(cols("sub") || cols("code")),
+      s"$path/lists is an IVF-PQ index in the old long form (sub, code rows, no codes " +
+        "column); rebuild it with writeIvfPqCorpus")
+    lists
   }
 
   /** A stored index's `_codebook` read on the driver ([[readParquetDriver]]:
@@ -1234,16 +1238,6 @@ object Similarity {
                           field: String): Seq[Double] = {
     val emb = g.getGroup(field, 0)
     (0 until emb.getFieldRepetitionCount(0)).map(i => emb.getGroup(0, i).getDouble(0, 0))
-  }
-
-  /** A codebook's rows as the (sub, centroid_id, c_emb) frame that
-    * [[pqCodebookTrained]] returns and `_codebook` stores. */
-  private def codebookFrame(spark: org.apache.spark.sql.SparkSession,
-                            cb: Map[Int, Seq[(Long, Seq[Double])]]): DataFrame = {
-    import spark.implicits._
-    cb.toSeq.sortBy(_._1)
-      .flatMap { case (s, entries) => entries.map { case (cid, ce) => (s, cid, ce) } }
-      .toDF("sub", "centroid_id", "c_emb")
   }
 
   /** A codebook's shape: m = its subspace count, subDim = its entry
@@ -1287,11 +1281,13 @@ object Similarity {
         round(cosine(col("embedding"), col("__qemb")), 6).as("cos_sim")), "cos_sim", k)
   }
 
-  /** Shared ADC scoring: given the code table and its codebook, score
-    * every (query, vector) pair as adp / (‖q‖ · √Σ‖codeword‖²) with
-    * per-query broadcast LUTs, and rank top-k. The full-precision
-    * corpus is never rescanned — the corpus-side input is `codes` (m
-    * small ints per vector). */
+  /** Whole-corpus ADC for [[pqTopK]] and [[pqTopKTrained]]: every
+    * (query, vector) pair of the long-form code table (vec_id, sub,
+    * centroid_id) scores adp / (‖q‖ · √Σ‖codeword‖²) from per-query
+    * broadcast LUTs; the full-precision corpus is never rescanned. Not
+    * [[pqDecoded]] × crossJoin: every vector meets every query, so an
+    * m·K LUT per query pays for itself, and the equi-joins keep ann06/06b
+    * off PlanSpec's non-equi-join whitelist. */
   private def pqAdc(codes: DataFrame, cb: DataFrame, queries: DataFrame,
                     k: Int, m: Int, subDim: Int): DataFrame = {
     val cbn = cb.select(col("sub"), col("centroid_id"),
@@ -1304,8 +1300,6 @@ object Similarity {
       .select(col("query_id"), col("sub"), col("centroid_id"),
         dot(col("sub_emb"), col("c_emb")).as("__dp"))
     val qn = qs.select(col("query_id"), norm(col("embedding")).as("__qn"))
-    // Every code row meets every query here; the candidate-restricted
-    // IVF-PQ form is [[ivfPqScore]].
     val sc = codes.join(broadcast(lut), Seq("sub", "centroid_id"))
       .groupBy(col("vec_id"), col("query_id")).agg(sum(col("__dp")).as("__adp"))
     topK(sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))

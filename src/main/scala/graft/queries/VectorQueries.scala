@@ -723,8 +723,8 @@ SELECT * FROM (
 WHERE rk <= 10""")),
 
     // IVF-PQ: the production composition — coarse k-means lists prune
-    // candidates (ann04's machinery), trained PQ codes score them via
-    // broadcast LUTs (ann06b's machinery); the full-precision corpus
+    // candidates (ann04's machinery), trained PQ codes score them by ADC
+    // (ann06b's codebooks) through IVF's scorer; the full-precision corpus
     // is never rescanned at query time. The oracle reuses BOTH trained
     // chains and restricts the ADC ranking to each query's probed list.
     Q("ann10_ivf_pq",
@@ -735,10 +735,10 @@ WHERE rk <= 10""")),
       Some(ann10Oracle)),
 
     // The STORED form of the same composition — the deployable index:
-    // PQ codes partitioned by coarse list (path/lists/list_id=N/...),
-    // trained centroids and codebook alongside; the query's probe join
-    // DPP-prunes the code scan to the probed lists' directories, and
-    // the full-precision corpus is absent from the query path entirely.
+    // one PQ code row per vector, partitioned by coarse list
+    // (path/lists/list_id=N/...), models alongside; the query's probe
+    // join DPP-prunes the code scan to the probed lists' directories,
+    // and the full-precision corpus is absent from the query path.
     // Same oracle as ann10 - the layout must not change results.
     Q("ann10b_ivf_pq_stored",
       (s, d) => {

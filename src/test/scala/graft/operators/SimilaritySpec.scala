@@ -664,6 +664,54 @@ class SimilaritySpec extends SparkSpec {
     } finally graft.Scratch.delete(path)
   }
 
+  test("in-flight IVF-PQ equals the LUT-join ADC reference row for row, pq_sim included") {
+    // Scoring the decoded codes (cosine(q, decode(codes))) is ADC
+    // rewritten, so every (query, vector, pq_sim, rk) row must match the
+    // long-form LUT scorer it replaced, at every probe width and shape;
+    // (16, 2) covers half the embedding, so decode pads with zeros.
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 10)
+    val cents = Similarity.kmeansCentroids(emb, 16, 2)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select($"query_id", $"vec_id", $"pq_sim", $"rk").collect().map(_.mkString("|"))
+        .toSeq.sorted
+    for (((m, subDim), probes) <- Seq((16, 4) -> Seq(1, 2, 16), (8, 8) -> Seq(1, 2),
+        (16, 2) -> Seq(2))) {
+      val cb = Similarity.pqCodebookTrained(emb, m, subDim, 64, 2)
+      for (np <- probes) {
+        val got = sorted(Similarity.ivfPqTopK(emb, q, 10, nprobe = np,
+          centsOpt = Some(cents), cbOpt = Some(cb)))
+        val want = sorted(ReferenceIvfPq.topK(emb, q, 10, cents, cb, np))
+        val same = got.size == 100 && got == want
+        assert(same, s"m=$m subDim=$subDim nprobe=$np: IVF-PQ diverges from the LUT-join " +
+          s"reference; only IVF-PQ: ${got.diff(want).take(5)}, only reference: " +
+          s"${want.diff(got).take(5)}")
+      }
+    }
+  }
+
+  test("a null row in a given PQ codebook fails by name") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 3)
+    val cb = Similarity.pqCodebookTrained(emb, 16, 4, 64, 0)
+    for (c <- Seq("sub", "centroid_id", "c_emb")) {
+      val bad = cb.withColumn(c, when($"centroid_id" === 0L, lit(null)).otherwise(col(c)))
+      val e = intercept[IllegalArgumentException](
+        Similarity.ivfPqTopK(emb, q, 10, cbOpt = Some(bad)).collect())
+      assert(e.getMessage.contains("PQ codebook table (sub, centroid_id, c_emb) must be null-free"),
+        s"null $c: ${e.getMessage}")
+    }
+  }
+
+  test("a null embedding among the k-means init rows fails by name") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val bad = emb.withColumn("embedding",
+      when($"vec_id" === 3L, lit(null)).otherwise($"embedding"))
+    val e = intercept[IllegalArgumentException](Similarity.kmeansCentroids(bad, 16, 1))
+    assert(e.getMessage.contains("k-means init rows (vec_id, embedding) must be null-free"),
+      e.getMessage)
+  }
+
   /** Build an index over the first 400 vectors, append the rest as one
     * batch, then require each (label, stored, in-flight) case to agree.
     * The in-flight side searches the whole corpus with the index's own
@@ -994,5 +1042,60 @@ class SimilaritySpec extends SparkSpec {
       .join(exact, Seq("query_id", "vec_id")).count() / 100.0
     assert(degraded < 0.70,
       s"planted no-op refine still clears the floor ($degraded) — the floor is toothless")
+  }
+}
+
+/** IVF-PQ as it was scored before one code row per vector: the long-form
+  * (vec_id, list_id, sub, code) rows, then ADC through per-query lookup
+  * tables — a candidate-distinct reconstructed-norm aggregate, a LUT
+  * built by exploding query subspaces, and broadcast joins. Kept only as
+  * the reference the decoded scorer must reproduce. */
+private object ReferenceIvfPq {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
+
+  private def subspaces(df: DataFrame, idCol: String, m: Int, subDim: Int): DataFrame =
+    df.select(col(idCol), explode(array((0 until m).map(s =>
+        struct(lit(s).as("sub"),
+          slice(col("embedding"), s * subDim + 1, subDim).as("sub_emb"))): _*)).as("sv"))
+      .select(col(idCol), col("sv.sub").as("sub"), col("sv.sub_emb").as("sub_emb"))
+
+  def topK(corpus: DataFrame, queries: DataFrame, k: Int, cents: DataFrame,
+           cb: DataFrame, nprobe: Int): DataFrame = {
+    val book = cb.select(col("sub").cast("int"), col("centroid_id").cast("long"), col("c_emb"))
+      .collect().groupBy(_.getInt(0)).map { case (s, rs) =>
+        s -> rs.map(r => (r.getLong(1), r.getSeq[Double](2))).sortBy(_._1).toSeq
+      }
+    val m = book.size
+    val subDim = book(0).head._2.size
+    val centModel = cents.select(col("centroid_id").cast("long"), col("c_emb")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    val codes = corpus.select(col("vec_id"),
+        call_function("graft_nearest_cosine", col("embedding"), typedlit(centModel)).as("list_id"),
+        posexplode(array((0 until m).map(s => call_function("graft_nearest_l2",
+          slice(col("embedding"), s * subDim + 1, subDim), typedlit(book(s)))): _*))
+          .as(Seq("sub", "code")))
+    val probes = Similarity.ivfAssignN(queries.select(col("vec_id"), col("embedding")), cents,
+        nprobe)
+      .select(col("vec_id").as("query_id"), col("centroid_id").as("list_id"))
+    val qs = queries.select(col("vec_id").as("query_id"), col("embedding"))
+    val cbn = cb.select(col("sub"), col("centroid_id").as("code"),
+      Similarity.dot(col("c_emb"), col("c_emb")).as("__n2"))
+    val cand = codes.join(broadcast(probes), Seq("list_id"))
+    val rec = cand.select(col("vec_id"), col("sub"), col("code")).distinct()
+      .join(broadcast(cbn), Seq("sub", "code"))
+      .groupBy(col("vec_id")).agg(sum(col("__n2")).as("__rn2"))
+    val lut = subspaces(qs, "query_id", m, subDim)
+      .join(broadcast(cb), Seq("sub"))
+      .select(col("query_id"), col("sub"), col("centroid_id").as("code"),
+        Similarity.dot(col("sub_emb"), col("c_emb")).as("__dp"))
+    val qn = qs.select(col("query_id"), Similarity.norm(col("embedding")).as("__qn"))
+    val sc = cand.join(broadcast(lut), Seq("query_id", "sub", "code"))
+      .groupBy(col("vec_id"), col("query_id")).agg(sum(col("__dp")).as("__adp"))
+    val scored = sc.join(broadcast(qn), Seq("query_id")).join(rec, Seq("vec_id"))
+      .select(col("query_id"), col("vec_id"),
+        round(col("__adp") / (col("__qn") * sqrt(col("__rn2"))), 6).as("pq_sim"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("pq_sim").desc, col("vec_id").asc)
+    scored.withColumn("rk", row_number().over(w).cast("long")).filter(col("rk") <= k)
   }
 }

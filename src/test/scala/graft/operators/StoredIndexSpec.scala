@@ -49,6 +49,57 @@ class StoredIndexSpec extends SparkSpec {
     graft.Scratch.delete(root)
   }
 
+  test("a stored IVF-PQ query batch runs no more jobs than a stored IVF query") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 10)
+    val root = tmp("graft_ivfpq_jobs")
+    Similarity.writeIvfCorpus(emb, s"$root/ivf")
+    Similarity.writeIvfPqCorpus(emb, s"$root/ivfpq")
+    for (np <- Seq(1, 2)) {
+      val ivf = jobsOf(Similarity.ivfTopKStored(spark, s"$root/ivf", q, 10, np).collect())
+      val ivfpq = jobsOf(Similarity.ivfPqTopKStored(spark, s"$root/ivfpq", q, 10, np).collect())
+      assert(ivfpq.size <= ivf.size,
+        s"nprobe=$np: a stored IVF-PQ query ran ${ivfpq.size} jobs, stored IVF ${ivf.size}")
+    }
+    graft.Scratch.delete(root)
+  }
+
+  test("a stored IVF-PQ index in the old long form is refused by name, never read or appended to") {
+    val emb = graft.Tables.embeddings(spark, sf0001)
+    val q = emb.filter($"vec_id" < 5)
+    val path = tmp("graft_ivfpq_long")
+    val lists = s"$path/lists"
+    Similarity.writeIvfPqCorpus(emb.filter($"vec_id" < 400), path)
+    // lists/ rewritten by hand in the old form: one (sub, code) row per
+    // vector and subspace, partitioned by list, no file manifest
+    val old = tmp("graft_ivfpq_long_rows")
+    spark.read.parquet(lists)
+      .select($"vec_id", $"list_id", posexplode($"codes").as(Seq("sub", "code")))
+      .write.mode("overwrite").partitionBy("list_id").parquet(old)
+    graft.Scratch.delete(lists)
+    java.nio.file.Files.move(new java.io.File(old).toPath, new java.io.File(lists).toPath)
+    def dataFiles(): Set[String] = new java.io.File(lists).listFiles()
+      .filter(_.getName.startsWith("list_id=")).flatMap(_.listFiles()).map(_.getPath).toSet
+    def refused(label: String)(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(lists) && e.getMessage.contains("writeIvfPqCorpus"),
+        s"$label: ${e.getMessage}")
+    }
+    val files = dataFiles()
+    refused("query, no manifest")(Similarity.ivfPqTopKStored(spark, path, q, 5).collect())
+    refused("append, no manifest")(
+      Similarity.appendToIvfPqCorpus(spark, emb.filter($"vec_id" >= 400), path))
+    // bucketStatsVerified records `_files` from the listing of any index
+    // directory: the long form's columns are then the manifest's
+    Similarity.bucketStatsVerified(spark, lists)
+    assert(new java.io.File(s"$lists/_files").exists)
+    refused("query, manifest")(Similarity.ivfPqTopKStored(spark, path, q, 5).collect())
+    refused("append, manifest")(
+      Similarity.appendToIvfPqCorpus(spark, emb.filter($"vec_id" >= 400), path))
+    assert(dataFiles() == files, "a refused append wrote into the old-form lists")
+    graft.Scratch.delete(path)
+  }
+
   test("stored beam search runs at most 3 + 4·rounds jobs") {
     val emb = graft.Tables.embeddings(spark, sf0001)
     val q = emb.filter($"vec_id" < 5)

@@ -13,6 +13,11 @@ Gates, in order (each is independently runnable; logs under /tmp):
   scalecheck  graft.tools.ScaleCheck 10x replica (violations -> nonzero)
   streambench graft.tools.StreamBench (steady-state > 2x budget -> nonzero)
 
+bench, scalecheck and streambench run at local[SPARK_GRAFT_CPUS]: taken
+from the environment, else the cores this process may run on (what
+`nproc` prints). The summary names the count, since every number quoted
+from these gates must name its cores.
+
 Usage: python3 tools/gate.py [--only g1,g2] [--skip g1,g2] [--keep-going]
 Exit code: 0 iff every selected gate passed.
 """
@@ -20,6 +25,8 @@ import os, subprocess, sys, time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LOGDIR = "/tmp/graft_gate"
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+SPARK_ENV = {"SPARK_GRAFT_CPUS": CPUS}
 
 GATES = [
     ("test",        ["sbt", "-batch", "test"], {}),
@@ -29,11 +36,11 @@ GATES = [
                      "/root/testdata/sf0.1", "/tmp/gate_verify_sf01"], {}),
     ("bench",       ["sbt", "-batch", "runMain graft.Bench"],
                     {"SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.1",
-                     "SPARK_GRAFT_CPUS": "32"}),
+                     **SPARK_ENV}),
     ("scalecheck",  ["sbt", "-batch",
                      "runMain graft.tools.ScaleCheck /root/testdata/sf0.1 10 "
-                     "/tmp/graft_scale_x10"], {}),
-    ("streambench", ["sbt", "-batch", "runMain graft.tools.StreamBench"], {}),
+                     "/tmp/graft_scale_x10"], SPARK_ENV),
+    ("streambench", ["sbt", "-batch", "runMain graft.tools.StreamBench"], SPARK_ENV),
 ]
 
 
@@ -71,7 +78,7 @@ def main() -> int:
             print("\n".join(f"  | {l}" for l in tail), flush=True)
             if not keep_going:
                 break
-    print("\n== gate summary ==")
+    print(f"\n== gate summary (SPARK_GRAFT_CPUS={CPUS}) ==")
     for name, status, dt, _ in results:
         print(f"  {name:<12} {status:<10} {dt:8.1f}s")
     print("GATE RESULT:", "FAIL" if failed else "PASS")
