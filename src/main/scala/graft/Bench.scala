@@ -195,7 +195,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.devCpus
     val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -221,17 +221,11 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val samples = scala.collection.mutable.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Double]]()
     names.foreach(n => samples(n) = scala.collection.mutable.ArrayBuffer[Double]())
-    // Global-window hygiene (round-9 verdict item 4): the whitelisted
-    // dim-scale queries emit `WindowExec: No Partition Defined` log
-    // noise on every run, which a NEW single-partition window could
-    // hide inside. Print the expected set up front, then sweep every
-    // query's OPTIMIZED plan during pass 1 (the frame is already built
-    // for timing — the sweep is a driver-side tree walk, no extra
-    // jobs); any global window on a non-whitelisted query fails the
-    // bench run AFTER the artifacts are written.
-    val gwWhitelist = graft.queries.Registry.globalWindowDimScaleAllowed
-    println(s"expected WindowExec-no-partition warnings come only from: " +
-      gwWhitelist.toSeq.sorted.mkString(", "))
+    // Global-window hygiene: an empty-partition window is a
+    // single-partition sort. Sweep every query's OPTIMIZED plan during
+    // pass 1 (the frame is already built for timing — the sweep is a
+    // driver-side tree walk, no extra jobs); any global window fails
+    // the bench run AFTER the artifacts are written.
     val gwViolations = scala.collection.mutable.LinkedHashMap[String, Int]()
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     for (pass <- 1 to 3; name <- names if !errors.contains(name)) {
@@ -241,7 +235,7 @@ object Bench {
             val n = df.queryExecution.optimizedPlan.collect {
               case w: LWindow if w.partitionSpec.isEmpty => w
             }.length
-            if (n > 0 && !gwWhitelist(name)) gwViolations(name) = n
+            if (n > 0) gwViolations(name) = n
           })
         else None
       val (t, e) =
@@ -307,8 +301,8 @@ object Bench {
     // Red AFTER the artifacts are written: the numbers stay readable,
     // the run still fails loudly on a new single-partition window.
     if (gwViolations.nonEmpty) {
-      System.err.println("BENCH GATE FAILED — global window outside the " +
-        s"dim-scale whitelist: ${gwViolations.keys.mkString(", ")}")
+      System.err.println("BENCH GATE FAILED — empty-partition window in: " +
+        gwViolations.keys.mkString(", "))
       sys.exit(1)
     }
   }

@@ -30,6 +30,12 @@ object Sessions {
     * cache). */
   private val CodegenCacheEntries = 1000
 
+  /** Cores of the dev mains' `local[N]` session (Bench, ScaleCheck,
+    * StreamBench, TimeQuery, ExplainQuery): `SPARK_GRAFT_CPUS`, else the
+    * processors this JVM may use — the rule `tools/gate.py` applies. */
+  def devCpus: String = sys.env.get("SPARK_GRAFT_CPUS").filter(_.nonEmpty)
+    .getOrElse(Runtime.getRuntime.availableProcessors.toString)
+
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

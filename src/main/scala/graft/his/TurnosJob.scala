@@ -32,10 +32,10 @@ object TurnosJob {
     *
     * Stage sharing: the wide extract feeds all four tables, and
     * paciente/turno/long each feed further tables — without staging,
-    * every one of the four publish writes (plus every
-    * `denseIdScalable` zipWithIndex pre-pass) RECOMPUTES the whole
-    * upstream join tree, turning the job into ~sum-of-standalone-
-    * queries (measured 19.5–26.5 s at sf0.1). Each shared frame is
+    * every one of the four publish writes (plus every `denseId`
+    * zipWithIndex pre-pass) RECOMPUTES the whole upstream join tree,
+    * turning the job into ~sum-of-standalone-queries (measured
+    * 19.5–26.5 s at sf0.1). Each shared frame is
     * staged exactly once ([[graft.Stages.stage]]) and the scope
     * releases all of them after publish, on success or failure. */
   def runFromWide(spark: SparkSession, wideIn: DataFrame, outRoot: String,

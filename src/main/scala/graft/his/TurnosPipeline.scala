@@ -27,12 +27,8 @@ import graft.operators.{Dedup, Reshape}
   *
   * Scale notes: dims (nation/region) are broadcast; the lineitem→slots
   * pivot is one hash shuffle on l_orderkey with map-side partial max;
-  * dense surrogate ids on the two dimension outputs use a window
-  * row_number (dimension-sized — fine), while the two FACT-sized ids
-  * (turno, prestacion_x_turno) use
-  * [[graft.operators.Dedup.denseIdScalable]] — range-partition +
-  * zipWithIndex, no single-partition global sort — so the flagship
-  * pipeline survives a 100 TB fact table.
+  * every dense surrogate id comes from [[graft.operators.Dedup.denseId]]
+  * (range-partition + zipWithIndex, no single-partition global sort).
   */
 object TurnosPipeline {
 
@@ -168,9 +164,7 @@ object TurnosPipeline {
     val withSexo = first.select(
       col("nombre"), col("apellido"), col("documento"),
       Gender.inferirSexo(Cleaning.firstToken(col("nombre"))).as("sexo_inferido"))
-    // denseIdScalable, not denseId: distinct-patient cardinality grows
-    // with the fact table — at 100 TB this dim is fact-like.
-    Dedup.denseIdScalable(withSexo, Seq(col("documento")), "id")
+    Dedup.denseId(withSexo, Seq(col("documento")), "id")
       .select("id", "nombre", "apellido", "documento", "sexo_inferido")
   }
 
@@ -184,7 +178,7 @@ object TurnosPipeline {
   def turno(wide: DataFrame, pacienteDim: DataFrame): DataFrame = {
     val withFk = wide.join(pacienteDim.select(col("id").as("paciente_id"), col("documento")),
       wide("paciente_documento") === col("documento"))
-    val withId = Dedup.denseIdScalable(withFk,
+    val withId = Dedup.denseId(withFk,
       Seq(col("fecha_alta").desc, col("turno_id").asc), "id")
     withId.select(
       col("id"), col("turno_id").as("turno_natural_id"), col("paciente_id"),
@@ -200,9 +194,7 @@ object TurnosPipeline {
       .withColumnRenamed("turno_id", "turno_natural_id")
 
   /** `prestacion` catalog: order-insensitive distinct of trimmed names
-    * (OP-16) + dense ids by name (OP-19). denseId's global window is fine
-    * HERE and only here: the catalog of distinct service names is bounded
-    * by the medical nomenclature, not by fact volume. */
+    * (OP-16) + dense ids by name (OP-19). */
   def prestacion(long: DataFrame): DataFrame =
     Dedup.denseId(long.select(col("nombre")).distinct(), Seq(col("nombre")), "id")
       .select("id", "nombre")
@@ -215,7 +207,7 @@ object TurnosPipeline {
     val joined = long
       .join(turnoDim.select(col("id").as("t_id"), col("turno_natural_id")), Seq("turno_natural_id"))
       .join(broadcast(prestacionDim.select(col("id").as("prestacion_id"), col("nombre"))), Seq("nombre"))
-    Dedup.denseIdScalable(joined, Seq(col("t_id"), col("prestacion_id"), col("slot")), "id")
+    Dedup.denseId(joined, Seq(col("t_id"), col("prestacion_id"), col("slot")), "id")
       .select(col("id"), col("t_id").as("turno_id"), col("prestacion_id"))
   }
 }

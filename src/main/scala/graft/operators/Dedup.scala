@@ -53,24 +53,14 @@ object Dedup {
       .select(keys.map(k => col(s"__row.$k")) ++ valueCols.map(c => col(s"__row.$c")): _*)
   }
 
-  /** Dense sequential ids 1..N in the given total order — matches the
-    * reference's SERIAL 1..N semantics needed for oracle hash-matching.
-    *
-    * SCALE HAZARD (documented, SURVEY §4.3/§7.4): `row_number` over an
-    * empty-partition window is a single-partition sort — fine for
-    * dimension tables (the only place the reference needs dense keys),
-    * wrong for fact-scale data. Use [[denseIdScalable]] there.
-    */
-  def denseId(df: DataFrame, order: Seq[Column], name: String): DataFrame =
-    df.withColumn(name, row_number().over(Window.orderBy(order: _*)).cast(LongType))
-
-  /** Dense sequential ids 1..N without a single-partition sort: range-
-    * repartition by the order columns (so partition p holds a contiguous
-    * key range), sort within partitions, then zipWithIndex (one extra
-    * count job to learn partition offsets — O(partitions) driver work).
-    * Produces the same ids as [[denseId]] for a total order; safe at
-    * 100 TB. */
-  def denseIdScalable(df: DataFrame, order: Seq[Column], name: String): DataFrame = {
+  /** Dense sequential ids 1..N in the given total order — the
+    * reference's SERIAL 1..N semantics (SURVEY OP-19), needed for oracle
+    * hash-matching. Range-repartition by the order columns (so partition
+    * p holds a contiguous key range), sort within partitions, then
+    * zipWithIndex (one extra count job to learn partition offsets when
+    * there is more than one partition — O(partitions) driver work). No
+    * single-partition sort at any input size. */
+  def denseId(df: DataFrame, order: Seq[Column], name: String): DataFrame = {
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
     val schema = StructType(sorted.schema.fields :+ StructField(name, LongType, nullable = false))
@@ -81,24 +71,25 @@ object Dedup {
   }
 
   /** Per-group row_number WITHOUT a per-group sort task: the grouped
-    * counterpart of [[denseIdScalable]], for when the partition key has
-    * LOW cardinality and huge groups — a window's partitionBy would
-    * funnel each group through one sort task. Range-repartition on
-    * (group, order) puts contiguous runs of each group in order across
+    * counterpart of [[denseId]], for when the partition key has LOW
+    * cardinality and huge groups — a window's partitionBy would funnel
+    * each group through one sort task. Range-repartition on (group,
+    * order) puts contiguous runs of each group in order across
     * partitions, zipWithIndex numbers them globally (one O(partitions)
     * offsets pass), and subtracting each group's minimum global index
-    * (one hash agg + one broadcastable join) yields the 1-based
-    * per-group rank. Identical to `row_number().over(partitionBy
-    * (group).orderBy(order))` for a total order; every stage is
-    * distributed regardless of group count or size. */
-  def groupedRankScalable(df: DataFrame, grpCol: String, order: Seq[Column],
-                          name: String): DataFrame = {
-    val withIdx = denseIdScalable(df, col(grpCol) +: order, "__gidx")
-    val offsets = withIdx.groupBy(col(grpCol))
+    * (one hash agg + one broadcastable null-safe join, so a null group
+    * is ranked like any other) yields the 1-based per-group rank.
+    * Identical to `row_number().over(partitionBy(group).orderBy(order))`
+    * for a total order; every stage is distributed regardless of group
+    * count or size. */
+  def groupedRank(df: DataFrame, grpCol: String, order: Seq[Column],
+                  name: String): DataFrame = {
+    val withIdx = denseId(df, col(grpCol) +: order, "__gidx")
+    val offsets = withIdx.groupBy(col(grpCol).as("__grp"))
       .agg(min(col("__gidx")).as("__goff"))
-    withIdx.join(offsets, Seq(grpCol))
+    withIdx.join(offsets, col(grpCol) <=> col("__grp"))
       .withColumn(name, (col("__gidx") - col("__goff") + 1L).cast(LongType))
-      .drop("__gidx", "__goff")
+      .drop("__gidx", "__grp", "__goff")
   }
 
   /** Incremental find-or-insert (SURVEY OP-22, incremental mode): keep
@@ -109,9 +100,8 @@ object Dedup {
     * (EtlHisTurnosCommand.php:130-147) without the N round trips.
     *
     * Scale: the anti-join shuffles on the natural key (or broadcasts
-    * when the dim is small); the max(id) is a single scalar agg. New-id
-    * assignment uses a window over the NEW keys only (new-arrival-sized,
-    * not dim-sized). */
+    * when the dim is small); the max(id) is a single scalar agg; the new
+    * keys are numbered by [[denseId]]. */
   def findOrInsert(existing: DataFrame, incoming: DataFrame, key: String,
                    idCol: String): DataFrame = {
     // Contract: `existing` is exactly the (key, id) catalog. Extra
@@ -131,8 +121,8 @@ object Dedup {
       // row must still suppress insertion of its trimmed spelling
       // (first-wins cache semantics), not yield a duplicate entry.
       .join(existing.select(trim(col(key)).as(key)), Seq(key), "left_anti")
-    val withIds = newKeys.withColumn(idCol,
-      row_number().over(Window.orderBy(col(key))).cast(LongType) + lit(maxId))
+    val withIds = denseId(newKeys, Seq(col(key)), idCol)
+      .withColumn(idCol, col(idCol) + lit(maxId))
     existing.unionByName(withIds.select(existing.columns.map(col): _*))
   }
 
@@ -192,21 +182,20 @@ object Dedup {
     * key-equality blocking misses (typos anywhere in the block key
     * still usually leave the records' sort positions close).
     *
-    * Scale shape: the global rank comes from [[denseIdScalable]]
-    * (range-repartition + zipWithIndex — never a single-partition
-    * window), and the sliding window becomes an EQUI-join on the rank
-    * block `floor(rn / window)`: two records within `window` positions
-    * are either in the same block or in adjacent blocks, so a
-    * same-block join plus a blk+1 join cover every pair — no range
-    * theta-join, no nested loop, each block is `window`-sized so the
-    * join fan-out is O(n·window). Sort order is pinned by
-    * (key, id) — total, so both engines rank identically.
+    * Scale shape: the global rank comes from [[denseId]], and the
+    * sliding window becomes an EQUI-join on the rank block
+    * `floor(rn / window)`: two records within `window` positions are
+    * either in the same block or in adjacent blocks, so a same-block
+    * join plus a blk+1 join cover every pair — no range theta-join, no
+    * nested loop, each block is `window`-sized so the join fan-out is
+    * O(n·window). Sort order is pinned by (key, id) — total, so both
+    * engines rank identically.
     * Output: (id_a, id_b, key_a, key_b, dist), id_a = the lower-RANK
     * record of the pair. */
   def sortedNeighborhood(df: DataFrame, idCol: String, keyCol: String,
                          window: Int, maxDist: Int): DataFrame = {
     require(window >= 2, s"window must be >= 2, got $window")
-    val ranked = Stages.stage(denseIdScalable(
+    val ranked = Stages.stage(denseId(
       df.select(col(idCol), col(keyCol)).where(col(keyCol).isNotNull),
       Seq(col(keyCol), col(idCol)), "__rn")
       .withColumn("__blk", floor(col("__rn") / window)))

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * chunks ("concat-and-chunk" packing). The core primitive is a
   * GLOBAL running total that never funnels the data through one
   * partition — the naive empty-partition running-sum window is a
-  * single-task sort at fact scale (the same hazard
-  * [[Dedup.denseIdScalable]] exists to avoid).
+  * single-task sort at fact scale (the same hazard [[Dedup.denseId]]
+  * avoids).
   */
 object Packing {
 
@@ -20,7 +20,7 @@ object Packing {
     * partitions, then a per-partition streaming accumulation offset by
     * the preceding partitions' totals. The totals are one
     * O(partitions)-row collect — the same bounded driver work
-    * [[Dedup.denseIdScalable]]'s zipWithIndex does.
+    * [[Dedup.denseId]]'s zipWithIndex does.
     *
     * Deliberately RDD-based past the shuffle: the DataFrame
     * formulation (window partitioned by `spark_partition_id()`) plans

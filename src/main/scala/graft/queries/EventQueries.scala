@@ -548,9 +548,8 @@ FROM ew e JOIN sig s USING (event_type)""")),
     // window partitioned by type — one shuffle, sorts local per group.
     // Scale note: partitionBy on a LOW-cardinality key concentrates
     // each group's sort in one task; at extreme per-group volume use
-    // the denseIdScalable pattern (range-partition within group +
-    // offsets) to distribute the rank — the same hazard/remedy pair as
-    // OP-18's global sort, one level down.
+    // Dedup.groupedRank (range-partition within group + offsets) to
+    // distribute the rank.
     Q("ex17_rank_metrics",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window

@@ -15,24 +15,4 @@ object Registry {
     qs.map(q => q.name -> q.fn).toMap
   def toOracles(qs: Seq[Q]): Map[String, String] =
     qs.flatMap(q => q.oracle.map(q.name -> _)).toMap
-
-  /** Registered queries ALLOWED to plan an empty-partition Window (a
-    * single-partition global sort — the one Spark anti-pattern that
-    * survives correctness gates silently: same hashes, one task at
-    * 100 TB). Every entry must be justified by a provably dim- or
-    * delta-scale window input. ONE definition, enforced twice: the
-    * PlanSpec full-registry sweep at test time and the Bench pass-1
-    * sweep at bench time (so a NEW global window fails the bench run
-    * instead of hiding among the whitelisted queries' known
-    * `WindowExec: No Partition Defined` log noise). */
-  val globalWindowDimScaleAllowed: Set[String] = Set(
-    // findOrInsert: global row_number over the NEW keys only (delta-
-    // sized) and denseId over a distinct catalog (dim-sized).
-    "op22b_find_or_insert",
-    // prestacion catalog: distinct trimmed service names — bounded by
-    // the nomenclature, not by fact volume.
-    "his_prestacion",
-    // BPE merge-candidate rank: the windowed table is the pair-count
-    // table — alphabet²-sized, not corpus-sized.
-    "tx29_bpe_train_round")
 }

@@ -192,10 +192,8 @@ object RelationalQueries {
 
     // OP-18+OP-19: global sort determinism made observable through dense
     // surrogate ids (ORDER BY FechaAlta DESC with pinned tiebreaker).
-    // denseIdScalable, not denseId: orders is fact-sized, and the dim-only
-    // form is a single-partition window sort — same ids by construction.
     Q("op18_19_sorted_dense_ids",
-      (s, d) => Dedup.denseIdScalable(Tables.orders(s, d),
+      (s, d) => Dedup.denseId(Tables.orders(s, d),
           Seq(col("o_orderdate").desc, col("o_orderkey").asc), "id")
         .select(col("id"), col("o_orderkey"), col("o_orderdate")),
       Some("""SELECT CAST(row_number() OVER (ORDER BY o_orderdate DESC, o_orderkey ASC) AS BIGINT) AS id,
@@ -547,10 +545,9 @@ object RelationalQueries {
     // the SAME corrupted-names fixture as op37 — the complementary
     // blocking paradigm: sort by the fuzzy key, compare only records
     // within 4 sort positions, verify Levenshtein ≤ 2. Engine rank =
-    // denseIdScalable (range partition + zipWithIndex, no global
-    // window); the sliding window runs as same-block + adjacent-block
-    // EQUI-joins on floor(rn/4). Order pinned by (name, id) so both
-    // engines rank identically.
+    // Dedup.denseId; the sliding window runs as same-block +
+    // adjacent-block EQUI-joins on floor(rn/4). Order pinned by
+    // (name, id) so both engines rank identically.
     Q("op42_sorted_neighborhood",
       (s, d) => {
         val p = Tables.part(s, d)
@@ -1782,10 +1779,10 @@ object RelationalQueries {
     // priorities × 15k orders — the shape where a window's partitionBy
     // funnels each group through ONE sort task): range-partition +
     // zipWithIndex + per-group offset subtraction, every stage
-    // distributed. The oracle is the plain window row_number — the
-    // scalable path must reproduce it exactly.
+    // distributed. The oracle is the plain window row_number, which
+    // Dedup.groupedRank must reproduce exactly.
     Q("op41_grouped_rank",
-      (s, d) => graft.operators.Dedup.groupedRankScalable(
+      (s, d) => graft.operators.Dedup.groupedRank(
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")),
         "o_orderpriority", Seq(col("o_totalprice").asc, col("o_orderkey").asc), "rnk"),

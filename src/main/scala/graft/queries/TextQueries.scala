@@ -1581,8 +1581,7 @@ GROUP BY source""")),
         val vocab = Bpe.corpusVocab(Tables.documents(s, d), "text")
         val order = Seq(col("cnt").desc, col("a").asc, col("b").asc)
         // top-20 via orderBy+limit (plans as TakeOrderedAndProject — a
-        // bounded per-partition heap), then rank the 20 survivors with
-        // denseId's dim-scale window
+        // bounded per-partition heap), then rank the 20 survivors
         graft.operators.Dedup.denseId(
           Bpe.pairCounts(vocab).orderBy(order: _*).limit(20), order, "rk")
       },

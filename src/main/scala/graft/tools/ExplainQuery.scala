@@ -8,7 +8,8 @@ object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val spark = graft.Sessions.builder("local[8]", "8").getOrCreate()
+    val cpus = graft.Sessions.devCpus
+    val spark = graft.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)

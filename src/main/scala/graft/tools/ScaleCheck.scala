@@ -35,7 +35,7 @@ import graft.{Sessions, SparkEntry, Tables}
   *    replicas BEFORE the quadratic-in-bucket LSH phase sees them.
   *
   * Usage: `runMain graft.tools.ScaleCheck [baseDir] [R] [workDir]`, on
-  * `local[$SPARK_GRAFT_CPUS]` (default 32) like [[graft.Bench]].
+  * `local[N]` with N from [[graft.Sessions.devCpus]], like [[graft.Bench]].
   * The scaled copy is cached in workDir across runs (delete to force a
   * re-materialise).
   */
@@ -274,7 +274,7 @@ object ScaleCheck {
     // (partial re-runs merge by hand; the full run rewrites
     // SCALECHECK.json).
     val chosen = if (pos.length > 3) allQueries.filter(pos.drop(3).contains) else allQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.devCpus
     val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -13,13 +13,13 @@ import graft.streaming.StreamingOps
   * `outFile` (default `STREAMBENCH.json`, committed) so rounds can be
   * diffed mechanically instead of via BASELINE.md prose. Usage:
   * `runMain graft.tools.StreamBench [sfDir] [nBatches] [outFile]`, on
-  * `local[$SPARK_GRAFT_CPUS]` (default 32) like [[graft.Bench]]. */
+  * `local[N]` with N from [[graft.Sessions.devCpus]], like [[graft.Bench]]. */
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(5)
     val outFile = args.lift(2).getOrElse("STREAMBENCH.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.devCpus
     val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -6,7 +6,7 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Sessions.devCpus
     val spark = graft.Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up

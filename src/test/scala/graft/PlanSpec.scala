@@ -274,34 +274,25 @@ class PlanSpec extends SparkSpec {
     // An empty-partition-spec Window is a single-partition global sort —
     // the one Spark anti-pattern that silently survives correctness
     // gates (same hashes, one task at 100 TB). Every registered query's
-    // OPTIMIZED plan is swept; the only windows allowed to be global are
-    // those whose input is provably dim- or delta-scale.
-    // KNOWN BLIND SPOT: denseIdScalable (RDD) and stage()
-    // (localCheckpoint) truncate the visible plan, hiding anything
-    // upstream of them — the source-level lint below covers that class.
+    // OPTIMIZED plan is swept; dense ids go through Dedup.denseId.
+    // KNOWN BLIND SPOT: denseId (RDD) and stage() (localCheckpoint)
+    // truncate the visible plan, hiding anything upstream of them — the
+    // source-level lint below covers that class.
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    // ONE whitelist, shared with the Bench pass-1 sweep (Registry is
-    // the single source of truth — a query added here but not there
-    // would pass tests and then fail every bench run, or vice versa).
-    val dimScaleAllowed = graft.queries.Registry.globalWindowDimScaleAllowed
     val offenders = SparkEntry.queries.keys.toSeq.sorted.filter { name =>
       val df = SparkEntry.queries(name)(spark, sf0001)
-      val globals = df.queryExecution.optimizedPlan.collect {
+      df.queryExecution.optimizedPlan.collect {
         case w: LWindow if w.partitionSpec.isEmpty => w
-      }
-      globals.nonEmpty && !dimScaleAllowed(name)
+      }.nonEmpty
     }
-    assert(offenders.isEmpty,
-      s"global-sort windows outside the dim-scale whitelist: $offenders")
+    assert(offenders.isEmpty, s"global-sort windows: $offenders")
   }
 
-  test("source lint: Window.orderBy without a partition only in Dedup") {
+  test("source lint: no Window.orderBy without a partition") {
     // Plan sweeps cannot see through RDD/localCheckpoint boundaries, so
     // also lint the SOURCE: the no-partition Window constructor
-    // (`Window.orderBy(...)`) is allowed only in Dedup.scala (denseId's
-    // documented dim-only form and findOrInsert's delta-sized ids).
-    // Everything else must go through Window.partitionBy or
-    // denseIdScalable.
+    // (`Window.orderBy(...)`) appears in no file. Windows go through
+    // Window.partitionBy; global order through Dedup.denseId.
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     val walk = java.nio.file.Files.walk(root)
@@ -315,9 +306,7 @@ class PlanSpec extends SparkSpec {
         }
         .map(_.toString).toList
       finally walk.close()
-    val allowed = "src/main/scala/graft/operators/Dedup.scala"
-    assert(offenders.forall(_ == allowed),
-      s"no-partition windows outside $allowed: ${offenders.filterNot(_ == allowed)}")
+    assert(offenders.isEmpty, s"no-partition windows in: $offenders")
   }
 
   test("source lint: row_number() in Similarity only inside its top-k helper") {

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
@@ -46,14 +48,53 @@ class DedupSpec extends SparkSpec {
     assert(out == Seq((1L, 3L), (2L, 5L), (3L, 7L), (4L, 9L)))
   }
 
-  test("denseIdScalable produces identical ids to denseId on a total order") {
-    val big = (1L to 1000L).map(i => ((i * 7919) % 1000, i)).toDF("k", "v")
-    val order = Seq(col("k").asc, col("v").asc)
-    val a = Dedup.denseId(big, order, "id").select("id", "v")
-      .as[(Long, Long)].collect().sorted.toSeq
-    val b = Dedup.denseIdScalable(big, order, "id").select("id", "v")
-      .as[(Long, Long)].collect().sorted.toSeq
-    assert(a == b)
+  /** The definition denseId must reproduce: row_number over an
+    * empty-partition window (a single-partition sort, kept out of the
+    * engine's sources). */
+  private def windowRowNumber(df: DataFrame, order: Seq[Column], name: String): DataFrame =
+    df.withColumn(name, row_number().over(Window.orderBy(order: _*)).cast("long"))
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+
+  test("denseId equals the global-window row_number over random total orders") {
+    val rnd = new scala.util.Random(11)
+    val n = 10000
+    // a: nullable leading key with ~50 values; b: a string key with
+    // ~200 values; u: unique, the tiebreak that makes an order total.
+    val us = rnd.shuffle((0L until n).toVector)
+    val all = us.map { u =>
+      (if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(50)), s"s${rnd.nextInt(200)}", u)
+    }.toDF("a", "b", "u")
+    val directions: Seq[Column => Column] = Seq(_.asc, _.desc, _.asc_nulls_last, _.desc_nulls_first)
+    def randomOrder(): Seq[Column] = {
+      val leading = rnd.shuffle(Seq("a", "b")).take(1 + rnd.nextInt(2))
+      leading.map(c => directions(rnd.nextInt(directions.size))(col(c))) :+
+        (if (rnd.nextBoolean()) col("u").asc else col("u").desc)
+    }
+    val orders = Seq(col("a").asc_nulls_last, col("u").asc) +: Seq.fill(2)(randomOrder())
+    val partitionsSeen = Set.newBuilder[Int]
+    for (order <- orders; rows <- Seq(0, 1, n); k <- Seq(1, 3, 8);
+         coalesce <- Seq(true, false) if rows == n || (k < 8 && coalesce)) {
+      val df = all.limit(rows).repartition(k)
+      val (got, parts) = withConf(coalesceKey, coalesce.toString) {
+        val out = Dedup.denseId(df, order, "id")
+        (out.select("u", "id").as[(Long, Long)].collect().toMap, out.rdd.getNumPartitions)
+      }
+      if (rows == n) partitionsSeen += parts
+      val want = windowRowNumber(df, order, "id").select("u", "id")
+        .as[(Long, Long)].collect().toMap
+      assert(got.size == rows, s"order $order, $rows rows, $k partitions")
+      assert(got == want, s"order $order, $rows rows, $k partitions")
+    }
+    // both zipWithIndex paths ran: one partition, and several
+    val seen = partitionsSeen.result()
+    assert(seen.contains(1) && seen.exists(_ > 1), s"partition counts seen: $seen")
   }
 
   test("findOrInsert keeps existing ids, appends new keys above max id") {
@@ -63,6 +104,22 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.findOrInsert(existing, incoming, "documento", "id")
       .select("documento", "id").as[(String, Long)].collect().toMap
     assert(out == Map("ana" -> 1L, "luis" -> 2L, "bob" -> 3L, "zoe" -> 4L))
+  }
+
+  test("findOrInsert numbers multi-partition new keys like the global-window row_number") {
+    val existing = Seq(("k0007", 1L), ("k0100", 2L), ("k1999", 3L)).toDF("k", "id")
+    val incoming = (0 until 4000).map(i => f" k${(i * 7919) % 2000}%04d ").toDF("k")
+      .repartition(5)
+    val got = withConf(coalesceKey, "false") {
+      Dedup.findOrInsert(existing, incoming, "k", "id").as[(String, Long)].collect().toMap
+    }
+    val newKeys = incoming.select(trim(col("k")).as("k")).distinct()
+      .join(existing, Seq("k"), "left_anti")
+    val want = existing.as[(String, Long)].collect().toMap ++
+      windowRowNumber(newKeys, Seq(col("k")), "id")
+        .select(col("k"), col("id") + 3L).as[(String, Long)].collect().toMap
+    assert(want.size == 2000)
+    assert(got == want)
   }
 
   test("findOrInsert is idempotent (re-running adds nothing)") {
@@ -98,8 +155,7 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.topKPerGroup(df, "g", "id", "score", 4)
       .select($"g", $"rnk", $"id", $"score")
       .as[(Long, Long, Long, Double)].collect().sorted.toSeq
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"g").orderBy($"score".desc, $"id".asc)
+    val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
     val want = df.select($"g", row_number().over(w).cast("long").as("rnk"),
         $"id", $"score")
       .filter($"rnk" <= 4)
@@ -108,16 +164,27 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
-  test("groupedRankScalable equals the window row_number on a total order") {
+  test("groupedRank equals the window row_number on a total order") {
     val df = (1L to 500L).map(i => (i, s"g${i % 3}", (i * 7919) % 100))
       .toDF("id", "g", "score")
-    val got = Dedup.groupedRankScalable(df, "g",
+    val got = Dedup.groupedRank(df, "g",
         Seq(col("score").asc, col("id").asc), "rnk")
       .select($"id", $"rnk").as[(Long, Long)].collect().toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"g").orderBy($"score".asc, $"id".asc)
+    val w = Window.partitionBy($"g").orderBy($"score".asc, $"id".asc)
     val want = df.select($"id", row_number().over(w).cast("long").as("rnk"))
       .as[(Long, Long)].collect().toMap
+    assert(got == want)
+  }
+
+  test("groupedRank keeps and ranks the rows of a null group") {
+    val df = Seq((1L, Some("x"), 3L), (2L, None, 1L), (3L, Some("x"), 2L),
+      (4L, None, 5L), (5L, Some("y"), 4L)).toDF("id", "g", "score")
+    val got = Dedup.groupedRank(df, "g", Seq(col("score").asc, col("id").asc), "rnk")
+      .select($"id", $"rnk").as[(Long, Long)].collect().toMap
+    val w = Window.partitionBy($"g").orderBy($"score".asc, $"id".asc)
+    val want = df.select($"id", row_number().over(w).cast("long").as("rnk"))
+      .as[(Long, Long)].collect().toMap
+    assert(want == Map(1L -> 2L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 1L))
     assert(got == want)
   }
 
